@@ -138,12 +138,12 @@ object Bench {
     "q_sent_chunks",        // UAX#29 sentence-preserving chunking: one native segmentation+packing pass (r13, benched r14)
     "q_uax29",              // UAX#29 word segmentation: native BreakIterator scan projection (r13, benched r14)
     "q_corr_matrix",        // one-pass correlation/covariance matrix: single agg, pair-sized explode (r13, benched r14)
-    "q_bm25_incr",          // persisted BM25 index: parquet build + broadcast-term probe, match-bounded scoring (r14)
+    "q_bm25_incr",          // persisted BM25 index: sidecar-layout build + broadcast-term probe, match-bounded scoring (r14)
     "q_forget_setsim",      // forget over the setsim prefix index + cross-corpus probe through the stale-order index (r14)
     "q_forget_editsim",     // forget over the edit-variant index + in-gate rebuild-parity + cross-corpus probe (r14)
     "q_video_neardup",      // video clip near-dup: frame sample + per-frame dHash fold + Hamming banding (r14)
     "q_audio_neardup",      // audio clip near-dup: energy-contour fingerprint + Hamming banding (r14)
-    "q_bm25_part",          // partition-pruned BM25 layout: bucketed write + bucket-pruned probe (r14)
+    "q_bm25_part",          // partition-pruned BM25 layout: 32-bucket sidecar write + bucket-pruned probe (r14)
     "q_dedup_keepbest",     // exact dedup, best-score keeper: one fingerprint rank window (r14)
     "q_neardup_keepbest",   // near-dup cluster argmax keeper: pairs + CC + score join + anti join (r14)
     "q_winnow_pairs",       // winnowing overlap: native rolling-hash scan + capped hash-groupBy pair counts (r14)
@@ -151,7 +151,7 @@ object Bench {
     "q_skip_prune",         // skip-index prune: partitioned fixture + deleted-partition diff + pruned reads (r14)
     "q_containment_incr",   // cross-corpus containment join: batch-prefix probe vs full-postings index (r14)
     "q_winnow_incr",        // cross-corpus winnow overlap: parquet index + broadcast batch hash probe (r14)
-    "q_forget_bm25",        // bm25 index forget: parquet roundtrip + anti-join + removal-set-sized stat decrements (r15)
+    "q_forget_bm25",        // bm25 index forget: sidecar build + tombstone forget + denormalized row read-out (r15)
     "q_forget_winnow",      // winnow index forget: one anti-join rewrite (r15)
     "q_forget_containment", // containment full-postings forget: one anti-join rewrite (r15)
     "q_image_neardup_incr", // cross-corpus image near-dup: persisted dHash table + banded batch probe (r15)
@@ -169,14 +169,14 @@ object Bench {
     // q_curation_c4 stays unbenched: constant-fixture parity gate, the
     // q_curation_uax29/q_curation_keepbest convention
     "q_curriculum",         // curriculum order: quantile stages + epoch hash + global-index range shuffle (r15)
-    "q_bm25_append",        // bm25 index grow: parquet roundtrip + drop-sized delta joins + one index rewrite (r16)
-    "q_bm25_append_forget", // append-then-forget roundtrip: two full-index rewrites back to back (r16)
+    "q_bm25_append",        // bm25 index grow: sidecar build + generation append + denormalized row read-out (r16)
+    "q_bm25_append_forget", // append-then-forget roundtrip: sidecar build + append + forget + row read-out (r16)
     "q_c4_clean_cjk",       // parameterized-terminator C4 pass, both arms over re-terminated pages (r16)
     "q_forget_ivf",         // IVF assignment-table forget + exact-degenerate probe of every bucket (r16)
     "q_forget_pq",          // PQ codes forget + planted-codebook ADC probe (r16)
     "q_delivery_e2e",       // composed delivery: budget -> curriculum -> shards -> tar write + readback (r16)
     "q_forget_dhash_banded",// banded media-hash artifact forget: one anti-join over band rows (r16)
-    "q_bm25_append_part",   // partitioned-layout grow: dir read + exact-delta rewrite + re-bucketed write + pruned probe (r16)
+    "q_bm25_append_part",   // partitioned-layout grow: sidecar build + generation append + bucket-pruned probe (r16)
     "q_image_banded_append",// banded artifact grow: sidecar-verified append + Dir probe (r16)
     "q_exact_append",       // counted-fingerprint index grow: broadcast count merge (r16; r17 split the full-outer into broadcast legs)
     // q_image/video/audio_neardup_incr keep their r15 cells - same names,
@@ -185,7 +185,7 @@ object Bench {
     "q_bm25_sidecar_append", // SUBLINEAR grow: drop-sized generation + registry guard + touched-bucket df rewrite + meta flip (r17; registry r18)
     "q_bm25_sidecar_forget", // tombstone + registry-sourced deltas, zero posting bytes rewritten (r17; registry r18)
     "q_bm25_sidecar_compact",// amortized maintenance: rewrite-minus-tombstones to a fresh layout (r17)
-    "q_bm25_sidecar_topk",   // WindowGroupLimit top-k over sidecar scores — layout parity with the other three arms (r18)
+    "q_bm25_sidecar_topk",   // WindowGroupLimit top-k over sidecar scores — layout parity with the inline arm (r18)
     "q_bm25_sidecar_merge",  // smallest-first generation merge: 3 live gens -> 2, biggest gen byte-untouched, df untouched (r18)
     "q_rrf_fusion",          // reciprocal-rank fusion of bm25TopK + dense cosine top-k — query-bounded union + agg + WindowGroupLimit (r18)
     "q_soft_dedup",          // soft dedup: near-dup chain + CC + 1/cluster-size weights joined back, corpus never shuffled (r18)
@@ -226,6 +226,17 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+
+  /** The bench line's "sf" field: the scale factor parsed from the data
+    * directory's basename as a JSON NUMBER (sf0.1 → 0.1, sf1 → 1), or the
+    * quoted directory when the basename is not `sf<decimal>` — a
+    * multi-dot, dot-only or leading-zero capture (`sf0.1.2`, `sf.`,
+    * `sf01`) would otherwise emit an invalid JSON number. */
+  private[graft] def sfJson(dir: String): String =
+    "sf((0|[1-9]\\d*)(\\.\\d+)?)$".r
+      .findFirstMatchIn(new java.io.File(dir).getName)
+      .map(_.group(1))
+      .getOrElse(jsonStr(dir))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -328,16 +339,11 @@ object Bench {
     // "sf" as a NUMBER (r22 measurement fix): every driver-side
     // BENCH_r*.json records sf numerically (0.1), while this line carried
     // the data DIRECTORY as a string — any consumer that validates/
-    // converts the field numerically fails on it, and the driver has
-    // recorded parsed:null for the bench line in all 21 rounds. The scale
-    // factor is parsed from the directory's basename (sf0.1 → 0.1); the
-    // path moves to "sf_dir" so nothing is lost. Queries, timings and
-    // methodology are unchanged.
-    val sfNum = "sf([0-9.]+)$".r.findFirstMatchIn(
-      new java.io.File(sfDir).getName).map(_.group(1))
-    val sfJson = sfNum.getOrElse(jsonStr(sfDir))
+    // converts the field numerically fails on it. The path moves to
+    // "sf_dir" so nothing is lost. Queries, timings and methodology are
+    // unchanged.
     val json =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":${mapJson(timings)},"steady":${mapJson(steady)},"steady_total":${num(steady.values.sum)},"steady_runs":$SteadyRuns,"steady_runs_cheap":$CheapSteadyRuns,"cheap_cold_sec":${num(CheapColdSec)},"steady_stat":"median","isolation":"swept","leaked_rdds":$lJson,"errors":$eJson,"n_errors":${errors.size},"sf":$sfJson,"sf_dir":${jsonStr(sfDir)}}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":${mapJson(timings)},"steady":${mapJson(steady)},"steady_total":${num(steady.values.sum)},"steady_runs":$SteadyRuns,"steady_runs_cheap":$CheapSteadyRuns,"cheap_cold_sec":${num(CheapColdSec)},"steady_stat":"median","isolation":"swept","leaked_rdds":$lJson,"errors":$eJson,"n_errors":${errors.size},"sf":${sfJson(sfDir)},"sf_dir":${jsonStr(sfDir)}}"""
     // tail-capture safety (the r17 driver capture kept only 70 of 173
     // cells): persist the full line to a file FIRST, stop Spark so its
     // shutdown logging cannot land after us, and print the JSON as the

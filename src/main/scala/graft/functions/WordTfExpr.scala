@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * distinct word, pre-aggregated), which removes one full posting-sized
  * shuffle from every artifact build/grow that writes postings to disk
  * (guide §2.3/§2.4: don't shuffle what a row already holds). The
- * inline-probe paths ([[graft.operators.Retrieval.bm25Scores]] /
- * `bm25Index`) deliberately KEEP their groupBy spelling: there the
+ * inline-probe path ([[graft.operators.Retrieval.bm25Scores]])
+ * deliberately KEEPS its groupBy spelling: there the
  * postings Exchange is the materialization point the df branch reuses
  * (one corpus scan for two consumers) — removing it would trade one
  * shuffle for a second corpus scan.

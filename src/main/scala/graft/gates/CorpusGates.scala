@@ -46,6 +46,14 @@ object CorpusGates {
       .toDF("query_id", "qtext")
   }
 
+  /** The lifecycle gates' row view of a denormalized index: dl as
+    * BIGINT (DuckDB's len()) and the one float, avgdl, rounded for the
+    * cross-engine compare. Shared with ForgetGates.q_forget_bm25. */
+  private[gates] def bm25IndexRows(rows: DataFrame): DataFrame =
+    rows.select(col("word"), col("doc_id"), col("tf"),
+      col("dl").cast("long").as("dl"), col("df"), col("n_docs"),
+      round(col("avgdl"), 6).as("avgdl"), col("sum_dl"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.4 row 69 — BM25 scoring (the value surface; ranking is a
     // row_number window over these scores, oracle-gated via q_topk_by's
@@ -56,98 +64,81 @@ object CorpusGates {
           bm25Queries(s), "query_id", "qtext")
         .select(col("query_id"), col("doc_id"), round(col("score"), 4).as("score"))
     },
-    // §2 row 145 — persisted BM25 retrieval index: the inverted index
-    // is built ONCE, round-tripped through parquet (the artifact a
-    // real deployment persists), and probed with broadcast query
-    // terms — gated under the SAME oracle as q_bm25, so index-probe
-    // scores are pinned value-equal to the inline recompute
+    // §2 row 145 — persisted BM25 retrieval index: the stats-sidecar
+    // layout is built ONCE from the corpus, round-tripped through
+    // parquet (the artifact a real deployment persists), and probed
+    // with broadcast query terms — gated under the SAME oracle as
+    // q_bm25, so index-probe scores are pinned value-equal to the
+    // inline recompute
     "q_bm25_incr" -> { (s, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-bm25idx-gate").toString
-      Retrieval.bm25Index(
-          docs(s, dir).select("doc_id", "text"), "text", "doc_id")
-        .write.mode("overwrite").parquet(out)
-      Retrieval.bm25ScoresAgainst(
-          s.read.parquet(out), bm25Queries(s), "query_id", "qtext")
+      Retrieval.bm25SidecarWrite(
+        docs(s, dir).select("doc_id", "text"), "text", "doc_id", out)
+      Retrieval.bm25ScoresFromSidecar(s, out, bm25Queries(s), "query_id", "qtext")
         .select(col("query_id"), col("doc_id"), round(col("score"), 4).as("score"))
     },
-    // §2 row 160 — BM25 index APPEND: the index built from HALF the
-    // corpus (even ids), parquet round-tripped, then GROWN by the odd
-    // half via bm25Append's exact-delta rewrite — pinned ROW-FOR-ROW
-    // (every tf, dl, merged df, and the recomputed N/avgdl/sum_dl)
+    // §2 row 160 — BM25 index APPEND: the sidecar layout built from
+    // HALF the corpus (even ids), then GROWN by the odd half — its live
+    // rows read out denormalized (bm25SidecarRows) and pinned
+    // ROW-FOR-ROW (every tf, dl, merged df, and the N/avgdl/sum_dl)
     // against the index the oracle rebuilds from the FULL corpus: the
     // definitional "as if built from corpus ∪ drop" contract
     "q_bm25_append" -> { (s, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-bm25app-gate").toString
       val d = docs(s, dir).select("doc_id", "text")
-      Retrieval.bm25Index(
-          d.filter(col("doc_id") % 2 === 0), "text", "doc_id")
-        .write.mode("overwrite").parquet(out)
-      Retrieval.bm25Append(
-          s.read.parquet(out), d.filter(col("doc_id") % 2 === 1),
-          "text", "doc_id")
-        .select(col("word"), col("doc_id"), col("tf"),
-          col("dl").cast("long").as("dl"), col("df"), col("n_docs"),
-          round(col("avgdl"), 6).as("avgdl"), col("sum_dl"))
+      Retrieval.bm25SidecarWrite(
+        d.filter(col("doc_id") % 2 === 0), "text", "doc_id", out)
+      Retrieval.bm25SidecarAppend(
+        s, out, d.filter(col("doc_id") % 2 === 1), "text", "doc_id")
+      bm25IndexRows(Retrieval.bm25SidecarRows(s, out))
     },
     // §2 row 160 — append-then-forget ROUNDTRIP: growing the even-id
-    // index by the odd half and then forgetting exactly those ids must
+    // layout by the odd half and then forgetting exactly those ids must
     // land back on the even-only index, statistic for statistic — the
-    // lifecycle-symmetry proof that bm25Append and bm25Forget run the
+    // lifecycle-symmetry proof that the sidecar grow and forget run the
     // same arithmetic in opposite directions
     "q_bm25_append_forget" -> { (s, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-bm25rt-gate").toString
       val d = docs(s, dir).select("doc_id", "text")
       val drop = d.filter(col("doc_id") % 2 === 1)
-      Retrieval.bm25Index(
-          d.filter(col("doc_id") % 2 === 0), "text", "doc_id")
-        .write.mode("overwrite").parquet(out)
-      Retrieval.bm25Append(s.read.parquet(out), drop, "text", "doc_id")
-        .write.mode("overwrite").parquet(out + "-v2")
-      Retrieval.bm25Forget(s.read.parquet(out + "-v2"), drop, "doc_id")
-        .select(col("word"), col("doc_id"), col("tf"),
-          col("dl").cast("long").as("dl"), col("df"), col("n_docs"),
-          round(col("avgdl"), 6).as("avgdl"), col("sum_dl"))
+      Retrieval.bm25SidecarWrite(
+        d.filter(col("doc_id") % 2 === 0), "text", "doc_id", out)
+      Retrieval.bm25SidecarAppend(s, out, drop, "text", "doc_id")
+      Retrieval.bm25SidecarForget(s, out, drop.select("doc_id"), "doc_id")
+      bm25IndexRows(Retrieval.bm25SidecarRows(s, out))
     },
-    // §2 row 160 (layout arm) — grow the PARTITION-PRUNED layout: the
-    // even-id index written bucketed, grown by the odd half via
-    // bm25AppendDir (full layout rewrite under the source's own
-    // modulus — stats ride every row, so no bucket survives a grow),
-    // probed through partition pruning under the SAME oracle as
-    // q_bm25: layout + lifecycle together cannot change a score
+    // §2 row 160 (layout arm) — grow, then probe through partition
+    // pruning: the even-id layout grown by the odd half, probed under
+    // the SAME oracle as q_bm25 — lifecycle + pruning together cannot
+    // change a score
     "q_bm25_append_part" -> { (s, dir) =>
-      val base = java.nio.file.Files
+      val out = java.nio.file.Files
         .createTempDirectory("graft-bm25apd-gate").toString
       val d = docs(s, dir).select("doc_id", "text")
-      Retrieval.bm25IndexWrite(
-        Retrieval.bm25Index(
-          d.filter(col("doc_id") % 2 === 0), "text", "doc_id"),
-        base, buckets = 32)
-      Retrieval.bm25AppendDir(s, base, d.filter(col("doc_id") % 2 === 1),
-        "text", "doc_id", base + "-v2")
-      Retrieval.bm25ScoresFromDir(s, base + "-v2",
-          bm25Queries(s), "query_id", "qtext")
+      Retrieval.bm25SidecarWrite(
+        d.filter(col("doc_id") % 2 === 0), "text", "doc_id", out, buckets = 32)
+      Retrieval.bm25SidecarAppend(
+        s, out, d.filter(col("doc_id") % 2 === 1), "text", "doc_id")
+      Retrieval.bm25ScoresFromSidecar(s, out, bm25Queries(s), "query_id", "qtext")
         .select(col("query_id"), col("doc_id"), round(col("score"), 4).as("score"))
     },
-    // §2 row 148 — partition-pruned BM25 layout: the index written
+    // §2 row 148 — partition-pruned BM25 layout: the sidecar layout is
     // Hive-partitioned by word-hash bucket with its self-describing
-    // modulus sidecar, probed through bucket partition pruning — same
-    // oracle again, so layout cannot change a score
+    // modulus in the metadata row, probed through bucket partition
+    // pruning — same oracle again, so layout cannot change a score
     "q_bm25_part" -> { (s, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-bm25part-gate").toString
-      Retrieval.bm25IndexWrite(
-        Retrieval.bm25Index(
-          docs(s, dir).select("doc_id", "text"), "text", "doc_id"),
-        out, buckets = 32)
-      Retrieval.bm25ScoresFromDir(s, out, bm25Queries(s), "query_id", "qtext")
+      Retrieval.bm25SidecarWrite(
+        docs(s, dir).select("doc_id", "text"), "text", "doc_id", out, buckets = 32)
+      Retrieval.bm25ScoresFromSidecar(s, out, bm25Queries(s), "query_id", "qtext")
         .select(col("query_id"), col("doc_id"), round(col("score"), 4).as("score"))
     },
     // §2 row 164 — STATS-SIDECAR BM25 layout: immutable posting rows,
-    // df/N/sum_dl in sidecars, probed under the SAME oracle as q_bm25 —
-    // the fourth pinning of one retrieval semantics across layouts
+    // df/N/sum_dl in sidecars, probed under the SAME oracle as q_bm25
     "q_bm25_sidecar" -> { (s, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-bm25sc-gate").toString
@@ -161,8 +152,8 @@ object CorpusGates {
     // gate ASSERTS the write accounting: every pre-existing posting
     // file is byte-identical after the grow (name AND length), new
     // bytes land only in the new generation + sidecars. That accounting
-    // is the layout's reason to exist (the denormalized layouts rewrite
-    // the whole index per grow).
+    // is the layout's reason to exist (an index denormalizing the
+    // corpus stats onto its rows rewrites every row per grow).
     "q_bm25_sidecar_append" -> { (s, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-bm25scapp-gate").toString
@@ -221,9 +212,9 @@ object CorpusGates {
         .select(col("query_id"), col("doc_id"), round(col("score"), 4).as("score"))
     },
     // §2 row 164 (r18) — sidecar top-k: the WindowGroupLimit ranking
-    // over sidecar scores, layout parity with bm25TopK/bm25TopKAgainst/
-    // bm25TopKFromDir — rank pinned against DuckDB's ROW_NUMBER over
-    // the same score arithmetic (doc_id tiebreak both sides)
+    // over sidecar scores, layout parity with the inline bm25TopK —
+    // rank pinned against DuckDB's ROW_NUMBER over the same score
+    // arithmetic (doc_id tiebreak both sides)
     "q_bm25_sidecar_topk" -> { (s, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-bm25sctk-gate").toString
@@ -1044,11 +1035,12 @@ object CorpusGates {
 
   private lazy val Bm25Sql: String = bm25Sql()
 
-  /** Full [[graft.operators.Retrieval.bm25Index]] rebuild over a
-    * filtered corpus — the definitional oracle for the grow/forget
-    * lifecycle gates (the ForgetGates.q_forget_bm25 shape, corpus
-    * filter parameterized). Token-free docs ride as NULL-word
-    * sentinel rows, matching the index's registry contract. */
+  /** Full denormalized BM25 index rebuild over a filtered corpus —
+    * the definitional oracle for the grow/forget lifecycle gates read
+    * through [[graft.operators.Retrieval.bm25SidecarRows]] (the
+    * ForgetGates.q_forget_bm25 shape, corpus filter parameterized).
+    * Token-free docs ride as NULL-word sentinel rows, matching the
+    * layout's registry contract. */
   private def bm25IndexRebuildSql(where: String): String =
     s"""WITH src AS (SELECT doc_id, text FROM documents $where),
        |d AS (SELECT doc_id, ${LlmGates.wordsSql()} AS w FROM src),

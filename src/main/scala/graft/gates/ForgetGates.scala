@@ -96,22 +96,18 @@ object ForgetGates {
         .withColumn("index_signature", to_json(col("index_signature")))
     },
     // §2 row 153 (bm25 arm) — forget over the persisted BM25 index:
-    // the rows carry CORPUS aggregates (df/N/avgdl), so a bare
+    // the index carries CORPUS aggregates (df/N/avgdl), so a bare
     // anti-join would leave stale statistics shifting every surviving
-    // score; bm25Forget's anti-join + exact decrements are pinned
-    // ROW-FOR-ROW against the index the oracle rebuilds from the
-    // reduced corpus — every tf, dl, decremented df, and the exact
-    // recomputed N/avgdl/sum_dl
+    // score; the sidecar forget's tombstones + exact decrements are
+    // read out through bm25SidecarRows and pinned ROW-FOR-ROW against
+    // the index the oracle rebuilds from the reduced corpus — every tf,
+    // dl, decremented df, and the exact recomputed N/avgdl/sum_dl
     "q_forget_bm25" -> { (s, dir) =>
       val out = java.nio.file.Files
         .createTempDirectory("graft-forget-bm25").toString
-      graft.operators.Retrieval.bm25Index(prior(s, dir), "text", "doc_id")
-        .write.mode("overwrite").parquet(out)
-      graft.operators.Retrieval.bm25Forget(
-          s.read.parquet(out), removed(s, dir), "doc_id")
-        .select(col("word"), col("doc_id"), col("tf"),
-          col("dl").cast("long").as("dl"), col("df"), col("n_docs"),
-          round(col("avgdl"), 6).as("avgdl"), col("sum_dl"))
+      graft.operators.Retrieval.bm25SidecarWrite(prior(s, dir), "text", "doc_id", out)
+      graft.operators.Retrieval.bm25SidecarForget(s, out, removed(s, dir), "doc_id")
+      CorpusGates.bm25IndexRows(graft.operators.Retrieval.bm25SidecarRows(s, out))
     }
   )
 

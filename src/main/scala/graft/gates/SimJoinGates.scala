@@ -263,14 +263,17 @@ object SimJoinGates {
       // independent stages now overlap inside ONE job, and the multiset
       // equality still fails loud (at action time) with the same
       // message. Zero rows contributed when parity holds, so the gated
-      // values are unchanged.
-      val parityGuard = diff.limit(1).select(
-        when(col("__d") =!= 0L,
-          raise_error(lit("post-forget edit-variant index must equal a " +
-            "rebuild from the reduced corpus")))
-          .otherwise(lit(null)).cast("long").as("batch_id"),
-        lit(null).cast("long").as("index_id"),
-        lit(null).cast("int").as("edit_dist"))
+      // values are unchanged. Every diff row is a violation, so the
+      // raise is the leg's FILTER predicate: a filter decides
+      // cardinality and survives column pruning (a bare count() would
+      // elide a raise riding a projected column).
+      val parityGuard = diff.limit(1)
+        .filter(raise_error(lit("post-forget edit-variant index must " +
+          "equal a rebuild from the reduced corpus")).cast("boolean"))
+        .select(
+          lit(null).cast("long").as("batch_id"),
+          lit(null).cast("long").as("index_id"),
+          lit(null).cast("int").as("edit_dist"))
       EditSim.editDistancePairsAgainst(
           editIncrBatch(s, dir), kept, "s", "doc_id", maxDist = 2)
         .unionByName(parityGuard)

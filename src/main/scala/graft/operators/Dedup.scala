@@ -1957,7 +1957,7 @@ object Dedup {
 
   /** Banding-parameter sidecar name (an `_`-prefixed file — Spark's
     * readers ignore it as data). The [[graft.operators.Retrieval]]
-    * BucketMetaFile convention: a probe MUST band with the writer's
+    * sidecar-metadata convention: a probe MUST band with the writer's
     * bits/bands, so they are never a caller-supplied guess on the
     * read side. */
   private val HammingBandsMetaFile = "_hamming_bands"
@@ -1969,10 +1969,11 @@ object Dedup {
    * DISJOINT band keys and silently loses every match; the sidecar
    * makes the parameters the artifact's own metadata
    * ([[hammingMatchesAgainstBandedDir]] reads them back), exactly the
-   * bm25IndexWrite modulus doctrine. `mode = "append"` grows the
-   * artifact (new drops' band rows) and VERIFIES the sidecar instead
-   * of rewriting it — appending with different banding would corrupt
-   * the key space.
+   * BM25 layout's modulus doctrine ([[Retrieval.bm25SidecarWrite]]
+   * carries its bucket count in its metadata row). `mode = "append"`
+   * grows the artifact (new drops' band rows) and VERIFIES the sidecar
+   * instead of rewriting it — appending with different banding would
+   * corrupt the key space.
    */
   def hammingBandedIndexWrite(
     banded: DataFrame,

@@ -35,10 +35,11 @@ import graft.functions.Hashing
  *    contrast [[SetSim.setSimShingleIndex]], whose kept rows keep the
  *    FULL-corpus rarity order: exactness-safe per the q_forget_setsim
  *    argument, pinned through the join surface)
- *  - [[Retrieval.bm25Index]] carries corpus aggregates (df/N/avgdl)
- *    on every row, so a bare anti-join would leave stale statistics —
- *    [[Retrieval.bm25Forget]] is the dedicated rewrite (anti-join +
- *    exact removal-set-sized decrements)
+ *  - the BM25 index ([[Retrieval.bm25SidecarWrite]]) scores with
+ *    corpus aggregates (df/N/avgdl), so a bare anti-join would leave
+ *    stale statistics — [[Retrieval.bm25SidecarForget]] is the
+ *    dedicated arm (tombstones + exact removal-set-sized decrements of
+ *    the df/N/sum_dl sidecars, no posting rewrite)
  *  - [[Dedup.exactFingerprintIndex]] carries no ids by design (it is a
  *    fingerprint SET), so forgetting needs the COUNTED form
  *    ([[Dedup.exactFingerprintIndexCounted]]): a fingerprint shared by
@@ -162,7 +163,7 @@ object Forget {
    * family's append arm: each added document's fingerprint count
    * merges in (a fingerprint the index never held starts at its drop
    * count), VALUE-EQUAL to rebuilding the counted index from the
-   * union corpus. Unlike [[graft.operators.Retrieval.bm25Append]]
+   * union corpus. Unlike [[graft.operators.Retrieval.bm25SidecarAppend]]
    * there is no id space here — the index is count-keyed, so
    * re-adding an already-indexed document is legitimate (its count
    * grows; dedup semantics are the CONSUMER's job via

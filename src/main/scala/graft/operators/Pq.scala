@@ -548,7 +548,10 @@ object Pq {
    * [[Similarity.ivfRecallSummary]] contract: `(n_queries, n_truth,
    * n_hits, recall_ok)`, fail-closed on an empty truth set. Train +
    * encode + search are all deterministic, so a constant-row oracle can
-   * gate the threshold.
+   * gate the threshold. Same broadcast assumption as
+   * [[Similarity.ivfRecallSummary]]: the approximate result
+   * (≤ |queries|·k rows) is broadcast into the recall join, so
+   * `queries × k` must fit the broadcast limit and driver memory.
    */
   def adcRecallSummary(
     corpus: DataFrame,

@@ -62,7 +62,8 @@ object Retrieval {
     // NULL text counts as a ZERO-LENGTH document (dl = 0, no postings):
     // N already counts it, so leaving its dl NULL would make avgdl's
     // denominator diverge from n_docs — the coherent contract, and the
-    // one that keeps bm25Forget's sum_dl/n_docs arithmetic exact
+    // one the sidecar layout's registry keeps (a token-free doc registers
+    // with dl 0, so its forget's sum_dl/n_docs arithmetic stays exact)
     val docs = Dedup.wordTable(corpus, textCol, idCol)
       .select(col("doc_id"), col("w"),
         coalesce(size(col("w")), lit(0)).as("dl"))
@@ -107,512 +108,46 @@ object Retrieval {
       .agg(count(when(col("tf") > 0, lit(1))).as("df"))
     // terms-sized (≤ |query terms| rows): broadcast it back onto postings
     val withDf = postings.join(broadcast(dfTable), Seq("word"))
-    val idf: Column =
-      log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
-    val tfPart: Column =
-      col("tf") * (k1 + 1.0) /
-        (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl")))
     withDf
       .crossJoin(broadcast(stats))
-      .select(col("word"), col("doc_id"), (idf * tfPart).as("contrib"))
+      .select(col("word"), col("doc_id"),
+        bm25Contrib(col("n_docs"), col("avgdl"), k1, b).as("contrib"))
       .join(broadcast(qterms), Seq("word"))
       .groupBy("query_id", "doc_id")
       .agg(sum(col("contrib")).as("score"))
   }
 
-  /**
-   * PERSISTED retrieval index — the build-once artifact that makes
-   * repeated targeted selection match-bounded: [[bm25Scores]] re-scans
-   * and re-aggregates the corpus per query batch (fine for one probe,
-   * wasteful when a 100 TB corpus is probed daily), this builds the
-   * full inverted index ONCE and [[bm25ScoresAgainst]] probes it with
-   * only broadcast-joined query terms — the row-79/136 incremental
-   * pattern applied to retrieval.
-   *
-   * One frame, persist as parquet: one row per (word, doc) posting —
-   * `(word, doc_id, tf, dl, df, n_docs, avgdl, sum_dl)` with the
-   * per-word document frequency DENORMALIZED onto its postings
-   * (8 bytes a row buys probe-time scoring with zero extra joins) and
-   * the corpus stats riding every row as constants (parquet RLE
-   * stores a constant column in a handful of bytes per row group).
-   * All BM25 inputs are in the row, so k1/b stay PROBE-time
-   * parameters — one index serves any scoring configuration.
-   *
-   * The index is also a COMPLETE document registry, which is what
-   * makes [[bm25Forget]] exact without a corpus rescan: a TOKEN-FREE
-   * document (counted by N/avgdl but owning no posting) rides as one
-   * SENTINEL row with `word` NULL and `tf = df = 0` — a probe's inner
-   * join on `word` can never match it (NULL equals nothing), so
-   * scoring is untouched, but forget can see every indexed document
-   * and its length. `sum_dl` is the EXACT long document-length total
-   * behind `avgdl`: avgdl alone cannot be decremented exactly in
-   * floating point, `sum_dl − removed` can.
-   *
-   * Scale shape: one corpus explode → one map-side-combined
-   * (word, doc) aggregation (the token stream collapses to postings
-   * before its shuffle); df is the [[bm25Scores]] partial-agg shape
-   * over the postings aggregate (per-partition partials collapse to
-   * ≤ |vocab-per-partition| rows before the word shuffle — never a
-   * per-word count window, a stopword's postings would straggle one
-   * task) joined back SHUFFLE-wise on word (vocabulary at corpus
-   * scale is NOT broadcast-sized — billions of distinct tokens — and
-   * a skewed word join is AQE-splittable where a window is not);
-   * stats are a broadcast 1-row aggregate. Corpus text never
-   * persists into the index.
-   */
-  def bm25Index(
-    corpus: DataFrame,
-    textCol: String,
-    idCol: String
-  ): DataFrame = {
-    // NULL text counts as a ZERO-LENGTH document (dl = 0, no postings):
-    // N already counts it, so leaving its dl NULL would make avgdl's
-    // denominator diverge from n_docs — the coherent contract, and the
-    // one that keeps bm25Forget's sum_dl/n_docs arithmetic exact
-    val docs = Dedup.wordTable(corpus, textCol, idCol)
-      .select(col("doc_id"), col("w"),
-        coalesce(size(col("w")), lit(0)).as("dl"))
-    // N/avgdl count ALL docs incl. token-free ones (bm25Scores parity)
-    val stats = docs.agg(
-      count(lit(1)).as("n_docs"),
-      coalesce(avg(col("dl")), lit(0.0)).as("avgdl"),
-      coalesce(sum(col("dl")).cast("long"), lit(0L)).as("sum_dl"))
-    val postings = docs
-      .select(col("doc_id"), col("dl"), explode(col("w")).as("word"))
-      .groupBy("word", "doc_id", "dl")
-      .agg(count(lit(1)).as("tf"))
-    // the opaque-predicate spelling keeps this branch column-identical
-    // to the postings aggregate (the bm25Scores ReuseExchange guard)
-    val dfTable = postings
-      .groupBy("word")
-      .agg(count(when(col("tf") > 0, lit(1))).as("df"))
-    // token-free docs ride as NULL-word sentinels (never probed, the
-    // forget-time doc registry — see the scaladoc)
-    val tokenless = docs.filter(col("dl") === 0)
-      .select(lit(null).cast("string").as("word"), col("doc_id"),
-        lit(0L).as("tf"), col("dl"), lit(0L).as("df"))
-    postings
-      .join(dfTable, Seq("word"))
-      .select(col("word"), col("doc_id"), col("tf"), col("dl"), col("df"))
-      .unionByName(tokenless)
-      .crossJoin(broadcast(stats))
-      .select(col("word"), col("doc_id"), col("tf"), col("dl"),
-        col("df"), col("n_docs"), col("avgdl"), col("sum_dl"))
-  }
-
-  /**
-   * Deletion propagation for [[bm25Index]] (the [[Forget]] doctrine
-   * applied to the retrieval artifact): returns the index as
-   * [[bm25Index]] would build it from the REDUCED corpus — VALUE-EQUAL
-   * including every denormalized statistic — without touching corpus
-   * text. A takedown must not leave the removed document's postings
-   * scorable, and must not leave STALE df/N/avgdl either: those shift
-   * every surviving score, which is exactly what "as if never indexed"
-   * forbids.
-   *
-   * Unlike the per-doc-row indexes ([[Forget.removeIds]] suffices
-   * there), bm25 rows carry corpus aggregates, so the rewrite is
-   * anti-join + three removal-set-sized deltas, all exact integer
-   * arithmetic:
-   *  - `df' = df − |removed docs containing the word|` (per-word
-   *    decrement, broadcast-joined — the [[Forget.forgetFingerprints]]
-   *    counted-decrement shape; a word whose postings ALL belonged to
-   *    removed docs simply has no surviving rows to decrement),
-   *  - `n_docs' = n_docs − |removed docs found in the index|` (the
-   *    NULL-word sentinels make the index a complete registry, so a
-   *    token-free doc decrements too),
-   *  - `sum_dl' = sum_dl − Σ removed dl`, and
-   *    `avgdl' = sum_dl'/n_docs'` — bit-equal to the rebuild's
-   *    average because both divide the same exact long sum by the
-   *    same count (0.0 when the reduced corpus is empty).
-   *
-   * One index scan (the rewrite itself), removal-set-sized exchanges;
-   * ids absent from the index are no-ops. Wrap in
-   * [[Forget.rewriteVersioned]] for atomic publication.
-   */
-  def bm25Forget(
-    index: DataFrame,
-    removed: DataFrame,
-    removedIdCol: String,
-    broadcastRemoved: Boolean = true
-  ): DataFrame = {
-    def hinted(df: DataFrame) = if (broadcastRemoved) broadcast(df) else df
-    val rem = removed.select(col(removedIdCol).as("__rid")).distinct()
-    val removedRows = index
-      .join(hinted(rem), col("doc_id") === col("__rid"), "left_semi")
-    // one row per removed doc actually indexed (sentinels included)
-    val removedStats = removedRows.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("__r_n"),
-        coalesce(sum(col("dl")).cast("long"), lit(0L)).as("__r_sum"))
-    val removedPerWord = removedRows
-      .filter(col("word").isNotNull)
-      .groupBy("word").agg(count(lit(1)).as("__r_df"))
-    val nDocs2 = col("n_docs") - col("__r_n")
-    val sumDl2 = col("sum_dl") - col("__r_sum")
-    index
-      .join(hinted(rem), col("doc_id") === col("__rid"), "left_anti")
-      .join(hinted(removedPerWord), Seq("word"), "left")
-      .crossJoin(broadcast(removedStats))
-      .select(col("word"), col("doc_id"), col("tf"), col("dl"),
-        (col("df") - coalesce(col("__r_df"), lit(0L))).as("df"),
-        nDocs2.as("n_docs"),
-        when(nDocs2 === 0, lit(0.0))
-          .otherwise(sumDl2.cast("double") / nDocs2.cast("double"))
-          .as("avgdl"),
-        sumDl2.as("sum_dl"))
-  }
-
-  /**
-   * Append a corpus DROP into a persisted [[bm25Index]] — the GROW arm
-   * the index family's lifecycle was missing ([[bm25Forget]]'s exact
-   * arithmetic run in reverse): returns the index as [[bm25Index]]
-   * would build it from the UNION corpus — VALUE-EQUAL including every
-   * denormalized statistic — while touching only the drop's text. A
-   * daily drop must not force a full corpus re-index just because
-   * bm25 rows carry corpus aggregates; the per-doc-row index families
-   * (winnow/containment/dhash) append by writing rows, this one needs
-   * the three drop-sized deltas too:
-   *  - `df' = df + |drop docs containing the word|` — the per-word
-   *    increment, applied to SURVIVING old rows by a left join against
-   *    the drop's word-frequency table and to the drop's own new
-   *    posting rows by the symmetric lookup of the OLD df (a word the
-   *    index has never seen starts at its drop count);
-   *  - `n_docs' = n_docs + |drop docs|` (token-free drop docs count
-   *    and ride in as NULL-word sentinels, [[bm25Index]] parity);
-   *  - `sum_dl' = sum_dl + Σ drop dl`, and `avgdl' = sum_dl'/n_docs'`
-   *    — the same exact-long-sum division as the rebuild.
-   *
-   * Ids must be NEW: a drop id already present in the index would
-   * double-count every aggregate, so the rewrite FAILS LOUD (a lazy
-   * in-plan `raise_error`, not a driver pre-scan) on the first
-   * collision it sees — "append twice" is a retry bug upstream, never
-   * something to silently absorb. Old corpus stats are read off the
-   * index rows themselves (max over the constant columns — an EMPTY
-   * index appends as a from-scratch build).
-   *
-   * Scale shape: the index is read for the rewrite itself (unavoidable
-   * — df/N/avgdl change on every row) plus a column-pruned pass for
-   * the drop words' old df (only `word`/`df` columns move) and a
-   * 1-ROW stats peek (limit(1) under the aggregate — the constants
-   * ride every row, so one row is enough); the drop tokenizes once
-   * per consuming subtree (four drop-sized passes — persist the drop
-   * upstream if its tokenization dominates), delta joins are
-   * drop-vocabulary-sized (broadcast by default, `broadcastDrop =
-   * false` for giant drops → shuffle joins, AQE handles skew). The
-   * OLD corpus text is never read. Wrap in
-   * [[Forget.rewriteVersioned]] for atomic publication.
-   */
-  def bm25Append(
-    index: DataFrame,
-    drop: DataFrame,
-    textCol: String,
-    idCol: String,
-    broadcastDrop: Boolean = true
-  ): DataFrame = {
-    def hinted(df: DataFrame) = if (broadcastDrop) broadcast(df) else df
-    val docs = Dedup.wordTable(drop, textCol, idCol)
-      .select(col("doc_id"), col("w"),
-        coalesce(size(col("w")), lit(0)).as("dl"))
-    val aStats = docs.agg(
-      count(lit(1)).as("__a_n"),
-      coalesce(sum(col("dl")).cast("long"), lit(0L)).as("__a_sum"))
-    // the stats are denormalized constants, so ONE row carries them:
-    // limit(1) under the aggregate keeps this a near-free peek, and
-    // the coalesced max makes an EMPTY index read as (0, 0) —
-    // appending onto nothing degenerates to a fresh build
-    val oldStats = index.select(col("n_docs"), col("sum_dl")).limit(1).agg(
-      coalesce(max(col("n_docs")), lit(0L)).as("__o_n"),
-      coalesce(max(col("sum_dl")), lit(0L)).as("__o_sum"))
-    val stats = broadcast(oldStats.crossJoin(aStats).select(
-      (col("__o_n") + col("__a_n")).as("__n2"),
-      (col("__o_sum") + col("__a_sum")).as("__s2")))
-    val postings = docs
-      .select(col("doc_id"), col("dl"), explode(col("w")).as("word"))
-      .groupBy("word", "doc_id", "dl")
-      .agg(count(lit(1)).as("tf"))
-    // per-word df delta: |drop docs containing the word| (drop-vocab-sized)
-    val aDf = postings.groupBy("word").agg(count(lit(1)).as("__a_df"))
-    // OLD df for exactly the drop's words: df is denormalized onto every
-    // posting of the word, so max() reads it without a full-index agg
-    // (the semi join prunes the scan to drop-word postings first)
-    val oldDf = index
-      .join(hinted(aDf.select("word")), Seq("word"), "left_semi")
-      .groupBy("word").agg(max(col("df")).as("__o_df"))
-    val dropIds = docs.select(col("doc_id").as("__aid")).distinct()
-    val avgdl2 = when(col("__n2") === 0, lit(0.0))
-      .otherwise(col("__s2").cast("double") / col("__n2").cast("double"))
-    // surviving old rows: bump df and stats; an id collision fails
-    // LOUD through a FILTER predicate (not an output column — a guard
-    // woven into df would be silently ELIDED by column pruning for any
-    // consumer that never reads df, e.g. a bare count(); a filter
-    // decides cardinality, so every consumer evaluates it)
-    val collisionGuard =
-      when(col("__aid").isNotNull,
-        raise_error(concat(lit("bm25Append: drop id already indexed: "),
-          col("doc_id").cast("string"),
-          lit(" - appending an indexed document would double-count " +
-            "df/N/avgdl; forget it first or dedup the drop")))
-          .cast("boolean"))
-        .otherwise(lit(true))
-    val oldRows = index
-      .join(hinted(dropIds), col("doc_id") === col("__aid"), "left")
-      .filter(collisionGuard)
-      .join(hinted(aDf), Seq("word"), "left")
-      .crossJoin(stats)
-      .select(col("word"), col("doc_id"), col("tf"), col("dl"),
-        (col("df") + coalesce(col("__a_df"), lit(0L))).as("df"),
-        col("__n2").as("n_docs"), avgdl2.as("avgdl"), col("__s2").as("sum_dl"))
-    val tokenless = docs.filter(col("dl") === 0)
-      .select(lit(null).cast("string").as("word"), col("doc_id"),
-        lit(0L).as("tf"), col("dl"), lit(0L).as("df"))
-    val newRows = postings
-      .join(hinted(aDf), Seq("word"))
-      .join(hinted(oldDf), Seq("word"), "left")
-      .select(col("word"), col("doc_id"), col("tf"), col("dl"),
-        (col("__a_df") + coalesce(col("__o_df"), lit(0L))).as("df"))
-      .unionByName(tokenless)
-      .crossJoin(stats)
-      .select(col("word"), col("doc_id"), col("tf"), col("dl"), col("df"),
-        col("__n2").as("n_docs"), avgdl2.as("avgdl"), col("__s2").as("sum_dl"))
-    oldRows.unionByName(newRows)
-  }
-
-  /**
-   * [[bm25Append]] against a [[bm25IndexWrite]] DIRECTORY — the grow
-   * arm for the partition-pruned layout: reads the bucketed index
-   * (bucket column dropped — it is derivable), merges the drop with
-   * the exact-delta rewrite, and writes the grown index to `outPath`
-   * re-bucketed under the SOURCE's own modulus (from its sidecar — a
-   * different modulus would be a different layout, not a grown one).
-   * The write is a FULL layout rewrite by construction: n_docs/avgdl/
-   * sum_dl ride every posting row, so growing the corpus changes every
-   * bucket's bytes — there is no partition-local append for an index
-   * that denormalizes corpus stats (that denormalization is what makes
-   * pruning unable to change a score, the layout's core contract).
-   * Write to a NEW path and flip a pointer for atomic publication (the
-   * [[Forget.rewriteVersioned]] pattern, applied dir-to-dir here
-   * because the artifact is a directory tree, not one parquet).
-   */
-  def bm25AppendDir(
-    spark: SparkSession,
-    path: String,
-    drop: DataFrame,
-    textCol: String,
-    idCol: String,
-    outPath: String,
-    broadcastDrop: Boolean = true
-  ): Unit = {
-    // resolve BOTH spellings before comparing: a raw string check is
-    // defeated by trailing slashes, relative-vs-absolute paths and
-    // symlinks, and an in-place overwrite would delete the source layout
-    // while the append plan is still reading it (job failure plus a
-    // destroyed source artifact). resolvePath follows symlinks when the
-    // filesystem supports them; the target may not exist yet, so it
-    // falls back to makeQualified.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def resolved(s: String): org.apache.hadoop.fs.Path = {
-      val raw = new org.apache.hadoop.fs.Path(s)
-      val fs = raw.getFileSystem(hconf)
-      try fs.resolvePath(raw)
-      catch { case _: java.io.FileNotFoundException => fs.makeQualified(raw) }
-    }
-    require(resolved(outPath) != resolved(path),
-      s"bm25AppendDir: outPath resolves to the source path ($path) - the " +
-        "grown layout is a full rewrite; write fresh and flip a pointer")
-    val buckets = readBucketMeta(spark, path)
-    bm25IndexWrite(
-      bm25Append(spark.read.parquet(path).drop("bucket"), drop,
-        textCol, idCol, broadcastDrop),
-      outPath, buckets)
-  }
-
-  /**
-   * BM25 scores probed from a persisted [[bm25Index]]: value-identical
-   * to [[bm25Scores]] over the same corpus (identical operands through
-   * identical arithmetic — tf/dl/df/N are exact longs and avgdl
-   * round-trips parquet bit-exactly; the gate pins it under the same
-   * oracle), at MATCH-bounded cost: the metadata-sized query term set
-   * is broadcast-inner-joined onto the index scan (only postings of
-   * query words survive the scan stage — the index is never shuffled
-   * beyond them) and the only exchange is the candidate-sized
-   * (query, doc) score aggregation. A query term the corpus has never
-   * seen matches nothing; document frequencies are read, not
-   * recomputed.
-   */
-  def bm25ScoresAgainst(
-    index: DataFrame,
-    queries: DataFrame,
-    queryIdCol: String,
-    queryTextCol: String,
-    k1: Double = 1.2,
-    b: Double = 0.75
-  ): DataFrame = {
-    require(k1 >= 0.0, s"k1 must be non-negative: $k1")
-    require(b >= 0.0 && b <= 1.0, s"b must be in [0, 1]: $b")
-    val qterms = queries.select(
-      col(queryIdCol).as("query_id"),
-      explode(graft.functions.Hashing.normalizedWords(col(queryTextCol))).as("word"))
-      .distinct()
+  /** One posting's BM25 contribution `idf(t) · tfPart(t, d)` over the
+    * `tf`/`dl`/`df` columns in scope — the ONE expression tree behind
+    * [[bm25Scores]] and [[bm25ScoresFromSidecar]] (only the N/avgdl
+    * operands differ: broadcast columns inline, driver literals for the
+    * sidecar), so both arms score bit-identically. */
+  private def bm25Contrib(nDocs: Column, avgdl: Column, k1: Double, b: Double): Column = {
     val idf: Column =
-      log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
+      log(lit(1.0) + (nDocs - col("df") + 0.5) / (col("df") + 0.5))
     val tfPart: Column =
       col("tf") * (k1 + 1.0) /
-        (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl")))
-    index
-      .join(broadcast(qterms), Seq("word"))
-      .select(col("query_id"), col("doc_id"), (idf * tfPart).as("contrib"))
-      .groupBy("query_id", "doc_id")
-      .agg(sum(col("contrib")).as("score"))
+        (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / avgdl))
+    idf * tfPart
   }
 
-  /** Partition-layout metadata sidecar name (an `_`-prefixed file —
-    * Spark's readers ignore it as data). */
-  private val BucketMetaFile = "_bm25_buckets"
-
-  /**
-   * Persist a [[bm25Index]] HIVE-PARTITIONED by a word-hash bucket —
-   * the layout that makes probe cost independent of corpus size: a
-   * probe's query terms map to a handful of `bucket=` directories and
-   * PARTITION PRUNING keeps every other partition's files closed (the
-   * flat layout's probe still scans the whole index to find matching
-   * words — measured 0.32 exponent in BASELINE.md; this removes that
-   * residual term, leaving only the matched buckets' IO).
-   *
-   * The bucket is `pmod(md5_long60(word), buckets)` — the engine's
-   * portable hash, recomputable at probe time for the query terms.
-   * The bucket COUNT is self-describing: it rides a `_bm25_buckets`
-   * sidecar file next to the data (readers must use the writer's
-   * modulus — a mismatched guess would prune wrong buckets and
-   * silently lose words, so it is never a caller-supplied parameter
-   * on the read side).
-   */
-  def bm25IndexWrite(
-    index: DataFrame,
-    path: String,
-    buckets: Int = 64
-  ): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    index
-      .withColumn("bucket",
-        pmod(graft.functions.Hashing.md5Long60(col("word")), lit(buckets.toLong))
-          .cast("int"))
-      .hint("rebalance", "bucket")
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
-    val spark = index.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path, BucketMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(buckets.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /**
-   * BM25 scores probed from a [[bm25IndexWrite]] directory: the query
-   * terms' buckets are computed DRIVER-side with the same portable
-   * hash (queries are metadata-sized by contract), the read filters
-   * `bucket IN (...)` — a pure partition-pruning predicate, so only
-   * matched buckets' files open — and the pruned frame feeds
-   * [[bm25ScoresAgainst]] unchanged (every posting row carries its
-   * df/N/avgdl, so pruning cannot change any score). Value-identical
-   * to the flat probe; queries whose terms all miss the corpus read
-   * ZERO partitions.
-   */
-  def bm25ScoresFromDir(
-    spark: SparkSession,
-    path: String,
-    queries: DataFrame,
-    queryIdCol: String,
-    queryTextCol: String,
-    k1: Double = 1.2,
-    b: Double = 0.75,
-    maxQueryTerms: Int = 100000
-  ): DataFrame = {
-    // the upper bound keeps the cap+1 overflow-free — the error below
-    // says "raise maxQueryTerms explicitly", so Int.MaxValue must not
-    // turn that escape hatch into a negative limit() crash
-    require(maxQueryTerms >= 1 && maxQueryTerms < Int.MaxValue,
-      s"maxQueryTerms must be in [1, ${Int.MaxValue - 1}]: $maxQueryTerms")
-    val buckets = readBucketMeta(spark, path)
-    // the query frame is metadata-sized BY CONTRACT (its distinct terms
-    // are collected driver-side to compute the pruned bucket set);
-    // limit(cap + 1) keeps even a misuse collect bounded — the overflow
-    // row exists only to prove the violation and name it
-    val words = queries.select(
-        explode(graft.functions.Hashing.normalizedWords(col(queryTextCol)))
-          .as("word"))
-      .distinct().limit(maxQueryTerms + 1).collect().map(_.getString(0))
-    require(words.length <= maxQueryTerms,
-      s"bm25ScoresFromDir: queries carry more than $maxQueryTerms distinct " +
-        "terms - the query frame must be metadata-sized (terms are " +
-        "collected driver-side for partition pruning); probe the flat " +
-        "index with bm25ScoresAgainst or raise maxQueryTerms explicitly")
-    val wanted = words.map { w =>
-      val h = graft.functions.Md5Long60Expr.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(w))
-      (((h % buckets) + buckets) % buckets).toInt
-    }.distinct.toIndexedSeq
-    val idx =
-      if (wanted.isEmpty)
-        spark.read.parquet(path).filter(lit(false))
-      else
-        spark.read.parquet(path).filter(col("bucket").isin(wanted: _*))
-    bm25ScoresAgainst(idx.drop("bucket"), queries, queryIdCol, queryTextCol, k1, b)
-  }
-
-  /** Top-k over the partitioned layout: [[bm25ScoresFromDir]] + the
-    * WindowGroupLimit ranking. */
-  def bm25TopKFromDir(
-    spark: SparkSession,
-    path: String,
-    queries: DataFrame,
-    queryIdCol: String,
-    queryTextCol: String,
-    k: Int = 10,
-    k1: Double = 1.2,
-    b: Double = 0.75,
-    maxQueryTerms: Int = 100000
-  ): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    bm25ScoresFromDir(spark, path, queries, queryIdCol, queryTextCol, k1, b,
-        maxQueryTerms)
+  /** Top-k ranking over `(query_id, doc_id, score)`: rank 1..k by score
+    * desc with doc_id tiebreak. row_number ≤ k plans as
+    * WindowGroupLimit — each partition surrenders only its local top-k. */
+  private def rankTopK(scores: DataFrame, k: Int): DataFrame =
+    scores
       .withColumn("rank",
         row_number().over(
           Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))))
       .filter(col("rank") <= k)
-  }
-
-  private def readBucketMeta(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path, BucketMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"$path has no $BucketMetaFile sidecar - was it written by bm25IndexWrite?")
-    val in = fs.open(p)
-    val text = try {
-      // loop to EOF: a single read() may return short (or -1 on an
-      // empty sidecar, which would make new String(buf, 0, -1) throw
-      // an obscure IndexOutOfBounds instead of a clear error)
-      val buf = new Array[Byte](32)
-      val outBuf = new java.io.ByteArrayOutputStream(32)
-      var n = in.read(buf)
-      while (n > 0) { outBuf.write(buf, 0, n); n = in.read(buf) }
-      new String(outBuf.toByteArray, "UTF-8").trim
-    } finally in.close()
-    // ASCII digits only (Char.isDigit accepts Unicode digits toInt
-    // rejects) and <= 9 of them (no Int overflow): toInt below cannot
-    // throw, so a corrupt sidecar always surfaces as THIS message
-    require(text.nonEmpty && text.length <= 9 &&
-        text.forall(c => c >= '0' && c <= '9'),
-      s"$path/$BucketMetaFile is ${if (text.isEmpty) "empty" else s"not a bucket count ('$text')"} - " +
-        "was it written by bm25IndexWrite?")
-    text.toInt
-  }
 
   // ------------------------------------------------------------------
-  // STATS-SIDECAR layout — the append-friendly third layout arm.
+  // STATS-SIDECAR layout — the one persisted BM25 index: built once,
+  // probed many times, grown and forgotten without rewriting postings.
   //
-  // The flat [[bm25Index]] and bucketed [[bm25IndexWrite]] layouts
-  // denormalize df/N/avgdl/sum_dl onto every posting row (probe-time
-  // scoring with zero joins — their contract), which makes EVERY grow
-  // an O(index) rewrite: one drop touches every row's statistics. A
+  // Denormalizing df/N/avgdl/sum_dl onto every posting row buys
+  // probe-time scoring with zero joins, but makes EVERY grow an
+  // O(index) rewrite: one drop touches every row's statistics. A
   // daily 1 TB drop into a 100 TB index pays 100 TB of IO. This layout
   // inverts the trade: posting rows are IMMUTABLE `(word, doc_id, tf,
   // dl)` (plus the NULL-word registry sentinels for token-free docs),
@@ -634,11 +169,12 @@ object Retrieval {
   //   _bm25_sidecar                   "n_docs,sum_dl,G,V,R,buckets"
   //
   // Generations and the df table are partitioned by
-  // `pmod(md5_long60(word), buckets)` (the bm25IndexWrite modulus
-  // doctrine, the modulus riding the metadata row): probes compute the
-  // query words' buckets DRIVER-side and partition-prune every
-  // generation and the df sidecar — probe IO is query-bounded like the
-  // denormalized bucketed layout's, on top of the sublinear grows.
+  // `pmod(md5_long60(word), buckets)` (the engine's portable hash; the
+  // modulus rides the metadata row — readers must use the writer's
+  // modulus, a guess would prune wrong buckets and silently lose
+  // words): probes compute the query words' buckets DRIVER-side and
+  // partition-prune every generation and the df sidecar, so probe IO
+  // is query-bounded on top of the sublinear grows.
   // NULL-word registry sentinels land in the hive default partition
   // (probes never prune into it; forget's full registry pass reads it).
   //
@@ -682,6 +218,8 @@ object Retrieval {
   private final case class SidecarMeta(
     nDocs: Long, sumDl: Long, gens: Seq[Int], dfV: Int, rmV: Int, buckets: Int) {
     def nextGen: Int = gens.max + 1
+    /** sum_dl / n_docs from the exact long total (0.0 for an empty corpus). */
+    def avgdl: Double = if (nDocs == 0L) 0.0 else sumDl.toDouble / nDocs
   }
 
   private def sidecarMetaPath(path: String) =
@@ -754,11 +292,6 @@ object Retrieval {
   private def postingPaths(path: String, m: SidecarMeta): Seq[String] =
     m.gens.map(g => s"$path/postings-g$g")
 
-  /** Word-hash bucket under the layout's own modulus — the
-    * [[bm25IndexWrite]] portable hash, recomputable driver-side for
-    * probe-time partition pruning. NULL (sentinel) words land in the
-    * hive default partition; probes never prune INTO it, full scans
-    * (forget's registry pass) read it like any other. */
   /** Pinned layout schemas: an EMPTY partitioned write leaves no data
     * files, and schema inference over such a directory throws where an
     * empty layout is correct (the stream-sink pinned-read doctrine). */
@@ -766,6 +299,11 @@ object Retrieval {
     "word STRING, doc_id BIGINT, tf BIGINT, dl INT, bucket INT"
   private val SidecarDfSchema = "word STRING, df BIGINT, bucket INT"
 
+  /** Word-hash bucket under the layout's own modulus — the engine's
+    * portable hash, recomputable driver-side for probe-time partition
+    * pruning. NULL (sentinel) words land in the hive default partition;
+    * probes never prune INTO it, full scans (forget's registry pass)
+    * read it like any other. */
   private def sidecarBucket(buckets: Int): Column =
     pmod(graft.functions.Hashing.md5Long60(col("word")), lit(buckets.toLong))
       .cast("int")
@@ -877,11 +415,15 @@ object Retrieval {
   }
 
   /** The distinct normalized query words, collected driver-side under
-    * the metadata-sized-queries contract (the bm25ScoresFromDir cap +
-    * overflow guard). */
+    * the metadata-sized-queries contract: limit(cap + 1) keeps even a
+    * misuse collect bounded — the overflow row exists only to prove the
+    * violation and name it. */
   private def collectQueryWords(
     queries: DataFrame, queryTextCol: String,
     maxQueryTerms: Int, what: String): Array[String] = {
+    // the upper bound keeps the cap+1 overflow-free — the error below
+    // says "raise maxQueryTerms explicitly", so Int.MaxValue must not
+    // turn that escape hatch into a negative limit() crash
     require(maxQueryTerms >= 1 && maxQueryTerms < Int.MaxValue,
       s"maxQueryTerms must be in [1, ${Int.MaxValue - 1}]: $maxQueryTerms")
     val words = queries.select(
@@ -903,15 +445,18 @@ object Retrieval {
       (((h % buckets) + buckets) % buckets).toInt
     }.distinct.toIndexedSeq
 
+  /** Partition predicate selecting exactly `buckets` (none when empty). */
+  private def inBuckets(buckets: Seq[Int]): Column =
+    if (buckets.isEmpty) lit(false) else col("bucket").isin(buckets: _*)
+
   /** PARTITION-PRUNED posting read: only the query words' bucket
     * directories open, across every generation. */
   private def prunedSidecarPostings(
     spark: SparkSession, path: String, m: SidecarMeta,
     wanted: IndexedSeq[Int]): DataFrame =
-    if (wanted.isEmpty) readSidecarPostings(spark, path, m).filter(lit(false))
-    else postingPaths(path, m)
+    postingPaths(path, m)
       .map(g => spark.read.schema(SidecarPostingsSchema).parquet(g)
-        .filter(col("bucket").isin(wanted: _*)))
+        .filter(inBuckets(wanted)))
       .reduce(_ unionByName _).drop("bucket")
 
   /** The drop's (word, doc_id, tf, dl) posting rows INCLUDING the
@@ -922,7 +467,7 @@ object Retrieval {
     // row's array), so the posting build is a pure projection — the
     // earlier explode + groupBy(word, doc_id, dl) spelling paid a full
     // posting-sized Exchange to meet occurrences that were never apart
-    // (guide §2.4). The bm25Scores/bm25Index builders deliberately KEEP
+    // (guide §2.4). The inline bm25Scores builder deliberately KEEPS
     // the groupBy: there the postings Exchange is the materialization
     // point the df branch reuses — see WordTfExpr's scaladoc.
     val postings = docs
@@ -959,10 +504,9 @@ object Retrieval {
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
     val spark = corpus.sparkSession
     // generations AND the df sidecar are hive-partitioned by the word's
-    // hash bucket (the bm25IndexWrite modulus doctrine, carried in the
-    // metadata row): probes prune to the query words' buckets across
-    // every generation, so probe IO is query-bounded like the
-    // denormalized bucketed layout's — on top of the sublinear grows
+    // hash bucket (the modulus rides the metadata row): probes prune to
+    // the query words' buckets across every generation, so probe IO is
+    // query-bounded — on top of the sublinear grows
     bucketClustered(
       sidecarPostingsOf(sidecarDocs(corpus, textCol, idCol))
         .withColumn("bucket", sidecarBucket(buckets)))
@@ -1001,18 +545,36 @@ object Retrieval {
     else Some(spark.read.schema("doc_id BIGINT")
       .parquet(s"$path/removed-v${m.rmV}"))
 
+  /** `rows` (keyed by `doc_id`) minus the tombstoned ids — a
+    * removal-set-sized anti join, the identity before any forget. */
+  private def minusTombstones(
+    spark: SparkSession, path: String, m: SidecarMeta, rows: DataFrame,
+    broadcastRemoved: Boolean = true): DataFrame =
+    sidecarRemoved(spark, path, m).fold(rows) { rm =>
+      val r = rm.select(col("doc_id").as("__rm_id"))
+      rows.join(if (broadcastRemoved) broadcast(r) else r,
+        col("doc_id") === col("__rm_id"), "left_anti")
+    }
+
+  /** Every live posting row (sentinels included) across generations —
+    * the full read behind [[bm25SidecarRows]] and the compact rewrite. */
+  private def liveSidecarPostings(
+    spark: SparkSession, path: String, m: SidecarMeta): DataFrame =
+    minusTombstones(spark, path, m, readSidecarPostings(spark, path, m))
+
   /**
    * BM25 scores probed from a [[bm25SidecarWrite]] layout —
    * value-identical to [[bm25Scores]] over the live corpus (same
    * exact-long operands through the same arithmetic; the gate pins it
    * under the q_bm25 oracle). Cost shape: the query words' buckets are
    * computed DRIVER-side (queries are metadata-sized by contract —
-   * `maxQueryTerms` caps the collect with the bm25ScoresFromDir
-   * overflow guard) and PARTITION-PRUNE both the posting generations
-   * and the df sidecar, so probe IO opens only matched bucket
-   * directories; within them the broadcast term set prunes rows,
-   * tombstones anti-join at removal-set size, and N/avgdl are driver
-   * metadata — the ONE probe-time join the denormalized layouts avoid,
+   * `maxQueryTerms` caps the collect, and an oversized query frame
+   * fails loud) and PARTITION-PRUNE both the posting generations and
+   * the df sidecar, so probe IO opens only matched bucket directories
+   * (a query frame with no terms opens none); within them the
+   * broadcast term set prunes rows, tombstones anti-join at
+   * removal-set size, and N/avgdl are driver metadata — the df join is
+   * the one probe-time join a stats-denormalized index would avoid,
    * bought back as sublinear grows.
    */
   def bm25ScoresFromSidecar(
@@ -1029,7 +591,6 @@ object Retrieval {
     require(k1 >= 0.0, s"k1 must be non-negative: $k1")
     require(b >= 0.0 && b <= 1.0, s"b must be in [0, 1]: $b")
     val m = readSidecarMeta(spark, path)
-    val avgdl = if (m.nDocs == 0L) 0.0 else m.sumDl.toDouble / m.nDocs
     val words = collectQueryWords(queries, queryTextCol, maxQueryTerms,
       "bm25ScoresFromSidecar")
     val wanted = wantedBuckets(words, m.buckets)
@@ -1038,28 +599,18 @@ object Retrieval {
       explode(graft.functions.Hashing.normalizedWords(col(queryTextCol))).as("word"))
       .distinct()
     val terms = qterms.select("word").distinct()
-    val posts0 = prunedSidecarPostings(spark, path, m, wanted)
-      .join(broadcast(terms), Seq("word"), "left_semi")
-    val posts = sidecarRemoved(spark, path, m).fold(posts0) { rm =>
-      val r = rm.select(col("doc_id").as("__rm_id"))
-      posts0.join(if (broadcastRemoved) broadcast(r) else r,
-        col("doc_id") === col("__rm_id"), "left_anti")
-    }
-    val dfT = (if (wanted.isEmpty)
-        spark.read.schema(SidecarDfSchema)
-          .parquet(s"$path/df-v${m.dfV}").filter(lit(false))
-      else spark.read.schema(SidecarDfSchema)
-          .parquet(s"$path/df-v${m.dfV}")
-          .filter(col("bucket").isin(wanted: _*)))
+    val posts = minusTombstones(spark, path, m,
+      prunedSidecarPostings(spark, path, m, wanted)
+        .join(broadcast(terms), Seq("word"), "left_semi"),
+      broadcastRemoved)
+    val dfT = spark.read.schema(SidecarDfSchema)
+      .parquet(s"$path/df-v${m.dfV}")
+      .filter(inBuckets(wanted))
       .drop("bucket")
       .join(broadcast(terms), Seq("word"), "left_semi")
-    val idf: Column =
-      log(lit(1.0) + (lit(m.nDocs) - col("df") + 0.5) / (col("df") + 0.5))
-    val tfPart: Column =
-      col("tf") * (k1 + 1.0) /
-        (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / lit(avgdl)))
     posts.join(broadcast(dfT), Seq("word"))
-      .select(col("word"), col("doc_id"), (idf * tfPart).as("contrib"))
+      .select(col("word"), col("doc_id"),
+        bm25Contrib(lit(m.nDocs), lit(m.avgdl), k1, b).as("contrib"))
       .join(broadcast(qterms), Seq("word"))
       .groupBy("query_id", "doc_id")
       .agg(sum(col("contrib")).as("score"))
@@ -1132,10 +683,9 @@ object Retrieval {
   }
 
   /** Top-k per query over the sidecar layout: [[bm25ScoresFromSidecar]]
-    * + the [[bm25TopK]] ranking — layout parity with the inline,
-    * flat-index ([[bm25TopKAgainst]]) and bucketed-dir
-    * ([[bm25TopKFromDir]]) arms. row_number ≤ k plans as
-    * WindowGroupLimit: each partition surrenders only its local top-k. */
+    * + the [[bm25TopK]] ranking — layout parity with the inline arm.
+    * row_number ≤ k plans as WindowGroupLimit: each partition
+    * surrenders only its local top-k. */
   def bm25TopKFromSidecar(
     spark: SparkSession,
     path: String,
@@ -1149,12 +699,9 @@ object Retrieval {
     maxQueryTerms: Int = 100000
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    bm25ScoresFromSidecar(spark, path, queries, queryIdCol, queryTextCol,
-        k1, b, broadcastRemoved, maxQueryTerms)
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
+    rankTopK(
+      bm25ScoresFromSidecar(spark, path, queries, queryIdCol, queryTextCol,
+        k1, b, broadcastRemoved, maxQueryTerms), k)
   }
 
   /** The grow's guarded posting frame: the drop's posting rows plus a
@@ -1178,38 +725,43 @@ object Retrieval {
     // INCLUDING tombstoned ids, whose registry rows survive until
     // compaction precisely so this guard can reject a re-append that
     // would resurrect their postings; evaluated lazily inside the
-    // write via a raise-or-empty leg, one doc-count-sized scan
+    // write via a raise-or-empty leg, one doc-count-sized scan. Every
+    // row reaching the leg IS a collision, so the raise sits in the
+    // leg's FILTER predicate, not an output column: a filter decides
+    // cardinality, so every consumer evaluates it — a raise woven into
+    // a projected column is elided by column pruning for a consumer
+    // that never reads it (a bare count()).
     val dropIds = docs.select(col("doc_id").as("__aid")).distinct()
     readSidecarRegistry(spark, path, m).select("doc_id")
       .join(hinted(dropIds), col("doc_id") === col("__aid"), "left_semi")
       .limit(1)
-      .select(
-        when(col("doc_id").isNotNull,
-          raise_error(concat(
-            lit("bm25SidecarAppend: drop id already registered: "),
-            col("doc_id").cast("string"),
-            lit(" - appending an indexed (or tombstoned) document would " +
-              "double-count df/N/avgdl or resurrect forgotten postings; " +
-              "forget+compact first or dedup the drop"))))
-          .otherwise(lit(null)).cast("string").as("word"),
+      .filter(raise_error(concat(
+          lit("bm25SidecarAppend: drop id already registered: "),
+          col("doc_id").cast("string"),
+          lit(" - appending an indexed (or tombstoned) document would " +
+            "double-count df/N/avgdl or resurrect forgotten postings; " +
+            "forget+compact first or dedup the drop")))
+        .cast("boolean"))
+      .select(lit(null).cast("string").as("word"),
         col("doc_id"), lit(0L).as("tf"), lit(0).as("dl"))
       .unionByName(newPost)
   }
 
   /**
-   * Grow the sidecar layout by a corpus drop — the SUBLINEAR grow the
-   * denormalized layouts cannot offer: writes ONE new posting
-   * generation and its (doc-count-sized) registry sidecar — prior
+   * Grow the sidecar layout by a corpus drop — a SUBLINEAR grow (a
+   * stats-denormalized index would rewrite every row): writes ONE new
+   * posting generation and its (doc-count-sized) registry sidecar — prior
    * generations are never opened for reading OR writing — recomputes
    * only the df buckets containing drop vocabulary (untouched bucket
    * files byte-copied forward, asserted identical in-gate), and flips
    * the metadata row. The collision guard and the N/sum_dl deltas are
    * registry joins; no posting row of any prior generation is read.
    *
-   * Ids must be NEW ([[bm25Append]]'s contract): a drop id already
-   * registered — including a TOMBSTONED one, whose stale posting rows
-   * would come back to life — fails loud inside the posting write
-   * action, which aborts before committing any file.
+   * Ids must be NEW: a drop id already registered would double-count
+   * every statistic, and a TOMBSTONED one would bring its stale posting
+   * rows back to life — either fails loud inside the posting write
+   * action, which aborts before committing any file. The result is
+   * row-equal ([[bm25SidecarRows]]) to a fresh build over corpus ∪ drop.
    */
   def bm25SidecarAppend(
     spark: SparkSession,
@@ -1260,8 +812,7 @@ object Retrieval {
               val touched = touchedBuckets(aDf.select("word"), m.buckets)
               val oldDf = spark.read.schema(SidecarDfSchema)
                 .parquet(s"$path/df-v${m.dfV}")
-                .filter(if (touched.isEmpty) lit(false)
-                  else col("bucket").isin(touched: _*))
+                .filter(inBuckets(touched))
                 .drop("bucket")
               val merged = oldDf.join(hinted(aDf), Seq("word"), "left")
                 .select(col("word"),
@@ -1298,8 +849,9 @@ object Retrieval {
    * indexed set and the N/sum_dl deltas come from the doc-registry
    * sidecar, never a posting scan), decrement the
    * touched words' df (removal-vocab-sized compute over one pruned
-   * posting pass), decrement N/sum_dl exactly. Ids absent from the
-   * index are no-ops ([[bm25Forget]] parity); ids ALREADY tombstoned
+   * posting pass), decrement N/sum_dl exactly — the live rows
+   * ([[bm25SidecarRows]]) equal a fresh build over the reduced corpus.
+   * Ids absent from the index are no-ops; ids ALREADY tombstoned
    * fail loud — double-forgetting would double-decrement the
    * statistics. Tombstones accumulate; [[bm25SidecarCompact]] purges.
    */
@@ -1357,7 +909,7 @@ object Retrieval {
         val touched = touchedBuckets(rDf.select("word"), m.buckets)
         val decremented = spark.read.schema(SidecarDfSchema)
           .parquet(s"$path/df-v${m.dfV}")
-          .filter(if (touched.isEmpty) lit(false) else col("bucket").isin(touched: _*))
+          .filter(inBuckets(touched))
           .drop("bucket")
           .join(hinted(rDf), Seq("word"), "left")
           .select(col("word"),
@@ -1459,8 +1011,10 @@ object Retrieval {
    * carrying the current df sidecar and stats over unchanged — the
    * full-rewrite cost the per-drop grows and per-takedown forgets
    * deferred, paid once when tombstone volume or generation count
-   * warrants it. Write-fresh-and-flip-a-pointer, like
-   * [[bm25AppendDir]].
+   * warrants it. Write-fresh-and-flip-a-pointer: an `outPath` that
+   * resolves to the source (trailing slash, relative spelling, symlink)
+   * is refused — an in-place overwrite would delete the layout while
+   * the rewrite still reads it.
    */
   def bm25SidecarCompact(
     spark: SparkSession,
@@ -1478,21 +1032,11 @@ object Retrieval {
       s"bm25SidecarCompact: outPath resolves to the source path ($path) - " +
         "write fresh and flip a pointer")
     val m = readSidecarMeta(spark, path)
-    val live = sidecarRemoved(spark, path, m).fold(
-      readSidecarPostings(spark, path, m)) { rm =>
-      val r = rm.select(col("doc_id").as("__rm_id"))
-      readSidecarPostings(spark, path, m)
-        .join(broadcast(r), col("doc_id") === col("__rm_id"), "left_anti")
-    }
+    val live = liveSidecarPostings(spark, path, m)
     // the registry compacts the same way: live rows only — tombstoned
     // ids lose their registry row here, which is what re-opens their
     // ids for a legitimate later append
-    val liveReg = sidecarRemoved(spark, path, m).fold(
-      readSidecarRegistry(spark, path, m)) { rm =>
-      val r = rm.select(col("doc_id").as("__rm_id"))
-      readSidecarRegistry(spark, path, m)
-        .join(broadcast(r), col("doc_id") === col("__rm_id"), "left_anti")
-    }
+    val liveReg = minusTombstones(spark, path, m, readSidecarRegistry(spark, path, m))
     // postings, registry, and df carry-over read disjoint sources and
     // write disjoint targets — overlapped (guide §2.6)
     graft.GraftSession.runConcurrently(Seq(
@@ -1510,23 +1054,31 @@ object Retrieval {
       SidecarMeta(m.nDocs, m.sumDl, gens = Seq(1), dfV = 1, rmV = 0, m.buckets))
   }
 
-  /** Top-k per query over the persisted index: [[bm25ScoresAgainst]]
-    * + the [[bm25TopK]] WindowGroupLimit ranking. */
-  def bm25TopKAgainst(
-    index: DataFrame,
-    queries: DataFrame,
-    queryIdCol: String,
-    queryTextCol: String,
-    k: Int = 10,
-    k1: Double = 1.2,
-    b: Double = 0.75
-  ): DataFrame = {
-    require(k >= 1, s"k must be >= 1: $k")
-    bm25ScoresAgainst(index, queries, queryIdCol, queryTextCol, k1, b)
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
+  /**
+   * The sidecar layout's live index as denormalized
+   * `(word, doc_id, tf, dl, df, n_docs, avgdl, sum_dl)` rows — one per
+   * live posting (tombstones anti-joined), NULL-word registry sentinels
+   * included with `df` 0, each joined to the current df table, with
+   * `n_docs`/`sum_dl` from the metadata row and
+   * `avgdl = sum_dl / n_docs` (0.0 for an empty corpus). Every lifecycle
+   * contract is a row equality here: a grow, a forget, a merge or a
+   * compaction must read out exactly what a fresh [[bm25SidecarWrite]]
+   * over the same live corpus reads out — checkable without storing the
+   * statistics a second time. A full read (every posting generation):
+   * a verification surface, not a probe path.
+   */
+  private[graft] def bm25SidecarRows(spark: SparkSession, path: String): DataFrame = {
+    val m = readSidecarMeta(spark, path)
+    val dfT = spark.read.schema(SidecarDfSchema)
+      .parquet(s"$path/df-v${m.dfV}").drop("bucket")
+    // only a sentinel lacks a df row; a real word missing one stays
+    // NULL so a df/postings mismatch surfaces instead of reading as 0
+    liveSidecarPostings(spark, path, m)
+      .join(dfT, Seq("word"), "left")
+      .select(col("word"), col("doc_id"), col("tf"), col("dl"),
+        when(col("word").isNull, lit(0L)).otherwise(col("df")).as("df"),
+        lit(m.nDocs).as("n_docs"), lit(m.avgdl).as("avgdl"),
+        lit(m.sumDl).as("sum_dl"))
   }
 
   /**
@@ -1547,10 +1099,7 @@ object Retrieval {
     b: Double = 0.75
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    bm25Scores(corpus, textCol, idCol, queries, queryIdCol, queryTextCol, k1, b)
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
+    rankTopK(
+      bm25Scores(corpus, textCol, idCol, queries, queryIdCol, queryTextCol, k1, b), k)
   }
 }

@@ -427,9 +427,9 @@ object SetSim {
    * drop would under-prefix old probes' completeness margin — the
    * per-row guard raises on any mismatch), and drop ids must be NEW
    * (per-doc rows: a re-added id would duplicate its rows and its
-   * matches — the [[graft.operators.Retrieval.bm25Append]] fail-loud
-   * contract, woven into a cardinality FILTER so every consumer
-   * evaluates it).
+   * matches — the [[graft.operators.Retrieval.bm25SidecarAppend]]
+   * fail-loud contract, woven into a cardinality FILTER so every
+   * consumer evaluates it).
    */
   def setSimIndexAppend(
     index: DataFrame,

@@ -187,7 +187,7 @@ object Similarity {
    * ([[graft.functions.DtwEnvelopeExpr]]) precomputed at `band`.
    * Envelopes are query-INDEPENDENT per band, so a deployment running
    * repeated [[dtwTopKPrunedOver]] probes pays the deque work once here
-   * instead of once per (query, series) pair — the bm25Index /
+   * instead of once per (query, series) pair — the bm25SidecarWrite /
    * setSimPrefixIndex / hammingBandedIndex build-once economics applied
    * to the DTW family. Per-doc rows: [[graft.operators.Forget
    * .removeIds]] on `series_id` IS the rebuild (the q_forget_ivf
@@ -743,6 +743,11 @@ object Similarity {
    * brute force over the corpus. At corpus scale run it on a
    * [[Sampling.hashSample]]d corpus and query set — recall estimated on
    * a deterministic sample, not the full 100 TB.
+   *
+   * Broadcast assumption: the IVF result (≤ |queries|·k rows) is
+   * BROADCAST into the recall join, so `queries × k` must fit the
+   * broadcast limit and driver memory — a validation-sized query set.
+   * A huge query set belongs on a sampled query set, not this helper.
    */
   def ivfRecallSummary(
     corpus: DataFrame,

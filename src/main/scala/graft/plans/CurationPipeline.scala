@@ -556,7 +556,11 @@ object CurationPipeline {
       df.observe(o, count(lit(1)).as("rows"))
     }
     val result = execute(corpus, textCol, idCol, cfg, hook)(action)
-    (result, seen.map { case (n, o) => n -> o.get("rows").asInstanceOf[Long] }.toMap)
+    // VectorMap, not toMap: an immutable default Map is a HashMap past 4
+    // entries and would lose the execution order the scaladoc promises
+    (result, seen.iterator
+      .map { case (n, o) => n -> o.get("rows").asInstanceOf[Long] }
+      .to(scala.collection.immutable.VectorMap))
   }
 
   /**

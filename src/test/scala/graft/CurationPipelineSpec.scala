@@ -195,6 +195,29 @@ class CurationPipelineSpec extends SparkSpec {
     assert(metrics("scrubbed") == 30L)
   }
 
+  test("runObserved: stage keys iterate in execution order past four stages") {
+    // an immutable default Map is a HashMap past 4 entries: the 6- and
+    // 7-stage configurations are the ones a plain toMap would scramble
+    val corpus = (0 until 24).map(i =>
+      (i.toLong, s"ordinary prose entry $i with its own distinct wording"))
+      .toDF("doc_id", "text")
+    val evalSet = Seq((900L, "ordinary prose entry 3 with its own distinct wording"))
+      .toDF("doc_id", "text")
+    val base = CurationPipeline.Config(minLineCount = 99,
+      evalSet = Some(evalSet), contaminationK = 5)
+    val (_, six) = CurationPipeline.runObserved(corpus, "text", "doc_id", base)(_.count())
+    assert(six.keys.toSeq == Seq("scrubbed", "after_exact_dedup",
+      "after_near_dedup", "after_decontamination", "after_quality", "final"),
+      six.toString)
+    val prior = CurationPipeline.exactIndex(
+      corpus.filter(col("doc_id") < 4), "text", "doc_id", base)
+    val (_, seven) = CurationPipeline.runObserved(corpus, "text", "doc_id",
+      base.copy(priorFingerprints = Some(prior)))(_.count())
+    assert(seven.keys.toSeq == Seq("scrubbed", "after_incremental_prune",
+      "after_exact_dedup", "after_near_dedup", "after_decontamination",
+      "after_quality", "final"), seven.toString)
+  }
+
   test("paragraph rule composes into scrub: banner blocks vanish before dedup") {
     val banner = "BANNER LINE A\nBANNER LINE B"
     val corpus = Seq(

@@ -255,18 +255,22 @@ class EmptyInputSpec extends SparkSpec {
     assert(Dedup.hammingNearDupsAgainstIndex(h, eh, "doc_id", "dhash", 64).count() == 0)
     assert(Dedup.hammingNearDupsAgainstIndex(eh, eh, "doc_id", "dhash", 64).count() == 0)
     // bm25 over an empty corpus: empty index; forget of nothing from it
-    val idx = graft.operators.Retrieval.bm25Index(emptyDocs, "text", "doc_id")
-    assert(idx.count() == 0)
-    assert(graft.operators.Retrieval.bm25Forget(
-      idx, Seq(1L).toDF("rid"), "rid").count() == 0)
+    // (the flat index is gone — the sidecar layout carries the same case)
+    val dir = java.nio.file.Files.createTempDirectory("empty-bm25").toString
+    graft.operators.Retrieval.bm25SidecarWrite(emptyDocs, "text", "doc_id", dir)
+    assert(graft.operators.Retrieval.bm25SidecarRows(spark, dir).count() == 0)
+    graft.operators.Retrieval.bm25SidecarForget(spark, dir, Seq(1L).toDF("rid"), "rid")
+    assert(graft.operators.Retrieval.bm25SidecarRows(spark, dir).count() == 0)
   }
 
   test("r16 operators over empty inputs yield empty results") {
     import spark.implicits._
-    // bm25 grow: empty index + empty drop = empty grown index
-    val emptyIdx = graft.operators.Retrieval.bm25Index(emptyDocs, "text", "doc_id")
-    assert(graft.operators.Retrieval.bm25Append(
-      emptyIdx, emptyDocs, "text", "doc_id").count() == 0)
+    // bm25 grow: empty index + empty drop = empty grown index (the flat
+    // index is gone — the sidecar layout carries the same case)
+    val dir = java.nio.file.Files.createTempDirectory("empty-bm25-grow").toString
+    graft.operators.Retrieval.bm25SidecarWrite(emptyDocs, "text", "doc_id", dir)
+    graft.operators.Retrieval.bm25SidecarAppend(spark, dir, emptyDocs, "text", "doc_id")
+    assert(graft.operators.Retrieval.bm25SidecarRows(spark, dir).count() == 0)
     // banded hamming artifact: empty build, empty probe both ways
     val h = Seq((1L, 5L)).toDF("doc_id", "dhash")
     val eh = h.limit(0)

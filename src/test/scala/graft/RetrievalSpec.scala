@@ -96,98 +96,102 @@ class RetrievalSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Retrieval.bm25TopK(corpus, "text", "doc_id", queries, "query_id", "qtext", k = 0)
     }
+    val dir = sidecarOf(corpus)
     intercept[IllegalArgumentException] {
-      Retrieval.bm25ScoresAgainst(
-        Retrieval.bm25Index(corpus, "text", "doc_id"),
-        queries, "query_id", "qtext", k1 = -1.0)
+      Retrieval.bm25ScoresFromSidecar(spark, dir, queries, "query_id", "qtext", k1 = -1.0)
     }
     intercept[IllegalArgumentException] {
-      Retrieval.bm25TopKAgainst(
-        Retrieval.bm25Index(corpus, "text", "doc_id"),
-        queries, "query_id", "qtext", k = 0)
+      Retrieval.bm25TopKFromSidecar(spark, dir, queries, "query_id", "qtext", k = 0)
     }
   }
 
-  private def persistedIndex(): org.apache.spark.sql.DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-bm25idx").toString
-    Retrieval.bm25Index(corpus, "text", "doc_id")
-      .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out)
+  /** A fresh stats-sidecar layout over `c` — the one persisted BM25
+    * index, and the rebuild every lifecycle result is compared to. */
+  private def sidecarOf(c: org.apache.spark.sql.DataFrame, buckets: Int = 32): String = {
+    val out = tmpDir("graft-bm25sc")
+    Retrieval.bm25SidecarWrite(c, "text", "doc_id", out, buckets)
+    out
   }
+
+  /** The layout's live rows, denormalized — canonical view with avgdl
+    * rounded (the one float; everything else is exact integer
+    * arithmetic on both paths). */
+  private def rowsOf(path: String): Set[(Option[String], Long, Long, Long, Long, Long, Double, Long)] =
+    Retrieval.bm25SidecarRows(spark, path)
+      .select(col("word"), col("doc_id"), col("tf"), col("dl").cast("long"),
+        col("df"), col("n_docs"), round(col("avgdl"), 9).as("avgdl"), col("sum_dl"))
+      .collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6), r.getLong(7)))
+      .toSet
+
+  // The tests below keep the names they had when they covered the flat
+  // parquet index and the bucket-dir index; both layouts are gone and
+  // each body now pins the same behaviour on the stats-sidecar layout.
 
   test("index probe is value-identical to the inline scores through parquet") {
-    val idx = persistedIndex()
+    // name predates the sidecar layout: the persisted probe is now bm25ScoresFromSidecar
+    val dir = sidecarOf(corpus)
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // default params and a probe-time override both match EXACTLY —
-    // identical longs through identical arithmetic, avgdl round-trips
-    // parquet bit-exactly, and k1/b live only at probe time
-    val inline0 = m(Retrieval.bm25Scores(
-      corpus, "text", "doc_id", queries, "query_id", "qtext"))
-    val probe0 = m(Retrieval.bm25ScoresAgainst(idx, queries, "query_id", "qtext"))
-    assert(probe0 == inline0)
+    // identical longs through identical arithmetic, and k1/b live only
+    // at probe time
+    assert(probeSidecar(dir) == inlineScores(corpus))
     val inlineB0 = m(Retrieval.bm25Scores(
       corpus, "text", "doc_id", queries, "query_id", "qtext", b = 0.0))
-    val probeB0 = m(Retrieval.bm25ScoresAgainst(idx, queries, "query_id", "qtext", b = 0.0))
+    val probeB0 = m(Retrieval.bm25ScoresFromSidecar(
+      spark, dir, queries, "query_id", "qtext", b = 0.0))
     assert(probeB0 == inlineB0)
     // the out-of-corpus query term (query 30) still matches nothing
-    assert(!probe0.keySet.exists(_._1 == 30L))
+    assert(!probeSidecar(dir).keySet.exists(_._1 == 30L))
   }
 
   test("bm25TopKAgainst ranks like bm25TopK") {
-    val idx = persistedIndex()
+    // bm25TopKAgainst is gone: the persisted top-k is bm25TopKFromSidecar
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "doc_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(
-      rows(Retrieval.bm25TopKAgainst(idx, queries, "query_id", "qtext", k = 1)) ==
+      rows(Retrieval.bm25TopKFromSidecar(
+        spark, sidecarOf(corpus), queries, "query_id", "qtext", k = 1)) ==
       rows(Retrieval.bm25TopK(
         corpus, "text", "doc_id", queries, "query_id", "qtext", k = 1)))
   }
 
   test("bm25Forget equals a rebuild from the reduced corpus, exactly") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2), r.getInt(3),
-        r.getLong(4), r.getLong(5), r.getDouble(6), r.getLong(7))).toSet
+    // bm25Forget is gone: bm25SidecarForget's rows must equal a fresh write
+    def forgotten(c: org.apache.spark.sql.DataFrame, ids: Long*): String = {
+      val dir = sidecarOf(c)
+      Retrieval.bm25SidecarForget(spark, dir, ids.toDF("rid"), "rid")
+      dir
+    }
     // NULL-text docs count as zero-length: they get a sentinel row too,
     // so forgetting them decrements N exactly like the rebuild
-    val nullDoc = Seq((6L, Option.empty[String])).toDF("doc_id", "text")
-    val withNull = corpus.select(col("doc_id"),
-      col("text").cast("string").as("text")).unionByName(nullDoc.toDF("doc_id", "text"))
-    val idxN = Retrieval.bm25Index(withNull, "text", "doc_id")
-    assert(rows(Retrieval.bm25Forget(idxN, Seq(6L).toDF("rid"), "rid"))
-      == rows(Retrieval.bm25Index(
-        withNull.filter(col("doc_id") =!= 6L), "text", "doc_id")))
-    val idx = Retrieval.bm25Index(corpus, "text", "doc_id")
+    val withNull = corpus.select(col("doc_id"), col("text").cast("string").as("text"))
+      .unionByName(Seq((6L, Option.empty[String])).toDF("doc_id", "text"))
+    assert(rowsOf(forgotten(withNull, 6L))
+      == rowsOf(sidecarOf(withNull.filter(col("doc_id") =!= 6L))))
     // remove doc 1 (changes df(spark), df(shuffle), df(join), N, avgdl)
-    val kept = Retrieval.bm25Forget(idx, Seq(1L).toDF("rid"), "rid")
-    val rebuilt = Retrieval.bm25Index(
-      corpus.filter(col("doc_id") =!= 1L), "text", "doc_id")
-    assert(rows(kept) == rows(rebuilt))
+    val kept = forgotten(corpus, 1L)
+    assert(rowsOf(kept) == rowsOf(sidecarOf(corpus.filter(col("doc_id") =!= 1L))))
     // removing the TOKEN-FREE doc 5 still decrements N/avgdl (the
     // sentinel row is the registry entry that makes this possible)
-    assert(rows(Retrieval.bm25Forget(idx, Seq(5L).toDF("rid"), "rid"))
-      == rows(Retrieval.bm25Index(
-        corpus.filter(col("doc_id") =!= 5L), "text", "doc_id")))
+    assert(rowsOf(forgotten(corpus, 5L))
+      == rowsOf(sidecarOf(corpus.filter(col("doc_id") =!= 5L))))
     // ids absent from the index are no-ops
-    assert(rows(Retrieval.bm25Forget(idx, Seq(99L).toDF("rid"), "rid")) == rows(idx))
+    assert(rowsOf(forgotten(corpus, 99L)) == rowsOf(sidecarOf(corpus)))
     // removing everything leaves an empty index
-    assert(Retrieval.bm25Forget(idx,
-      Seq(1L, 2L, 3L, 4L, 5L).toDF("rid"), "rid").count() == 0L)
-    // and the forgotten index still probes value-equal to inline
+    assert(rowsOf(forgotten(corpus, 1L, 2L, 3L, 4L, 5L)).isEmpty)
+    // and the forgotten layout still probes value-equal to inline
     // scoring over the reduced corpus
-    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val probed = m(Retrieval.bm25ScoresAgainst(kept, queries, "query_id", "qtext"))
-    val inline = m(Retrieval.bm25Scores(
-      corpus.filter(col("doc_id") =!= 1L), "text", "doc_id",
-      queries, "query_id", "qtext"))
-    assert(probed.keySet == inline.keySet)
-    probed.foreach { case (k, v) => assert(math.abs(v - inline(k)) < 1e-12, k.toString) }
+    assert(probeSidecar(kept) == inlineScores(corpus.filter(col("doc_id") =!= 1L)))
   }
 
   test("index stores exact postings stats; probe broadcasts terms, no sort-merge") {
-    val idx = Retrieval.bm25Index(corpus, "text", "doc_id").collect()
+    // the flat index is gone: bm25SidecarRows reads the same statistics out
+    val dir = sidecarOf(corpus)
+    val idx = Retrieval.bm25SidecarRows(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getInt(3), r.getLong(4), r.getLong(5), r.getDouble(6)))
       .toMap
@@ -195,29 +199,20 @@ class RetrievalSpec extends SparkSpec {
     // df(spark)=2 (docs 1,2); N=5 incl. the empty doc; avgdl=15/5
     assert(idx(("spark", 1L)) == ((3L, 5, 2L, 5L, 3.0)))
     assert(idx(("join", 2L)) == ((1L, 2, 2L, 5L, 3.0)))
-    val q = Retrieval.bm25ScoresAgainst(persistedIndex(), queries, "query_id", "qtext")
+    // the token-free doc is a NULL-word sentinel with df 0
+    assert(idx((null, 5L)) == ((0L, 0, 0L, 5L, 3.0)))
+    val q = Retrieval.bm25ScoresFromSidecar(spark, dir, queries, "query_id", "qtext")
     q.collect()
     val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(plan.contains("BroadcastHashJoin"), plan.take(3000))
     assert(!plan.contains("SortMergeJoin"), plan.take(3000))
   }
 
-  // ------------------------------------------ r14: partitioned layout
-
-  private def partitionedDir(buckets: Int = 16): String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-bm25part").toString
-    Retrieval.bm25IndexWrite(
-      Retrieval.bm25Index(corpus, "text", "doc_id"), out, buckets)
-    out
-  }
-
   test("bm25ScoresFromDir: value-identical to the flat probe; pruning in the plan") {
-    val dir = partitionedDir()
-    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val part = Retrieval.bm25ScoresFromDir(spark, dir, queries, "query_id", "qtext")
-    assert(m(part) == m(Retrieval.bm25Scores(
-      corpus, "text", "doc_id", queries, "query_id", "qtext")))
+    // bucket-dir probe is gone: the sidecar probe carries the bucket pruning
+    val dir = sidecarOf(corpus, buckets = 16)
+    val part = Retrieval.bm25ScoresFromSidecar(spark, dir, queries, "query_id", "qtext")
+    assert(probeSidecar(dir) == inlineScores(corpus))
     // the bucket filter must reach the scan as a PARTITION filter (no
     // data filter, no full-index scan)
     part.collect()
@@ -228,183 +223,170 @@ class RetrievalSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "doc_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(rows(Retrieval.bm25TopKFromDir(spark, dir, queries, "query_id", "qtext", k = 1))
+    assert(rows(Retrieval.bm25TopKFromSidecar(spark, dir, queries, "query_id", "qtext", k = 1))
       == rows(Retrieval.bm25TopK(corpus, "text", "doc_id", queries, "query_id", "qtext", k = 1)))
   }
 
   test("bm25ScoresFromDir: all-unseen queries read nothing; sidecar is required") {
-    val dir = partitionedDir(buckets = 8)
+    // bucket-dir probe is gone: same contract on the sidecar probe and its meta file
+    val dir = sidecarOf(corpus, buckets = 8)
     val missing = Seq((9L, "zzznothere qqqnope")).toDF("query_id", "qtext")
-    assert(Retrieval.bm25ScoresFromDir(spark, dir, missing, "query_id", "qtext")
+    assert(Retrieval.bm25ScoresFromSidecar(spark, dir, missing, "query_id", "qtext")
       .count() == 0L)
-    // a directory without the sidecar fails loudly instead of guessing
-    // a modulus (a wrong guess would silently lose words)
-    val bare = java.nio.file.Files.createTempDirectory("graft-bm25bare").toString
-    Retrieval.bm25Index(corpus, "text", "doc_id")
-      .write.mode("overwrite").parquet(bare)
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25ScoresFromDir(spark, bare, queries, "query_id", "qtext")
+    // a query frame with no terms selects no bucket at all: the layout
+    // scans plan away entirely, no posting or df file opens
+    val blank = Retrieval.bm25ScoresFromSidecar(spark, dir,
+      Seq((9L, "")).toDF("query_id", "qtext"), "query_id", "qtext")
+    assert(blank.count() == 0L)
+    val scans = blank.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
-    // an EMPTY or corrupt sidecar fails with a clear message too (a
-    // single short read used to surface as an obscure IndexOutOfBounds)
-    for (junk <- Seq("", "not-a-number", "99999999999", "١٢٣")) {
+    assert(scans.isEmpty, blank.queryExecution.executedPlan.toString.take(3000))
+    // a directory without the metadata file fails loudly instead of
+    // guessing a modulus (a wrong guess would silently lose words)
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.bm25ScoresFromSidecar(spark, tmpDir("graft-bm25bare"),
+        queries, "query_id", "qtext")
+    }
+    assert(e.getMessage.contains("bm25SidecarWrite"), e.getMessage)
+    // an EMPTY or corrupt metadata file fails with a clear message too
+    for (junk <- Seq("", "not-a-number", "1,2,3")) {
       val broken = java.nio.file.Files.createTempDirectory("graft-bm25junk")
-      java.nio.file.Files.write(broken.resolve("_bm25_buckets"),
-        junk.getBytes("UTF-8"))
-      val e = intercept[IllegalArgumentException] {
-        Retrieval.bm25ScoresFromDir(spark, broken.toString, queries, "query_id", "qtext")
+      java.nio.file.Files.write(broken.resolve("_bm25_sidecar"), junk.getBytes("UTF-8"))
+      val e2 = intercept[IllegalArgumentException] {
+        Retrieval.bm25ScoresFromSidecar(spark, broken.toString, queries, "query_id", "qtext")
       }
-      assert(e.getMessage.contains("bm25IndexWrite"), e.getMessage)
+      assert(e2.getMessage.contains("malformed"), e2.getMessage)
     }
   }
 
   test("bm25ScoresFromDir: oversized query frames fail loud before the collect") {
-    val dir = partitionedDir(buckets = 8)
+    // bucket-dir probe is gone: the sidecar probe enforces the same query-term cap
+    val dir = sidecarOf(corpus, buckets = 8)
     val e = intercept[IllegalArgumentException] {
-      Retrieval.bm25ScoresFromDir(spark, dir, queries, "query_id", "qtext",
+      Retrieval.bm25ScoresFromSidecar(spark, dir, queries, "query_id", "qtext",
         maxQueryTerms = 2)
     }
     assert(e.getMessage.contains("metadata-sized"), e.getMessage)
     // at or under the cap the probe runs unchanged
-    assert(Retrieval.bm25ScoresFromDir(spark, dir, queries, "query_id", "qtext",
+    assert(Retrieval.bm25ScoresFromSidecar(spark, dir, queries, "query_id", "qtext",
       maxQueryTerms = 4).count() > 0)
   }
 
   // ------------------------------------------------------ append (row 160)
 
-  /** Canonical row view: avgdl rounded (the one float; everything else
-    * is exact integer arithmetic on both paths). */
-  private def idxRows(df: org.apache.spark.sql.DataFrame): Set[(Option[String], Long, Long, Long, Long, Long, Double, Long)] =
-    df.select(col("word"), col("doc_id"), col("tf"), col("dl").cast("long"),
-        col("df"), col("n_docs"), round(col("avgdl"), 9).as("avgdl"), col("sum_dl"))
-      .collect()
-      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6), r.getLong(7)))
-      .toSet
+  /** The even-id half grown by the odd-id half. */
+  private def grownLayout(broadcastDrop: Boolean = true): String = {
+    val dir = sidecarOf(corpus.filter($"doc_id" % 2 === 0))
+    Retrieval.bm25SidecarAppend(spark, dir, corpus.filter($"doc_id" % 2 === 1),
+      "text", "doc_id", broadcastDrop)
+    dir
+  }
 
   test("bm25Append ≡ bm25Index over the union corpus, through parquet") {
-    val out = java.nio.file.Files.createTempDirectory("graft-bm25app").toString
-    Retrieval.bm25Index(corpus.filter($"doc_id" % 2 === 0), "text", "doc_id")
-      .write.mode("overwrite").parquet(out)
-    val grown = Retrieval.bm25Append(
-      spark.read.parquet(out), corpus.filter($"doc_id" % 2 === 1),
-      "text", "doc_id")
-    assert(idxRows(grown) == idxRows(Retrieval.bm25Index(corpus, "text", "doc_id")))
+    // bm25Append/bm25Index are gone: bm25SidecarAppend's rows must equal a fresh write
+    val grown = grownLayout()
+    assert(rowsOf(grown) == rowsOf(sidecarOf(corpus)))
     // probe equality rides row equality, but pin it end to end anyway:
-    // scoring the grown index == scoring the full corpus inline
-    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> math.rint(r.getDouble(2) * 1e9))
-      .toMap
-    assert(m(Retrieval.bm25ScoresAgainst(grown, queries, "query_id", "qtext"))
-      == m(Retrieval.bm25Scores(corpus, "text", "doc_id", queries, "query_id", "qtext")))
+    // scoring the grown layout == scoring the full corpus inline
+    assert(probeSidecar(grown) == inlineScores(corpus))
     // the shuffle-join arm for giant drops is value-identical
-    val grownWide = Retrieval.bm25Append(
-      spark.read.parquet(out), corpus.filter($"doc_id" % 2 === 1),
-      "text", "doc_id", broadcastDrop = false)
-    assert(idxRows(grownWide) == idxRows(grown))
+    assert(rowsOf(grownLayout(broadcastDrop = false)) == rowsOf(grown))
   }
 
   test("bm25Append: empty index = fresh build; empty drop = no-op; sentinels ride") {
-    val empty = Retrieval.bm25Index(corpus.filter($"doc_id" < 0), "text", "doc_id")
-    assert(idxRows(Retrieval.bm25Append(empty, corpus, "text", "doc_id"))
-      == idxRows(Retrieval.bm25Index(corpus, "text", "doc_id")))
-    val full = Retrieval.bm25Index(corpus, "text", "doc_id")
-    assert(idxRows(Retrieval.bm25Append(full, corpus.filter($"doc_id" < 0), "text", "doc_id"))
-      == idxRows(full))
+    // bm25Append is gone: same three edge cases through bm25SidecarAppend
+    val empty = sidecarOf(corpus.filter($"doc_id" < 0))
+    Retrieval.bm25SidecarAppend(spark, empty, corpus, "text", "doc_id")
+    assert(rowsOf(empty) == rowsOf(sidecarOf(corpus)))
+    val full = sidecarOf(corpus)
+    val before = rowsOf(full)
+    Retrieval.bm25SidecarAppend(spark, full, corpus.filter($"doc_id" < 0), "text", "doc_id")
+    assert(rowsOf(full) == before)
     // doc 5 has empty text: appending the odd half carries its
-    // NULL-word sentinel, and N/avgdl count it (bm25Index parity is
-    // already pinned above — here just prove the sentinel is a drop row)
-    val grown = Retrieval.bm25Append(
-      Retrieval.bm25Index(corpus.filter($"doc_id" % 2 === 0), "text", "doc_id"),
-      corpus.filter($"doc_id" % 2 === 1), "text", "doc_id")
-    assert(grown.filter(col("word").isNull && col("doc_id") === 5L).count() == 1L)
+    // NULL-word sentinel, and N/avgdl count it
+    assert(Retrieval.bm25SidecarRows(spark, grownLayout())
+      .filter(col("word").isNull && col("doc_id") === 5L).count() == 1L)
   }
 
   test("bm25Append fails loud when a drop id is already indexed") {
-    val idx = Retrieval.bm25Index(corpus, "text", "doc_id")
+    // bm25Append is gone: the sidecar grow's registry guard carries the collision check
+    val dir = sidecarOf(corpus)
+    val collide = corpus.filter($"doc_id" === 2L)
     val e = intercept[Exception] {
-      Retrieval.bm25Append(idx, corpus.filter($"doc_id" === 2L), "text", "doc_id")
-        .collect()
+      Retrieval.bm25SidecarAppend(spark, dir, collide, "text", "doc_id")
     }
-    assert(e.getMessage != null && e.getMessage.contains("already indexed"),
+    assert(e.getMessage != null && e.getMessage.contains("already registered"),
       String.valueOf(e.getMessage))
     // the guard is a FILTER, so it survives column pruning: a bare
-    // count() (which reads NO columns) must still raise — a guard
-    // woven into an output column would be silently elided here
+    // count() of the guarded posting frame (which reads NO columns)
+    // must still raise — a guard woven into an output column would be
+    // silently elided here
     val e2 = intercept[Exception] {
-      Retrieval.bm25Append(idx, corpus.filter($"doc_id" === 2L), "text", "doc_id")
-        .count()
+      Retrieval.sidecarAppendPostings(spark, dir, collide, "text", "doc_id").count()
     }
-    assert(e2.getMessage != null && e2.getMessage.contains("already indexed"),
+    assert(e2.getMessage != null && e2.getMessage.contains("already registered"),
       String.valueOf(e2.getMessage))
-    // and a disjoint append still passes the guard untouched
-    assert(Retrieval.bm25Append(
-      Retrieval.bm25Index(corpus.filter($"doc_id" % 2 === 0), "text", "doc_id"),
-      corpus.filter($"doc_id" % 2 === 1), "text", "doc_id").count() > 0)
+    // the failed grow committed nothing, and a disjoint append still
+    // passes the guard untouched
+    assert(rowsOf(dir) == rowsOf(sidecarOf(corpus)))
+    assert(Retrieval.bm25SidecarRows(spark, grownLayout()).count() > 0)
   }
 
   test("bm25ScoresFromDir: maxQueryTerms bounds reject Int.MaxValue (overflow guard)") {
-    val dir = partitionedDir(buckets = 4)
+    // bucket-dir probe is gone: the sidecar probe shares the cap+1 overflow guard
+    val dir = sidecarOf(corpus, buckets = 4)
     val e = intercept[IllegalArgumentException] {
-      Retrieval.bm25ScoresFromDir(spark, dir, queries, "query_id", "qtext",
+      Retrieval.bm25ScoresFromSidecar(spark, dir, queries, "query_id", "qtext",
         maxQueryTerms = Int.MaxValue)
     }
     assert(e.getMessage.contains("maxQueryTerms"), e.getMessage)
   }
 
   test("bm25Append plan shape: 3 index passes (rewrite, pruned df lookup, 1-row peek)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-bm25plan").toString
-    Retrieval.bm25Index(corpus.filter($"doc_id" % 2 === 0), "text", "doc_id")
-      .write.mode("overwrite").parquet(out)
-    val grown = Retrieval.bm25Append(
-      spark.read.parquet(out), corpus.filter($"doc_id" % 2 === 1),
-      "text", "doc_id")
-    val plan = grown.queryExecution.optimizedPlan
-    // the scaladoc's scale-shape claim, enforced: the UNBOUNDED index
-    // passes are exactly the rewrite scan and the column-pruned old-df
-    // lookup; the stats peek appears once under each union branch but
-    // both instances sit under a limit(1) — a full-index aggregate
-    // creeping back in (the pre-review shape) fails this
-    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LogicalPlan}
-    def idxLeaves(p: LogicalPlan) = p.collectLeaves().count(l =>
-      l.toString.contains("parquet") && l.output.exists(_.name == "n_docs"))
-    val total = idxLeaves(plan)
-    val peeks = plan.collect { case l: GlobalLimit => idxLeaves(l) }.sum
-    assert(peeks == 2, s"stats peeks not limit-bounded ($peeks):\n$plan")
-    assert(total - peeks == 2,
-      s"unbounded index scans = ${total - peeks}, want 2 (rewrite + df lookup):\n$plan")
+    // bm25Append's index rewrite is gone: the sidecar grow's plan reads
+    // the doc registry and never a posting generation
+    val dir = sidecarOf(corpus.filter($"doc_id" % 2 === 0))
+    val plan = Retrieval.sidecarAppendPostings(spark, dir,
+      corpus.filter($"doc_id" % 2 === 1), "text", "doc_id").queryExecution.optimizedPlan
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val layoutDirs = plan.collectLeaves().flatMap {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location.rootPaths.map(_.getName)
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+    assert(layoutDirs.nonEmpty && layoutDirs.forall(_.startsWith("registry-g")),
+      s"append guard must read registry generations only: $layoutDirs\n$plan")
   }
 
   test("bm25AppendDir grows the partitioned layout under the source modulus") {
-    val d = corpus
-    val base = java.nio.file.Files.createTempDirectory("graft-bm25apd").toString
-    Retrieval.bm25IndexWrite(
-      Retrieval.bm25Index(d.filter($"doc_id" % 2 === 0), "text", "doc_id"),
-      base + "/v1", buckets = 8)
-    Retrieval.bm25AppendDir(spark, base + "/v1",
-      d.filter($"doc_id" % 2 === 1), "text", "doc_id", base + "/v2")
-    // the grown layout probes value-equal to the full-corpus inline
-    // scores, keeps the source's modulus, and refuses in-place growth
-    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> math.rint(r.getDouble(2) * 1e9))
-      .toMap
-    assert(m(Retrieval.bm25ScoresFromDir(spark, base + "/v2", queries, "query_id", "qtext"))
-      == m(Retrieval.bm25Scores(corpus, "text", "doc_id", queries, "query_id", "qtext")))
-    val sidecar = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(base + "/v2", "_bm25_buckets")), "UTF-8").trim
-    assert(sidecar == "8", sidecar)
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25AppendDir(spark, base + "/v2",
-        d.filter($"doc_id" < 0), "text", "doc_id", base + "/v2")
-    }
+    // bm25AppendDir is gone: a non-default sidecar modulus survives grow and merge
+    val dir = sidecarOf(corpus.filter($"doc_id" % 2 === 0), buckets = 8)
+    Retrieval.bm25SidecarAppend(spark, dir, corpus.filter($"doc_id" % 2 === 1),
+      "text", "doc_id")
+    def modulus = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(dir, "_bm25_sidecar")).trim.split(",").last
+    def bucketDirs(g: String) = new java.io.File(dir, g).listFiles()
+      .map(_.getName).filter(n => n.startsWith("bucket=") && !n.contains("DEFAULT"))
+      .map(_.stripPrefix("bucket=").toInt).toSet
+    assert(modulus == "8", modulus)
+    assert(bucketDirs("postings-g2").nonEmpty && bucketDirs("postings-g2").forall(_ < 8))
+    assert(probeSidecar(dir) == inlineScores(corpus))
+    Retrieval.bm25SidecarMergeGenerations(spark, dir, maxGenerations = 1)
+    assert(modulus == "8", modulus)
+    assert(bucketDirs("postings-g3").nonEmpty && bucketDirs("postings-g3").forall(_ < 8))
+    assert(probeSidecar(dir) == inlineScores(corpus))
+    assert(rowsOf(dir) == rowsOf(sidecarOf(corpus, buckets = 8)))
   }
 
   test("bm25Append then bm25Forget lands back on the original index") {
-    val base = Retrieval.bm25Index(corpus.filter($"doc_id" % 2 === 0), "text", "doc_id")
+    // both APIs are gone: sidecar append then forget must read out the original rows
     val drop = corpus.filter($"doc_id" % 2 === 1)
-    val roundtrip = Retrieval.bm25Forget(
-      Retrieval.bm25Append(base, drop, "text", "doc_id"), drop, "doc_id")
-    assert(idxRows(roundtrip) == idxRows(base))
+    val dir = grownLayout()
+    Retrieval.bm25SidecarForget(spark, dir, drop.select("doc_id"), "doc_id")
+    assert(rowsOf(dir) == rowsOf(sidecarOf(corpus.filter($"doc_id" % 2 === 0))))
   }
 
   // ------------------------------------------------ stats-sidecar layout
@@ -694,12 +676,10 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("bm25AppendDir: aliased outPath spellings are refused (trailing slash)") {
-    val out = tmpDir("apd-alias")
-    Retrieval.bm25IndexWrite(
-      Retrieval.bm25Index(corpus, "text", "doc_id"), out, buckets = 4)
+    // bm25AppendDir is gone: bm25SidecarCompact is the write-fresh rewrite that refuses aliases
+    val out = sidecarOf(corpus, buckets = 4)
     val e = intercept[IllegalArgumentException] {
-      Retrieval.bm25AppendDir(spark, out,
-        Seq((9L, "new doc")).toDF("doc_id", "text"), "text", "doc_id", out + "/")
+      Retrieval.bm25SidecarCompact(spark, out, out + "/")
     }
     assert(e.getMessage.contains("resolves to the source path"), e.getMessage)
   }
