@@ -90,24 +90,24 @@ object Cdc {
       .drop("__rn")
   }
 
-  private[operators] def fs(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+  /** The version pointer of a versioned table directory, read and
+    * flipped through [[IndexStore]]. */
+  private[operators] val CurrentFile = "_CURRENT"
 
+  /** The version `_CURRENT` names; None before the first publish. A
+    * pointer that is not a version number fails loud — reading some
+    * other version would serve a wrong table. */
   private[operators] def currentVersion(
-    spark: org.apache.spark.sql.SparkSession, tableDir: String): Option[Long] = {
-    val f = fs(spark, tableDir)
-    val p = new org.apache.hadoop.fs.Path(s"$tableDir/_CURRENT")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val r = new java.io.BufferedReader(new java.io.InputStreamReader(
-          in, java.nio.charset.StandardCharsets.UTF_8))
-        Some(r.readLine().trim.toLong)
-      } finally in.close()
-    }
-  }
+    spark: org.apache.spark.sql.SparkSession, tableDir: String): Option[Long] =
+    IndexStore.read(spark, tableDir, CurrentFile).map(t => t.toLongOption.getOrElse(
+      throw new IllegalStateException(
+        s"$tableDir/$CurrentFile is not a version number ('$t')")))
+
+  /** [[currentVersion]] that must exist; `hint` ends the message. */
+  private[operators] def requireVersion(
+    spark: org.apache.spark.sql.SparkSession, tableDir: String, hint: String = ""): Long =
+    currentVersion(spark, tableDir).getOrElse(
+      throw new IllegalStateException(s"no $CurrentFile pointer under $tableDir$hint"))
 
   /**
    * A continuously-maintained materialized table: wire as
@@ -141,38 +141,33 @@ object Cdc {
     require(keepVersions >= 1, s"keepVersions must be >= 1: $keepVersions")
     (batch: DataFrame, _: Long) => {
       val spark = batch.sparkSession
-      val f = fs(spark, tableDir)
       val cur = currentVersion(spark, tableDir)
       val state = cur match {
         case Some(v) => spark.read.parquet(s"$tableDir/v$v")
         case None => batch.limit(0)
       }
-      val next = cur.getOrElse(0L) + 1
-      applyState(state, batch, keyCols, seqCol, opCol)
-        .write.mode("overwrite").parquet(s"$tableDir/v$next")
-      publishVersion(spark, tableDir, next, keepVersions)
+      publishVersion(applyState(state, batch, keyCols, seqCol, opCol),
+        tableDir, cur.getOrElse(0L) + 1, keepVersions)
     }
   }
 
-  /** Flip `_CURRENT` to `next` by atomic rename (readers never see a
-    * half-written pointer) and retire versions beyond the grace window.
-    * The `v$next` directory must already be fully written. Shared by
-    * [[materializedSink]] and [[Forget.rewriteVersioned]]. */
+  /** Write `df` as `v<next>/`, then flip `_CURRENT` to it
+    * ([[IndexStore.publish]]: readers see the old or the new pointer,
+    * never a half-written version or no pointer) and retire versions
+    * beyond the grace window. Shared by [[materializedSink]] and
+    * [[Forget.initVersioned]]/[[Forget.rewriteVersioned]]. */
   private[operators] def publishVersion(
-    spark: org.apache.spark.sql.SparkSession,
+    df: DataFrame,
     tableDir: String,
     next: Long,
     keepVersions: Int
   ): Unit = {
-    val f = fs(spark, tableDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$tableDir/_CURRENT.tmp")
-    val out = f.create(tmp, true)
-    try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val ptr = new org.apache.hadoop.fs.Path(s"$tableDir/_CURRENT")
-    if (f.exists(ptr)) f.delete(ptr, false)
-    f.rename(tmp, ptr)
+    val spark = df.sparkSession
+    df.write.mode("overwrite").parquet(s"$tableDir/v$next")
+    IndexStore.publish(spark, tableDir, CurrentFile, next.toString)
     // retire superseded versions beyond the reader grace window
+    val f = new org.apache.hadoop.fs.Path(tableDir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
     var v = next - keepVersions
     while (v >= 1 && f.exists(new org.apache.hadoop.fs.Path(s"$tableDir/v$v"))) {
       f.delete(new org.apache.hadoop.fs.Path(s"$tableDir/v$v"), true)
@@ -188,8 +183,7 @@ object Cdc {
     seqCol: String = "seq",
     opCol: String = "op"
   ): DataFrame = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no _CURRENT pointer under $tableDir"))
+    val v = requireVersion(spark, tableDir)
     spark.read.parquet(s"$tableDir/v$v")
       .filter(col(opCol) =!= Delete)
       .drop(seqCol, opCol)

@@ -1956,10 +1956,9 @@ object Dedup {
   }
 
   /** Banding-parameter sidecar name (an `_`-prefixed file — Spark's
-    * readers ignore it as data). The [[graft.operators.Retrieval]]
-    * sidecar-metadata convention: a probe MUST band with the writer's
-    * bits/bands, so they are never a caller-supplied guess on the
-    * read side. */
+    * readers ignore it as data), read and published through
+    * [[IndexStore]]: a probe MUST band with the writer's bits/bands, so
+    * they are never a caller-supplied guess on the read side. */
   private val HammingBandsMetaFile = "_hamming_bands"
 
   /**
@@ -1973,7 +1972,10 @@ object Dedup {
    * carries its bucket count in its metadata row). `mode = "append"`
    * grows the artifact (new drops' band rows) and VERIFIES the sidecar
    * instead of rewriting it — appending with different banding would
-   * corrupt the key space.
+   * corrupt the key space — and refuses a directory with data files but
+   * no sidecar (a pre-banded flat hash table or a foreign dataset,
+   * whose probes would read the old flat files as NULL band rows)
+   * ([[IndexStore.writeStamped]]).
    */
   def hammingBandedIndexWrite(
     banded: DataFrame,
@@ -1983,48 +1985,8 @@ object Dedup {
     mode: String = "overwrite"
   ): Unit = {
     requireHammingBandParams(bits, bands)
-    require(mode == "overwrite" || mode == "append",
-      s"mode must be overwrite|append: '$mode'")
-    val spark = banded.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path, HammingBandsMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (mode == "append") {
-      if (fs.exists(p)) {
-        val (b0, n0) = readHammingBandMeta(spark, path)
-        require(b0 == bits && n0 == bands,
-          s"hammingBandedIndexWrite: $path was built with bits=$b0 " +
-            s"bands=$n0, append requested bits=$bits bands=$bands - " +
-            "banding params are the artifact's contract; rebuild to change them")
-      } else {
-        // a directory WITH data files but WITHOUT the sidecar is a
-        // pre-banded flat hash table or a foreign dataset — appending
-        // band-schema rows into it (and then stamping a fresh sidecar)
-        // would legitimize a mixed-schema artifact whose probes read
-        // the old flat files as NULL band rows and silently lose every
-        // prior-corpus match. Mirror the read-side readHammingBandMeta
-        // require: fail loud, name the rebuild.
-        // data = regular parquet files only, matching the diagnosis in
-        // the message: an unrelated empty subdirectory or stray
-        // non-parquet file is not a "pre-banded flat hash table" and
-        // must not block a legitimate first append
-        val dir = new org.apache.hadoop.fs.Path(path)
-        val hasData = fs.exists(dir) && fs.listStatus(dir).exists { s =>
-          val n = s.getPath.getName
-          s.isFile && n.endsWith(".parquet") &&
-            !n.startsWith("_") && !n.startsWith(".")
-        }
-        require(!hasData,
-          s"hammingBandedIndexWrite: $path has data files but no " +
-            s"$HammingBandsMetaFile sidecar - it was not written by " +
-            "hammingBandedIndexWrite (pre-banded flat hash table, or a " +
-            "foreign dataset); appending band rows would mix schemas and " +
-            "silently lose prior-corpus matches. Rebuild the artifact with " +
-            "hammingBandedIndex + mode=overwrite instead")
-      }
-    }
-    banded.write.mode(mode).parquet(path)
-    val out = fs.create(p, true)
-    try out.write(s"$bits,$bands".getBytes("UTF-8")) finally out.close()
+    IndexStore.writeStamped(banded, path, HammingBandsMetaFile,
+      s"$bits,$bands", mode, "hammingBandedIndexWrite")
   }
 
   /** Read a [[hammingBandedIndexWrite]] sidecar back as (bits, bands).
@@ -2035,27 +1997,51 @@ object Dedup {
     spark: org.apache.spark.sql.SparkSession,
     path: String
   ): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(path, HammingBandsMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"$path has no $HammingBandsMetaFile sidecar - either it was not " +
-        "written by hammingBandedIndexWrite, or it is a pre-banded flat " +
-        "(id, hash) table: rebuild the artifact with bandedMediaIndex / " +
-        "hammingBandedIndex + hammingBandedIndexWrite")
-    val in = fs.open(p)
-    val text = try {
-      val buf = new Array[Byte](32)
-      val outBuf = new java.io.ByteArrayOutputStream(32)
-      var n = in.read(buf)
-      while (n > 0) { outBuf.write(buf, 0, n); n = in.read(buf) }
-      new String(outBuf.toByteArray, "UTF-8").trim
-    } finally in.close()
+    val text = IndexStore.read(spark, path, HammingBandsMetaFile).getOrElse(
+      throw new IllegalArgumentException(
+        s"$path has no $HammingBandsMetaFile sidecar - either it was not " +
+          "written by hammingBandedIndexWrite, or it is a pre-banded flat " +
+          "(id, hash) table: rebuild the artifact with bandedMediaIndex / " +
+          "hammingBandedIndex + hammingBandedIndexWrite"))
     val parts = text.split(",", -1)
     require(parts.length == 2 && parts.forall(s =>
         s.nonEmpty && s.length <= 2 && s.forall(c => c >= '0' && c <= '9')),
       s"$path/$HammingBandsMetaFile is not 'bits,bands' ('$text') - " +
         "was it written by hammingBandedIndexWrite?")
     (parts(0).toInt, parts(1).toInt)
+  }
+
+  /** The prior side of a stream sink that grows a
+    * [[hammingBandedIndexWrite]] directory of 64-bit hashes at `bands`;
+    * None before the first batch. The sidecar pins the banding contract
+    * across the stream's whole life (a pre-banded-era flat table or a
+    * foreign dataset fails LOUD naming the rebuild). Rows keyed by
+    * `batchIds` (column `__bid`) are dropped: under the globally-unique-id
+    * contract they can only be a replayed batch's prior-attempt append.
+    * The schema is pinned, not inferred: a first batch whose survivors
+    * were all undecodable leaves a data-file-less directory, where an
+    * empty artifact is correct. */
+  private[graft] def bandedStreamPrior(
+    spark: org.apache.spark.sql.SparkSession,
+    path: String,
+    bands: Int,
+    batchIds: DataFrame,
+    what: String
+  ): Option[DataFrame] = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    if (!hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)) None
+    else {
+      val (mBits, mBands) = readHammingBandMeta(spark, path)
+      require(mBits == 64 && mBands == bands,
+        s"$what: $path was built with bits=$mBits bands=$mBands but is " +
+          s"configured bands=$bands over 64-bit hashes - banding params are " +
+          "the artifact's contract; restart with matching bands or rebuild " +
+          "the artifact")
+      Some(spark.read
+        .schema("band INT, band_key BIGINT, index_id BIGINT, index_hash BIGINT")
+        .parquet(path)
+        .join(broadcast(batchIds), col("index_id") === col("__bid"), "left_anti"))
+    }
   }
 
   /**
@@ -2093,16 +2079,7 @@ object Dedup {
     maxBucket: Option[Int] = DefaultMaxBucket,
     metricPrefix: String = "banded_recap"
   ): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def resolved(s: String): org.apache.hadoop.fs.Path = {
-      val raw = new org.apache.hadoop.fs.Path(s)
-      val fs = raw.getFileSystem(hconf)
-      try fs.resolvePath(raw)
-      catch { case _: java.io.FileNotFoundException => fs.makeQualified(raw) }
-    }
-    require(resolved(outPath) != resolved(path),
-      s"recapBandedIndexDir: outPath resolves to the source path ($path) - " +
-        "write fresh and flip a pointer")
+    IndexStore.requireFreshOut(spark, path, outPath, "recapBandedIndexDir")
     val (bits, bands) = readHammingBandMeta(spark, path)
     hammingBandedIndexWrite(
       recapBandedIndex(spark.read.parquet(path), maxBucket, metricPrefix),

@@ -49,10 +49,11 @@ import graft.functions.Hashing
  *
  * Versioning: indexes live in files, and a forget must be atomic for
  * concurrent readers — [[rewriteVersioned]] wraps any rewrite in the
- * [[Cdc.materializedSink]] convention (`v<N>/` parquet + `_CURRENT`
- * pointer flipped by atomic rename, prior versions kept for a reader
- * grace window), so a probe running mid-forget reads a complete old
- * version, never a half-deleted directory.
+ * [[Cdc.materializedSink]] convention (`v<N>/` parquet + a `_CURRENT`
+ * pointer, prior versions kept for a reader grace window). The pointer
+ * is read and flipped through [[IndexStore]] (temp-write +
+ * overwrite-rename), so a probe running mid-forget reads a complete old
+ * version, never a half-deleted directory or a missing pointer.
  */
 object Forget {
 
@@ -213,18 +214,15 @@ object Forget {
     * (`v1/` + `_CURRENT`) — the entry point of the versioned-forget
     * lifecycle. */
   def initVersioned(index: DataFrame, dir: String, keepVersions: Int = 2): Long = {
-    val spark = index.sparkSession
-    require(Cdc.currentVersion(spark, dir).isEmpty,
-      s"initVersioned: $dir already has a _CURRENT pointer — use rewriteVersioned")
-    index.write.mode("overwrite").parquet(s"$dir/v1")
-    Cdc.publishVersion(spark, dir, 1L, keepVersions)
+    require(Cdc.currentVersion(index.sparkSession, dir).isEmpty,
+      s"initVersioned: $dir already has a ${Cdc.CurrentFile} pointer — use rewriteVersioned")
+    Cdc.publishVersion(index, dir, 1L, keepVersions)
     1L
   }
 
   /** The live index version (follows `_CURRENT`). */
   def readCurrent(spark: SparkSession, dir: String): DataFrame = {
-    val v = Cdc.currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no _CURRENT pointer under $dir"))
+    val v = Cdc.requireVersion(spark, dir)
     spark.read.parquet(s"$dir/v$v")
   }
 
@@ -242,13 +240,9 @@ object Forget {
     dir: String,
     keepVersions: Int = 2
   )(rewrite: DataFrame => DataFrame): Long = {
-    val cur = Cdc.currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no _CURRENT pointer under $dir — publish with initVersioned first"))
+    val cur = Cdc.requireVersion(spark, dir, " — publish with initVersioned first")
     val next = cur + 1
-    rewrite(spark.read.parquet(s"$dir/v$cur"))
-      .write.mode("overwrite").parquet(s"$dir/v$next")
-    Cdc.publishVersion(spark, dir, next, keepVersions)
+    Cdc.publishVersion(rewrite(spark.read.parquet(s"$dir/v$cur")), dir, next, keepVersions)
     next
   }
 }

@@ -565,40 +565,16 @@ object Multimodal {
       val hashes = hashOf(batch).toDF("doc_id", "__mh")
         .filter(col("__mh").isNotNull).persist()
       try {
-        val hp = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val crossMatched =
-          if (!fs.exists(hp)) spark.range(0).select(col("id").as("doc_id"))
-          else {
-            // the sidecar check fails LOUD on a pre-banded-era flat
-            // (doc_id, hash) table or a foreign dataset (rebuild with
-            // bandedMediaIndexWrite), and pins the banding contract
-            // across the stream's whole life
-            val (mBits, mBands) = Dedup.readHammingBandMeta(spark, indexDir)
-            require(mBits == 64 && mBands == bands,
-              s"$what: $indexDir was built with " +
-                s"bits=$mBits bands=$mBands but this sink is configured " +
-                s"bands=$bands over 64-bit hashes - banding params are " +
-                "the artifact's contract; restart with matching bands " +
-                "or rebuild the artifact")
-            // replay idempotency: drop ALL index rows keyed by this
-            // batch's ids — prior-attempt appends, never real dups
-            // (see the retry contract above). The schema is pinned
-            // (not inferred): a first batch whose survivors were all
-            // undecodable leaves a data-file-less directory, and
-            // inference would crash where an empty artifact is correct
-            val idx = spark.read
-              .schema("band INT, band_key BIGINT, index_id BIGINT, " +
-                "index_hash BIGINT")
-              .parquet(indexDir)
-              .join(
-                broadcast(hashes.select(col("doc_id").as("__bid"))),
-                col("index_id") === col("__bid"), "left_anti")
-            Dedup.hammingMatchesAgainstBanded(
-                hashes, idx, "doc_id", "__mh", 64, maxHamming, bands,
-                maxBucket, metricPrefix = metricPrefix)
-              .select(col("batch_id").as("doc_id")).distinct()
-          }
+        // replay idempotency: the prior drops ALL index rows keyed by
+        // this batch's ids — prior-attempt appends, never real dups
+        // (see the retry contract above)
+        val crossMatched = Dedup.bandedStreamPrior(spark, indexDir, bands,
+            hashes.select(col("doc_id").as("__bid")), what)
+          .map(idx => Dedup.hammingMatchesAgainstBanded(
+              hashes, idx, "doc_id", "__mh", 64, maxHamming, bands,
+              maxBucket, metricPrefix = metricPrefix)
+            .select(col("batch_id").as("doc_id")).distinct())
+          .getOrElse(spark.range(0).select(col("id").as("doc_id")))
         val fresh = hashes.join(crossMatched, Seq("doc_id"), "left_anti")
         val losers = Dedup.hammingNearDups(fresh, "doc_id", "__mh", 64,
             maxHamming, bands, maxBucket)

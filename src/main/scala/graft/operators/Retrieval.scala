@@ -180,11 +180,11 @@ object Retrieval {
   //
   // The `_bm25_sidecar` metadata file is the PUBLICATION POINT: every
   // mutation first commits its new generation/version directories,
-  // then flips the metadata with an overwrite-rename (one FS operation
-  // where the filesystem supports it — POSIX and HDFS do; filesystems
-  // without FileContext fall back to delete+rename and accept a
-  // momentary not-found window). A crash mid-grow leaves orphan dirs
-  // and an unchanged pointer — readers never observe new postings
+  // then flips the metadata through `IndexStore.publish` (an
+  // overwrite-rename: one FS operation where the filesystem supports
+  // it — POSIX and HDFS do; filesystems without FileContext fall back
+  // to delete+rename and accept a momentary not-found window). A
+  // crash mid-grow leaves orphan dirs and an unchanged pointer — readers never observe new postings
   // with stale statistics. Superseded df/tombstone versions are
   // garbage-collected ONE MUTATION LATE (a one-version grace window):
   // a probe that loaded the metadata just before a flip finishes
@@ -222,18 +222,10 @@ object Retrieval {
     def avgdl: Double = if (nDocs == 0L) 0.0 else sumDl.toDouble / nDocs
   }
 
-  private def sidecarMetaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, SidecarMetaFile)
-
   private def readSidecarMeta(spark: SparkSession, path: String): SidecarMeta = {
-    val p = sidecarMetaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"$path has no $SidecarMetaFile metadata - was it written by bm25SidecarWrite?")
-    val in = fs.open(p)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-      finally in.close()
+    val text = IndexStore.read(spark, path, SidecarMetaFile).getOrElse(
+      throw new IllegalArgumentException(
+        s"$path has no $SidecarMetaFile metadata - was it written by bm25SidecarWrite?"))
     val parts = text.split(",")
     require(parts.length == 6,
       s"$path/$SidecarMetaFile is malformed ('$text') - expected " +
@@ -250,44 +242,11 @@ object Retrieval {
       gens, parts(3).toInt, parts(4).toInt, parts(5).toInt)
   }
 
-  /** Commit point of every sidecar-layout mutation: temp-write +
-    * OVERWRITE-rename (one FS operation where the filesystem supports
-    * it), so a racing reader sees the old metadata or the new metadata
-    * — never a missing file, which the old delete-then-rename spelling
-    * exposed for the instant between its two operations. */
+  /** Commit point of every sidecar-layout mutation ([[IndexStore.publish]]). */
   private def writeSidecarMeta(
-    spark: SparkSession, path: String, m: SidecarMeta): Unit = {
-    val p = sidecarMetaPath(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(
-      path, s".$SidecarMetaFile.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"${m.nDocs},${m.sumDl},g${m.gens.mkString(".")},${m.dfV},${m.rmV},${m.buckets}"
-        .getBytes("UTF-8"))
-    finally out.close()
-    try {
-      org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      // ChecksumFileSystem hygiene: the FileContext rename goes through
-      // the RAW fs, which moves the data file but never checksum
-      // sidecars — a stale `.crc` for the destination (written by a
-      // pre-overwrite-rename writer whose checksummed rename carried it
-      // along) would fail every later read against the NEW bytes, and
-      // the tmp's own `.crc` would leak one orphan per mutation.
-      // Best-effort drop of both.
-      fs.delete(new org.apache.hadoop.fs.Path(path, s".$SidecarMetaFile.crc"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(path, s".${tmp.getName}.crc"), false)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // no FileContext binding for this FS: fall back to the
-        // two-operation replace (documented not-found window)
-        fs.delete(p, false)
-        require(fs.rename(tmp, p),
-          s"bm25 sidecar: could not publish $SidecarMetaFile under $path")
-    }
-  }
+    spark: SparkSession, path: String, m: SidecarMeta): Unit =
+    IndexStore.publish(spark, path, SidecarMetaFile,
+      s"${m.nDocs},${m.sumDl},g${m.gens.mkString(".")},${m.dfV},${m.rmV},${m.buckets}")
 
   private def postingPaths(path: String, m: SidecarMeta): Seq[String] =
     m.gens.map(g => s"$path/postings-g$g")
@@ -1021,16 +980,7 @@ object Retrieval {
     path: String,
     outPath: String
   ): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def resolved(s: String): org.apache.hadoop.fs.Path = {
-      val raw = new org.apache.hadoop.fs.Path(s)
-      val fs = raw.getFileSystem(hconf)
-      try fs.resolvePath(raw)
-      catch { case _: java.io.FileNotFoundException => fs.makeQualified(raw) }
-    }
-    require(resolved(outPath) != resolved(path),
-      s"bm25SidecarCompact: outPath resolves to the source path ($path) - " +
-        "write fresh and flip a pointer")
+    IndexStore.requireFreshOut(spark, path, outPath, "bm25SidecarCompact")
     val m = readSidecarMeta(spark, path)
     val live = liveSidecarPostings(spark, path, m)
     // the registry compacts the same way: live rows only — tombstoned

@@ -209,16 +209,18 @@ object Similarity {
   }
 
   /** Band-parameter sidecar name (`_`-prefixed: invisible to plain
-    * parquet reads) — the [[graft.operators.Dedup]] `_hamming_bands`
-    * doctrine: a probe MUST use the writer's band (envelopes at a
-    * different band are a different bound), so it is never a
-    * caller-supplied guess on the read side. */
+    * parquet reads), read and published through [[IndexStore]]: a
+    * probe MUST use the writer's band (envelopes at a different band
+    * are a different bound), so it is never a caller-supplied guess on
+    * the read side. */
   private val DtwBandMetaFile = "_dtw_band"
 
   /** Persist a [[dtwEnvelopeIndex]] with its band in a self-describing
     * `_dtw_band` sidecar. `mode = "append"` grows the artifact by a
     * drop's rows and VERIFIES the sidecar instead of rewriting it —
-    * mixed-band envelopes would silently loosen or break the bound. */
+    * mixed-band envelopes would silently loosen or break the bound —
+    * and refuses a data directory without one
+    * ([[IndexStore.writeStamped]]). */
   def dtwEnvelopeIndexWrite(
     index: DataFrame,
     path: String,
@@ -226,21 +228,8 @@ object Similarity {
     mode: String = "overwrite"
   ): Unit = {
     require(band >= 0, s"band must be >= 0: $band")
-    require(mode == "overwrite" || mode == "append",
-      s"mode must be overwrite|append: '$mode'")
-    val spark = index.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path, DtwBandMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (mode == "append" && fs.exists(p)) {
-      val b0 = readDtwBandMeta(spark, path)
-      require(b0 == band,
-        s"dtwEnvelopeIndexWrite: $path was built with band=$b0, append " +
-          s"requested band=$band - the band is the artifact's contract; " +
-          "rebuild to change it")
-    }
-    index.write.mode(mode).parquet(path)
-    val out = fs.create(p, true)
-    try out.write(band.toString.getBytes("UTF-8")) finally out.close()
+    IndexStore.writeStamped(index, path, DtwBandMetaFile, band.toString,
+      mode, "dtwEnvelopeIndexWrite")
   }
 
   /** Read a [[dtwEnvelopeIndexWrite]] sidecar back. Fails LOUD when
@@ -249,20 +238,11 @@ object Similarity {
     spark: org.apache.spark.sql.SparkSession,
     path: String
   ): Int = {
-    val p = new org.apache.hadoop.fs.Path(path, DtwBandMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"$path has no $DtwBandMetaFile sidecar - it was not written by " +
-        "dtwEnvelopeIndexWrite; rebuild the artifact with dtwEnvelopeIndex " +
-        "+ dtwEnvelopeIndexWrite")
-    val in = fs.open(p)
-    val text = try {
-      val buf = new Array[Byte](16)
-      val outBuf = new java.io.ByteArrayOutputStream(16)
-      var n = in.read(buf)
-      while (n > 0) { outBuf.write(buf, 0, n); n = in.read(buf) }
-      new String(outBuf.toByteArray, "UTF-8").trim
-    } finally in.close()
+    val text = IndexStore.read(spark, path, DtwBandMetaFile).getOrElse(
+      throw new IllegalArgumentException(
+        s"$path has no $DtwBandMetaFile sidecar - it was not written by " +
+          "dtwEnvelopeIndexWrite; rebuild the artifact with dtwEnvelopeIndex " +
+          "+ dtwEnvelopeIndexWrite"))
     require(text.nonEmpty && text.length <= 9 &&
         text.forall(c => c >= '0' && c <= '9'),
       s"$path/$DtwBandMetaFile is not a band int ('$text') - was it " +

@@ -729,31 +729,12 @@ object CurationPipeline {
           col(payloadCol).as(payloadCol))
           .filter(col(payloadCol).isNotNull)
       }
-      def mediaPriorFor(what: String, sub: String, bands: Int): Option[DataFrame] = {
-        val p = s"$indexDir/$sub"
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(hp)) None
-        else {
-          // sidecar pins the banding contract across the stream's life
-          // (the mediaDedupStreamSink guard); the anti-join on this
-          // batch's ids makes replays after a failed checkpoint commit
-          // see exactly the first attempt's index state
-          val (mBits, mBands) = Dedup.readHammingBandMeta(spark, p)
-          require(mBits == 64 && mBands == bands,
-            s"streamingSink: $p was built with bits=$mBits " +
-              s"bands=$mBands but ${what}Dedup is configured bands=$bands " +
-              "- banding params are the artifact's contract")
-          Some(spark.read
-            .schema("band INT, band_key BIGINT, index_id BIGINT, index_hash BIGINT")
-            .parquet(p)
-            .join(
-              broadcast(batch.select(
-                integralIdCast(col(idCol), idType, "streamingSink")
-                  .as("__bid")).distinct()),
-              col("index_id") === col("__bid"), "left_anti"))
-        }
-      }
+      // the anti-join on this batch's ids makes replays after a failed
+      // checkpoint commit see exactly the first attempt's index state
+      def mediaPriorFor(what: String, sub: String, bands: Int): Option[DataFrame] =
+        Dedup.bandedStreamPrior(spark, s"$indexDir/$sub", bands,
+          batch.select(integralIdCast(col(idCol), idType, "streamingSink")
+            .as("__bid")).distinct(), s"streamingSink (${what}Dedup)")
       // REPLAY idempotence (the mediaDedupStreamSink contract, applied
       // to every index this sink grows): drop prior-index rows keyed by
       // THIS batch's ids before pruning against them — under the

@@ -1228,6 +1228,30 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.readHammingBandMeta(spark, empty) == ((64, 8)))
   }
 
+  test("hammingBandedIndexWrite append leaves an unchanged _hamming_bands untouched") {
+    import spark.implicits._
+    val idx = (0 until 10).map(i => (i.toLong, i.toLong * 7919)).toDF("id", "h")
+    val out = java.nio.file.Files
+      .createTempDirectory("graft-banded-stamp").toString
+    Dedup.hammingBandedIndexWrite(
+      Dedup.hammingBandedIndex(idx, "id", "h", bits = 64, bands = 4),
+      out, bits = 64, bands = 4)
+    val stamp = new org.apache.hadoop.fs.Path(out, "_hamming_bands")
+    val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(out, "_hamming_bands"))
+    fs.setTimes(stamp, 0L, -1L)
+    Dedup.hammingBandedIndexWrite(
+      Dedup.hammingBandedIndex(Seq((100L, 3L)).toDF("id", "h"), "id", "h",
+        bits = 64, bands = 4),
+      out, bits = 64, bands = 4, mode = "append")
+    // a racing probe must never see the stamp truncated mid-rewrite
+    assert(fs.getFileStatus(stamp).getModificationTime == 0L)
+    assert(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(out, "_hamming_bands")).toSeq == before.toSeq)
+    assert(spark.read.parquet(out).select("index_id").distinct().count() == 11L)
+  }
+
   test("winnowIndexAppend: union == rebuild; (k, w) and id guards fail loud") {
     import spark.implicits._
     val a = Seq((1L, "the quick brown fox jumps over the lazy dog"),

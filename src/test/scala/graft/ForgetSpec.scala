@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Forget}
+import graft.operators.{Cdc, Dedup, Forget}
 
 class ForgetSpec extends SparkSpec {
   import spark.implicits._
@@ -113,6 +113,41 @@ class ForgetSpec extends SparkSpec {
       Forget.rewriteVersioned(spark, dir)(identity)
     }
     intercept[IllegalStateException] { Forget.readCurrent(spark, dir) }
+  }
+
+  test("_CURRENT pointer: malformed fails loud, publishes leave no tmp files, " +
+    "a checksummed-era .crc is dropped") {
+    val idx = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "payload")
+    val dir = java.nio.file.Files.createTempDirectory("graft-forget-ptr").toString
+    Forget.initVersioned(idx, dir)
+    val ptr = new org.apache.hadoop.fs.Path(dir, "_CURRENT")
+    val fs = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def writePointer(text: String): Unit = {
+      // through the CHECKSUM fs, as a pre-overwrite-rename writer did
+      val os = fs.create(ptr, true)
+      try os.write(text.getBytes("UTF-8")) finally os.close()
+    }
+    // an empty or non-numeric pointer names _CURRENT, never NPE/NFE
+    for (bad <- Seq("", "  ", "v2", "1x")) {
+      writePointer(bad)
+      val e = intercept[IllegalStateException] { Forget.readCurrent(spark, dir) }
+      assert(e.getMessage.contains("_CURRENT"), e.getMessage)
+      val e2 = intercept[IllegalStateException] { Cdc.readCurrent(spark, dir) }
+      assert(e2.getMessage.contains("_CURRENT"), e2.getMessage)
+    }
+    // a checksummed rewrite leaves a `._CURRENT.crc`; the next publish
+    // drops it (it would describe the OLD bytes) and reads still work
+    writePointer("1")
+    assert(new java.io.File(dir, "._CURRENT.crc").exists())
+    for (i <- 2L to 4L)
+      assert(Forget.rewriteVersioned(spark, dir)(cur =>
+        Forget.removeIds(cur, "doc_id", Seq(i - 1).toDF("id"), "id")) === i)
+    assert(!new java.io.File(dir, "._CURRENT.crc").exists())
+    assert(Forget.readCurrent(spark, dir).select("doc_id").as[Long]
+      .collect().isEmpty)
+    val strays = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.contains("_CURRENT.tmp"))
+    assert(strays.isEmpty, strays.mkString(","))
   }
 
   test("stream-index forget equals rebuild from the reduced signature table") {

@@ -312,6 +312,44 @@ class TimeSeriesSpec extends SparkSpec {
       Similarity.readDtwBandMeta(spark, bare)
     }
     assert(e2.getMessage.contains("_dtw_band"), e2.getMessage)
+    // and the WRITE side refuses to append envelopes into that foreign
+    // directory: stamping it would legitimize a mixed-schema artifact
+    val e3 = intercept[IllegalArgumentException] {
+      Similarity.dtwEnvelopeIndexWrite(
+        Similarity.dtwEnvelopeIndex(qs, "v", "id", band = 3), bare,
+        band = 3, mode = "append")
+    }
+    assert(e3.getMessage.contains("_dtw_band"), e3.getMessage)
+    assert(spark.read.parquet(bare).columns.toSet == Set("id", "v"),
+      "refused append must leave the foreign directory untouched")
+    // appending into an EMPTY directory is a fresh build that stamps the band
+    val empty = java.nio.file.Files
+      .createTempDirectory("graft-dtw-empty").toString
+    Similarity.dtwEnvelopeIndexWrite(
+      Similarity.dtwEnvelopeIndex(qs, "v", "id", band = 3), empty,
+      band = 3, mode = "append")
+    assert(Similarity.readDtwBandMeta(spark, empty) == 3)
+  }
+
+  test("dtwEnvelopeIndexWrite append leaves an unchanged _dtw_band untouched") {
+    val corpus = (1L to 6L).map(i => (i, Seq(i.toDouble, 2.0, 3.0))).toDF("id", "v")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-dtw-stamp").toString
+    Similarity.dtwEnvelopeIndexWrite(
+      Similarity.dtwEnvelopeIndex(corpus, "v", "id", band = 2), dir, band = 2)
+    val stamp = new org.apache.hadoop.fs.Path(dir, "_dtw_band")
+    val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_dtw_band"))
+    fs.setTimes(stamp, 0L, -1L)
+    Similarity.dtwEnvelopeIndexWrite(
+      Similarity.dtwEnvelopeIndex(corpus.limit(2), "v", "id", band = 2), dir,
+      band = 2, mode = "append")
+    // a racing probe must never see the stamp truncated mid-rewrite
+    assert(fs.getFileStatus(stamp).getModificationTime == 0L)
+    assert(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_dtw_band")).toSeq == before.toSeq)
+    assert(spark.read.parquet(dir).count() == 8L)
   }
 
   test("magnitude contrast: a big-user profile ranks differently once " +
