@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -271,18 +273,16 @@ object Transformations {
    */
   def ensureArrays(fields: Set[String])(df: DataFrame): DataFrame = {
     val schema = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    fields.foldLeft(df) { (acc, field) =>
+    // one projection; ListMap keeps `fields` order for the added columns
+    df.withColumns(ListMap.from(fields.toSeq.flatMap { field =>
       schema.get(field) match {
-        case Some(_: ArrayType) => acc
+        case Some(_: ArrayType) => None
         case Some(dt) =>
-          acc.withColumn(
-            field,
-            when(col(field).isNull, array().cast(ArrayType(dt)))
-              .otherwise(array(col(field)))
-          )
+          Some(field -> when(col(field).isNull, array().cast(ArrayType(dt)))
+            .otherwise(array(col(field))))
         case None =>
-          acc.withColumn(field, array().cast(ArrayType(StringType)))
+          Some(field -> array().cast(ArrayType(StringType)))
       }
-    }
+    }))
   }
 }

@@ -1,5 +1,9 @@
 package graft.plans
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import graft.operators.Transformations
 import graft.sources.{JsonLines, PathKeys, TsvSource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -96,6 +100,13 @@ object V2F {
  * (reference: v2f/src/main/scala/.../ExtractionPipeline.scala:53-192):
  * five TSV table chains + the merged variants set, each written as compact
  * drop-null JSON lines.
+ *
+ * The six sinks run concurrently, as the branches of the reference's one
+ * Beam DAG do, so the driver's per-action work (planning, commit)
+ * overlaps other sinks' tasks instead of leaving the cores idle. The
+ * shared persists are released only after every sink has settled; a
+ * failed sink's own exception is rethrown, with any other sink failures
+ * attached as suppressed.
  */
 object ExtractionPipeline {
 
@@ -141,12 +152,6 @@ object ExtractionPipeline {
       V2F.extractAndConvert(spark, VariantEffectTranscriptConsequences, inputDir)
 
     try {
-      writeOrSkip(spark, FrequencyAnalysis, fa, outputDir)
-      writeOrSkip(spark, MetaAnalysisAncestrySpecific, maas, outputDir)
-      writeOrSkip(spark, MetaAnalysisTransEthnic, mate, outputDir)
-      writeOrSkip(spark, VariantEffectRegulatoryFeatureConsequences, verfc, outputDir)
-      writeOrSkip(spark, VariantEffectTranscriptConsequences, vetc, outputDir)
-
       val variantSources = Seq(
         FrequencyAnalysis -> fa,
         MetaAnalysisAncestrySpecific -> maas.drop("ancestry"),
@@ -154,8 +159,32 @@ object ExtractionPipeline {
       ).collect {
         case (cfg, df) if df.columns.nonEmpty => V2F.extractVariants(cfg)(df)
       }
-      if (variantSources.isEmpty) emptyOutput(spark, s"$outputDir/variants")
-      else JsonLines.write(V2F.mergeVariants(variantSources), s"$outputDir/variants")
+      val sinks: Seq[() => Unit] = Seq(
+        () => writeOrSkip(spark, FrequencyAnalysis, fa, outputDir),
+        () => writeOrSkip(spark, MetaAnalysisAncestrySpecific, maas, outputDir),
+        () => writeOrSkip(spark, MetaAnalysisTransEthnic, mate, outputDir),
+        () => writeOrSkip(spark, VariantEffectRegulatoryFeatureConsequences, verfc, outputDir),
+        () => writeOrSkip(spark, VariantEffectTranscriptConsequences, vetc, outputDir),
+        () =>
+          if (variantSources.isEmpty) emptyOutput(spark, s"$outputDir/variants")
+          else JsonLines.write(V2F.mergeVariants(variantSources), s"$outputDir/variants")
+      )
+      // Created here, so its threads inherit the caller's Spark local
+      // properties (job group, description, scheduler pool).
+      val pool = Executors.newFixedThreadPool(sinks.size)
+      val settled =
+        try sinks
+          .map(sink => pool.submit(new Callable[Unit] { def call(): Unit = sink() }))
+          .map(f => Try(f.get()))
+        finally pool.shutdown()
+      val failures = settled.collect {
+        case Failure(e: ExecutionException) if e.getCause != null => e.getCause
+        case Failure(e) => e
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
     } finally Seq(fa, maas, mate).foreach(_.unpersist())
   }
 }

@@ -3,9 +3,14 @@ package graft.sources
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * Header-TSV ingestion as a distributed Spark scan.
@@ -26,6 +31,14 @@ import org.apache.spark.sql.functions._
  * the groups by NAME (missing columns → NULL ≈ absent key). With one
  * distinct header (the overwhelmingly common case) the plan is the same
  * single distributed scan as before.
+ *
+ * The probe also supplies each group's scan schema: the header line is
+ * parsed with the scan's own `CSVOptions` and named by Spark's
+ * `CSVUtils.makeSafeHeader` (empty and duplicate cells get exactly the
+ * names inference would give them), so building the frame runs no
+ * schema-inference job. Every file's header line is still dropped by the
+ * scan (`header=true`); applying the schema positionally is exact
+ * because a group is precisely the files sharing that header line.
  *
  * Scale note: data reading stays a distributed `spark.read.csv` scan —
  * files split across executors, column pruning and pushdown as usual.
@@ -157,17 +170,41 @@ object TsvSource {
       .sortBy(_._1)
   }
 
+  /** Options of every header-TSV scan. */
+  private def csvOptions(sep: String): Map[String, String] =
+    Map("header" -> "true", "sep" -> sep, "inferSchema" -> "false")
+
+  /** The all-string schema Spark's csv inference derives from `header`,
+    * computed on the driver from the probed line instead of by a
+    * `take(1)` job. */
+  private def headerSchema(
+    spark: SparkSession,
+    header: String,
+    options: Map[String, String]
+  ): StructType = {
+    val opts = new CSVOptions(
+      options,
+      spark.conf.get(SQLConf.CSV_PARSER_COLUMN_PRUNING.key).toBoolean,
+      spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    val tokens = Option(new CsvParser(opts.asParserSettings).parseLine(header))
+      .getOrElse(Array.empty[String])
+    val names = CSVUtils.makeSafeHeader(
+      tokens, spark.conf.get(SQLConf.CASE_SENSITIVE.key).toBoolean, opts)
+    StructType(names.map(StructField(_, StringType)))
+  }
+
   /** One csv scan over files sharing a header line. */
   private def readGroup(
     spark: SparkSession,
+    header: String,
     files: Seq[String],
     sep: String,
     withPath: Boolean
   ): DataFrame = {
+    val options = csvOptions(sep)
     val raw = spark.read
-      .option("header", "true")
-      .option("sep", sep)
-      .option("inferSchema", "false")
+      .options(options)
+      .schema(headerSchema(spark, header, options))
       .csv(files: _*)
     if (withPath) raw.withColumn(PathCol, col("_metadata.file_path"))
     else raw
@@ -199,9 +236,7 @@ object TsvSource {
         // pattern so the error classes (PATH_NOT_FOUND /
         // UNABLE_TO_INFER_SCHEMA) match what callers like readGlob expect.
         val reader = spark.read
-          .option("header", "true")
-          .option("sep", sep)
-          .option("inferSchema", "false")
+          .options(csvOptions(sep))
           .option("recursiveFileLookup", recursive.toString)
         val fallback =
           globFilter.fold(reader)(g => reader.option("pathGlobFilter", g)).csv(pattern)
@@ -209,15 +244,17 @@ object TsvSource {
           fallback.withColumn(PathCol, col("_metadata.file_path"))
         else fallback
       case gs =>
-        gs.map(g => readGroup(spark, g._2, sep, withPath))
+        gs.map { case (header, fs) => readGroup(spark, header, fs, sep, withPath) }
           .reduce(_.unionByName(_, allowMissingColumns = true))
     }
     // Trim every cell; empty-after-trim -> NULL (missing), matching
-    // V2FUtils.scala:66-69.
-    raw.columns.foldLeft(raw) { (df, c) =>
-      if (c == PathCol) df
-      else df.withColumn(c, when(trim(col(c)) === "", lit(null)).otherwise(trim(col(c))))
-    }
+    // V2FUtils.scala:66-69. One projection, same column order; names are
+    // backquoted because header cells such as `p.value` are not paths.
+    raw.select(raw.columns.toSeq.map { c =>
+      val cell = col(s"`${c.replace("`", "``")}`")
+      if (c == PathCol) cell
+      else when(trim(cell) === "", lit(null)).otherwise(trim(cell)).as(c)
+    }: _*)
   }
 
   /**

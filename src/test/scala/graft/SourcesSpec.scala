@@ -124,6 +124,41 @@ class SourcesSpec extends SparkSpec {
     assert(df.select("source_file").distinct().count() == 2)
   }
 
+  test("a dotted header cell (p.value) reads back trimmed, empty cells NULL") {
+    val d = tmpDir("tsv-dotted")
+    writeFile(d, "gwas.tsv", "p.value\tname\n 0.01 \ta\n\t b \n")
+    val df = TsvSource.read(spark, d.toString + "/gwas.tsv", withPath = false)
+    assert(df.columns.toSeq == Seq("p.value", "name"))
+    val rows = df.orderBy("name").collect()
+    assert(rows.map(r => (Option(r.getString(0)), r.getString(1))).toSeq ==
+      Seq((Some("0.01"), "a"), (None, "b")))
+  }
+
+  test("the header-derived scan schema equals Spark's csv inference") {
+    val d = tmpDir("tsv-schema")
+    val headers = Seq(
+      "dup" -> "a\tb\ta",
+      "case-dup" -> "Name\tname\tx",
+      "empty-cell" -> "a\t\tc",
+      "quoted" -> "\"q,1\"\t\"b\"\tc",
+      "trailing-tab" -> "a\tb\t")
+    headers.foreach { case (name, header) =>
+      val f = writeFile(d, s"$name.tsv", s"$header\n1\t2\t3\n").toString
+      val inferred = spark.read.option("header", "true").option("sep", "\t").csv(f).schema
+      val got = TsvSource.read(spark, f).drop(TsvSource.PathCol).schema
+      assert(got == inferred, s"$name: $header")
+    }
+  }
+
+  test("read over two header groups submits no Spark job before an action") {
+    val d = tmpDir("tsv-nojobs")
+    writeFile(d, "a.tsv", "k1\tk2\nA1\tA2\n")
+    writeFile(d, "b.tsv", "k2\tk1\nB2\tB1\n")
+    val (df, jobs) = jobsDuring(TsvSource.read(spark, d.toString + "/*.tsv"))
+    assert(jobs.isEmpty, s"${jobs.size} job(s) submitted while building the frame")
+    assert(df.count() == 2)
+  }
+
   test("ancestry ID extracted from ancestry=<id> path segment") {
     val d = tmpDir("tsv-anc")
     writeFile(d, "ancestry=EU/f.tsv", "k\tv\na\t1\n")

@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for suites (one per suite, lazily created). */
@@ -16,4 +22,21 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Run `body` and return its result with the local properties of every
+    * Spark job it submitted (listener bus flushed before reading). */
+  def jobsDuring[T](body: => T): (T, Seq[Properties]) = {
+    val jobs = new ConcurrentLinkedQueue[Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).getOrElse(new Properties()))
+    }
+    assert(GraftSqlBridge.flushListenerBus(spark, 10000))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      assert(GraftSqlBridge.flushListenerBus(spark, 10000))
+      (out, jobs.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

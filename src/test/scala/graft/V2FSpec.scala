@@ -17,15 +17,14 @@ class V2FSpec extends SparkSpec {
     ()
   }
 
-  test("ExtractionPipeline end-to-end: 5 tables + merged variants as drop-null JSON") {
-    val in = Files.createTempDirectory("v2f-in")
-    val out = Files.createTempDirectory("v2f-out")
-
+  /** The five V2F tables in the reference layout; `ancestryDir` is the
+    * directory the ancestry-specific table sits in. */
+  private def writeTables(in: Path, ancestryDir: String = "ancestry=EU"): Unit = {
     write(in, "frequency-analysis/a.csv",
       "varId\tchromosome\tposition\treference\talt\teaf\tmaf\n" +
         "v1\t1\t100.0\tA\tT\t0.5\t0.25\n" +
         "v2\t2\t200\tG\tC\t\t0.125\n")
-    write(in, "meta-analysis/ancestry-specific/ancestry=EU/b.csv",
+    write(in, s"meta-analysis/ancestry-specific/$ancestryDir/b.csv",
       "varId\tchromosome\tposition\treference\talt\tpValue\tbeta\tstdErr\tn\n" +
         "v1\t1\t100.0\tA\tT\t0.01\t1.5\t0.1\t1000\n")
     write(in, "meta-analysis/trans-ethnic/c.csv",
@@ -37,6 +36,12 @@ class V2FSpec extends SparkSpec {
     write(in, "variant-effect/transcript-consequences/e.csv",
       "id\tstrand\tcanonical\tsiftScore\tsiphy29WayPi\n" +
         "v1\t1\ttrue\t0.1,.\t0.2:0.3\n")
+  }
+
+  test("ExtractionPipeline end-to-end: 5 tables + merged variants as drop-null JSON") {
+    val in = Files.createTempDirectory("v2f-in")
+    val out = Files.createTempDirectory("v2f-out")
+    writeTables(in)
 
     ExtractionPipeline.run(spark, in.toString, out.toString)
 
@@ -81,6 +86,43 @@ class V2FSpec extends SparkSpec {
     assert(variants.select("id").distinct().count() == 3)
     val v1 = variants.filter("id = 'v1'").head
     assert(v1.getAs[Long]("position") == 100L) // "100.0" trimmed to long
+  }
+
+  test("ExtractionPipeline: a failing sink rethrows its own error, not an ExecutionException") {
+    val in = Files.createTempDirectory("v2f-noanc-in")
+    val out = Files.createTempDirectory("v2f-noanc-out")
+    writeTables(in, ancestryDir = "EU")
+    val e = intercept[Throwable](ExtractionPipeline.run(spark, in.toString, out.toString))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(messages.contains("addAncestryID: no match for pattern"), messages)
+  }
+
+  test("ExtractionPipeline releases every persist after a successful and a failed run") {
+    val in = Files.createTempDirectory("v2f-ok-in")
+    writeTables(in)
+    ExtractionPipeline.run(spark, in.toString, Files.createTempDirectory("v2f-ok-out").toString)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+
+    val bad = Files.createTempDirectory("v2f-bad-in")
+    writeTables(bad, ancestryDir = "EU")
+    intercept[Throwable](ExtractionPipeline.run(
+      spark, bad.toString, Files.createTempDirectory("v2f-bad-out").toString))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("ExtractionPipeline sink jobs carry the caller's job group") {
+    val in = Files.createTempDirectory("v2f-group-in")
+    writeTables(in)
+    val out = Files.createTempDirectory("v2f-group-out")
+    spark.sparkContext.setJobGroup("v2f-test", "concurrent sinks", interruptOnCancel = false)
+    val (_, jobs) =
+      try jobsDuring(ExtractionPipeline.run(spark, in.toString, out.toString))
+      finally spark.sparkContext.clearJobGroup()
+    assert(jobs.nonEmpty)
+    assert(jobs.map(_.getProperty("spark.jobGroup.id")).forall(_ == "v2f-test"),
+      jobs.map(_.getProperty("spark.jobGroup.id")))
   }
 
   test("DatasetSpecificPipeline: JSON -> snake/rename/remove -> JSON") {
