@@ -132,8 +132,12 @@ object Contamination {
   /**
    * The decontaminated corpus: drops every document whose contamination
    * score reaches `maxContamination`. The (small) contaminated-id set
-   * anti-joins the corpus — one broadcast-able anti join, corpus not
-   * shuffled.
+   * anti-joins the corpus. Its size is unknown when the plan is made, so
+   * the anti join is planned as a sort-merge join and the corpus — full
+   * text — is shuffled on the id; AQE turns the join into a broadcast
+   * once the scores report their real size, but the corpus shuffle has
+   * been written by then. The corpus is read twice (gram scores and the
+   * anti join): pin it when its upstream is expensive.
    */
   def decontaminate(
     corpus: DataFrame,

@@ -1335,8 +1335,13 @@ object Dedup {
    * [[clusterNearDuplicates]] is the transitive alternative when true
    * cluster identity matters).
    *
-   * Scale shape: near-dup pairs (small) anti-joined against the corpus —
-   * one broadcast-able anti join, corpus never shuffled.
+   * Scale shape: near-dup pairs (small) anti-joined against the corpus.
+   * The loser set's size is unknown when the plan is made, so the anti
+   * join is planned as a sort-merge join and the corpus — full text —
+   * is shuffled on the id; AQE turns the join into a broadcast once the
+   * loser stage reports its real size, but the corpus shuffle has been
+   * written by then. The corpus is never shuffled at shingle or band
+   * granularity.
    */
   def dropNearDuplicates(
     df: DataFrame,
@@ -1365,12 +1370,17 @@ object Dedup {
    * would mangle every document's structure (same stance as
    * [[dropRepeatedLinesWithinDoc]]). Returns (doc_id, textCol).
    *
-   * Scale shape: lines join the duplicate set on their 16-byte MD5 (not
-   * the line text — boilerplate lines are long, hashes are not), the
-   * global line count partial-aggregates map-side (duplicate lines
-   * collapse before the shuffle — they are the common case this op
-   * exists for), and the rebuild is ONE regroup by doc_id with
-   * order restored from the captured line positions.
+   * Scale shape: ONE shared line exchange. The input is evaluated and
+   * its line rows (keyed by their 16-byte MD5, not the line text —
+   * boilerplate lines are long, hashes are not) are hash-partitioned on
+   * that digest exactly once; the global line count reads that exchange,
+   * and the duplicate-line drop re-reads the SAME exchange
+   * (ReuseExchange — see the pruning guards in the code) joined against
+   * the co-partitioned duplicate set, so the input's upstream chain (a
+   * scan plus every scrub projection in front of this rule) runs once
+   * rather than once per branch. The rebuild is ONE regroup by doc_id
+   * with order restored from the captured line positions, and a left
+   * join of the input's ids restores every input row.
    */
   def dropDuplicateLines(
     df: DataFrame,
@@ -1379,27 +1389,54 @@ object Dedup {
     minCount: Int = 3
   ): DataFrame = {
     require(minCount >= 2, s"minCount must be at least 2: $minCount")
+    // the explicit isNotNull is load-bearing for exchange reuse (the
+    // dropDuplicateSpans guard): the drop join below infers it on the
+    // count branch's copy of this subtree, and if it were only inferred,
+    // predicate pushdown would specialize that copy and break the
+    // ReuseExchange into a second evaluation of the input. It holds for
+    // every row (the digest of a non-NULL line), so it drops nothing
     val lines = df
       .select(col(idCol).as("doc_id"), posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
       // unhex → BINARY: a TRUE 16-byte key (hex md5 is 32 bytes + string
-      // overhead) — halves key bytes in the one corpus-wide shuffle and
-      // the dup-set join this rule pays
+      // overhead) — halves key bytes in the corpus-wide shuffle
       .withColumn("lh", unhex(md5(col("line"))))
-    val dup = lines.filter(col("line") =!= "") // blank separators exempt
+      .filter(col("lh").isNotNull)
+      .repartition(col("lh"))
+    // the global line count, read off the shared exchange. Blank
+    // separators are exempt inside the count (a filter here would be
+    // pushed below the repartition and specialize this branch), and
+    // `pos >= 0 OR doc_id IS NOT NULL` ≡ true — posexplode positions are
+    // non-negative — but it references every payload column, so column
+    // pruning cannot narrow this branch's exchange copy either. NULL-id
+    // lines count like any other
+    val dup = lines
       .groupBy("lh")
-      .agg(count(lit(1)).as("c"))
+      .agg(count(when(col("line") =!= "" &&
+        (col("pos") >= 0 || col("doc_id").isNotNull), lit(1))).as("c"))
       .filter(col("c") >= minCount)
-      .select("lh")
+      .select(col("lh"), lit(true).as("__dup"))
+    // LEFT join + isNull, not left_anti: PushDownLeftSemiAntiJoin would
+    // push an anti join below the repartition, splitting the shared
+    // exchange back into two evaluations of the input
     val rebuilt = lines
-      .join(dup, Seq("lh"), "left_anti")
-      .groupBy("doc_id")
+      .join(dup, Seq("lh"), "left")
+      .filter(col("__dup").isNull)
+      .groupBy(col("doc_id").as("__rid"))
       .agg(concat_ws("\n",
         transform(
           array_sort(collect_list(struct(col("pos"), col("line")))),
           s => s("line"))).as(textCol))
+    // the restore join is NULL-SAFE: a plain `=` would infer
+    // isnotnull(doc_id) on the rebuilt side, which pushdown lands on the
+    // drop branch's copy of the line subtree only (breaking the reuse),
+    // and an explicit filter there would stop NULL-id lines from
+    // counting. A NULL id then matches the NULL regroup, so it reads ""
+    // explicitly — what an `=` join's no-match gave it
     df.select(col(idCol).as("doc_id"))
-      .join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col(textCol), lit("")).as(textCol))
+      .join(rebuilt, col("doc_id") <=> col("__rid"), "left")
+      .select(col("doc_id"),
+        when(col("doc_id").isNull, lit(""))
+          .otherwise(coalesce(col(textCol), lit(""))).as(textCol))
   }
 
   /**
@@ -1416,11 +1453,12 @@ object Dedup {
    * population to count boilerplate over — an equi-join never matches
    * NULL keys, documented rather than accidental).
    *
-   * Scale shape: identical to [[dropDuplicateLines]] with the group
-   * riding the key — one corpus-wide shuffle on (group, 16-byte line
-   * hash), a tiny ≥minCount dup set, one anti join, one per-doc
-   * regroup. Blank separator lines are exempt; NULL text rebuilds as
-   * empty; output carries (doc_id, group, text).
+   * Scale shape: a map-side partial count shuffled on (group, 16-byte
+   * line hash), a tiny ≥minCount dup set, one anti join, one per-doc
+   * regroup — the count and the anti join each evaluate the input
+   * (unlike [[dropDuplicateLines]]' one shared line exchange). Blank
+   * separator lines are exempt; NULL text rebuilds as empty; output
+   * carries (doc_id, group, text).
    */
   def dropDuplicateLinesByGroup(
     df: DataFrame,
@@ -1472,9 +1510,10 @@ object Dedup {
    * paragraph is untouched. NULL text rebuilds as empty (the
    * [[dropDuplicateLines]] convention).
    *
-   * Scale shape: identical to [[dropDuplicateLines]] — one
-   * paragraph-keyed corpus-wide shuffle on a 16-byte binary hash, a
-   * tiny ≥minCount dup set, one anti join, one per-doc regroup.
+   * Scale shape: a map-side partial count shuffled on a 16-byte binary
+   * paragraph hash, a tiny ≥minCount dup set, one anti join, one
+   * per-doc regroup — the count and the anti join each evaluate the
+   * input (unlike [[dropDuplicateLines]]' one shared line exchange).
    */
   def dropDuplicateParagraphs(
     df: DataFrame,

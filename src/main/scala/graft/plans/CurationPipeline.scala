@@ -58,9 +58,10 @@ import graft.operators.{Contamination, Dedup, Sampling, TextAnalysis}
  *
  * Scale shape is inherited stage by stage — every stage is one of this
  * engine's audited operators; nothing here adds a shuffle of its own.
- * [[curate]] returns the lazy plan; [[run]] executes an action with the
- * multiply-consumed scrubbed intermediate persisted for exactly the
- * action's lifetime.
+ * [[curate]] returns the lazy plan; [[run]] executes an action with every
+ * frame the action consumes more than once (the scrubbed corpus, the
+ * exact-dedup survivors, and the others [[stages]] lists) persisted for
+ * exactly the action's lifetime.
  */
 object CurationPipeline {
 
@@ -402,12 +403,13 @@ object CurationPipeline {
 
   /**
    * The curated-corpus PLAN as (doc_id, textCol, quality, split) —
-   * lazy, no persistence. The scrubbed intermediate feeds several
-   * downstream stages, so evaluating this plan more than once (or once,
-   * through its internal self-joins) recomputes the text-rewriting
-   * stages; use [[run]] to execute with the intermediate persisted for
-   * exactly the duration of your action (the ExtractionPipeline
-   * lifecycle pattern, plans/V2F.scala).
+   * lazy, no persistence. Several intermediates (the scrubbed corpus,
+   * the exact-dedup survivors, …) feed more than one downstream leg, so
+   * evaluating this plan more than once (or once, through its internal
+   * self-joins) recomputes the text-rewriting and dedup stages; use
+   * [[run]] to execute with those intermediates persisted for exactly
+   * the duration of your action (the ExtractionPipeline lifecycle
+   * pattern, plans/V2F.scala).
    */
   def curate(
     corpus: DataFrame,
@@ -502,10 +504,13 @@ object CurationPipeline {
   }
 
   /**
-   * Runs the flow and your `action` (write, collect, count …) with the
-   * scrubbed intermediate persisted across all its consumers, then
-   * unpersists — persistence lives exactly as long as the action, so
-   * nothing is pinned after run returns and nothing recomputes during it.
+   * Runs the flow and your `action` (write, collect, count …) under one
+   * rule: a frame the action consumes more than once is pinned
+   * (persisted) — the scrubbed corpus, the exact-dedup survivors, the
+   * near-dup survivors when decontamination reads them, and the
+   * per-configuration frames [[stages]] lists — so each stage is
+   * evaluated once per action. Every pin is released when the action
+   * returns OR throws, so nothing stays pinned after run.
    */
   def run[T](
     corpus: DataFrame,
@@ -533,9 +538,9 @@ object CurationPipeline {
    * optional model gate), and `final` (post cap/mix/split).
    *
    * Counter placement is persist-aware: observations sit UNDER the
-   * pinned intermediates, so a multiply-consumed stage (scrub, the
-   * model-gate base, the mix input) counts once, at materialization —
-   * not once per consumer.
+   * pinned intermediates, so a multiply-consumed stage (scrub, exact
+   * dedup, the model-gate base, the mix input) counts once, at
+   * materialization — not once per consumer.
    *
    * The counters see exactly what the action CONSUMES: a full action
    * (write, count, collect) yields full stage counts, while a
@@ -1285,8 +1290,14 @@ object CurationPipeline {
   /** Stages 3-7 over the scrubbed corpus (named doc_id by stage 2);
     * `corpus`/`idCol` are the ORIGINAL input, used only to look group
     * columns back up for the cap/mix stages. `pin` is [[run]]'s
-    * persistence hook around frames the mix stage consumes twice (once
-    * eagerly for counts, once in the returned plan); [[curate]] passes
+    * persistence hook, and the rule is: a frame consumed more than once
+    * in the action is pinned. That covers `exact` (always: the near-dup
+    * arms read it several times), `near` when decontamination reads it,
+    * the soft cluster table, each media stage's input, the model-gate
+    * base, the mix input and the leak-safe split input. Under AQE a
+    * second reference to an unpinned frame recomputes it, and an
+    * exchange above a pinned one is not reused across references, so
+    * pinning is the only way such a frame runs once. [[curate]] passes
     * identity and accepts the recompute, as its laziness note says. */
   private def stages(
     scrubbed: DataFrame, textCol: String, cfg: Config,
@@ -1393,11 +1404,18 @@ object CurationPipeline {
     val best = cfg.keeper == KeepBest
     def withKeepScore(df: DataFrame): DataFrame =
       TextAnalysis.appendQuality(df, textCol, "__keep_sc")
-    val exact = observe("after_exact_dedup",
+    // every near-dup arm consumes `exact` several times (signature and
+    // verify legs, the keeper's anti-join), so it is pinned: a reference
+    // to a persisted frame becomes its own TableCacheQueryStage under
+    // AQE, and an exchange above it (this stage's window over the pinned
+    // scrub) is then never reused across references — unpinned, the
+    // exact-dedup shuffle runs once per consumer. The counter sits under
+    // the pin, so it still counts once
+    val exact = pin(observe("after_exact_dedup",
       if (best)
         Dedup.dropExactDuplicatesKeepBest(withKeepScore(fresh), textCol, "doc_id",
           "__keep_sc", cfg.tokenizer).drop("__keep_sc")
-      else Dedup.dropExactDuplicates(fresh, textCol, "doc_id", cfg.tokenizer))
+      else Dedup.dropExactDuplicates(fresh, textCol, "doc_id", cfg.tokenizer)))
     // soft arm: nobody drops — every doc carries its cluster mass
     // instead (keeper policy is moot; exact dedup above still dropped,
     // identical copies carry no diversity). The cluster MEMBER table
@@ -1503,10 +1521,12 @@ object CurationPipeline {
     val near = cfg.audioDedup.fold(nearV)(a =>
       mediaStage(nearV, "audio", a.payloads, a.payloadCol, a.idCol,
         m => graft.operators.Multimodal.audioNearDups(m, a.maxHamming, a.bands)))
-    // 5: decontamination (optional)
+    // 5: decontamination (optional) — it consumes `near` twice (gram
+    // scores and the dirty-id anti-join), so `near` is pinned and the
+    // near-dup chain (LSH band, pair and verify shuffles) runs once
     val clean = cfg.evalSet.fold(near)(ev =>
       observe("after_decontamination",
-        Contamination.decontaminate(near, ev, textCol, "doc_id",
+        Contamination.decontaminate(pin(near), ev, textCol, "doc_id",
           k = cfg.contaminationK, maxContamination = cfg.maxContamination,
           bloomPrefilter = cfg.bloomPrefilter)))
     // 6: quality gates — composite floor, plus the Gopher rule verdict

@@ -218,6 +218,36 @@ class CurationPipelineSpec extends SparkSpec {
       "after_quality", "final"), seven.toString)
   }
 
+  test("run and runObserved release every pin when the action throws") {
+    val prose = "the cat is in the hat and it is flat for all of us to see " * 2
+    val corpus = (0 until 12).map(i => (i.toLong, s"$prose item ${i % 8}"))
+      .toDF("doc_id", "text")
+    val evalSet = Seq((900L, s"$prose item 3")).toDF("doc_id", "text")
+    // the eval set makes decontamination consume `near`, so all three
+    // pins (scrub, exact, near) are live while the action runs
+    val cfg = CurationPipeline.Config(evalSet = Some(evalSet), contaminationK = 5)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var pinnedDuring = 0
+    def failing(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.write.format("noop").mode("overwrite").save()
+      pinnedDuring = spark.sparkContext.getPersistentRDDs.size - before.size
+      throw new IllegalStateException("sink failed")
+    }
+    val runs = Seq[(String, () => Unit)](
+      "run" -> (() => CurationPipeline.run(corpus, "text", "doc_id", cfg)(failing)),
+      "runObserved" -> (() =>
+        CurationPipeline.runObserved(corpus, "text", "doc_id", cfg)(failing)))
+    for ((name, body) <- runs) {
+      pinnedDuring = 0
+      val e = intercept[IllegalStateException](body())
+      assert(e.getMessage == "sink failed", name)
+      assert(pinnedDuring >= 3, s"$name: only $pinnedDuring frames pinned during the action")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        s"$name left persisted RDDs behind")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left cache entries behind")
+    }
+  }
+
   test("paragraph rule composes into scrub: banner blocks vanish before dedup") {
     val banner = "BANNER LINE A\nBANNER LINE B"
     val corpus = Seq(

@@ -430,6 +430,55 @@ class DedupSpec extends SparkSpec {
     assert(keptBlanks == Map(1L -> "a\n\nb", 2L -> "c\n\nd", 3L -> "e\n\nf", 4L -> "g\n\nh"))
   }
 
+  test("dropDuplicateLines: the shared-exchange form is value-identical to the " +
+    "count-then-anti-join form, NULL and duplicate ids included") {
+    // the two-branch formulation the shared-exchange operator replaced,
+    // kept here as the reference: a map-side count over one evaluation
+    // of the input, a left_anti drop over a second, and an `=` restore
+    def reference(df: org.apache.spark.sql.DataFrame, minCount: Int) = {
+      val lines = df
+        .select(col("doc_id"), posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
+        .withColumn("lh", unhex(md5(col("line"))))
+      val dup = lines.filter(col("line") =!= "")
+        .groupBy("lh").agg(count(lit(1)).as("c"))
+        .filter(col("c") >= minCount).select("lh")
+      val rebuilt = lines.join(dup, Seq("lh"), "left_anti")
+        .groupBy("doc_id")
+        .agg(concat_ws("\n", transform(
+          array_sort(collect_list(struct(col("pos"), col("line")))),
+          s => s("line"))).as("text"))
+      df.select(col("doc_id")).join(rebuilt, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
+    }
+    val df = Seq[(java.lang.Long, String)](
+      (1L, "keep one\nSHARED\nBOILER"),
+      (2L, "SHARED\ntail\n\n\nmore"), // blank lines are exempt
+      (2L, "second copy of id 2\nBOILER"), // duplicate id: both rows rebuild as one doc
+      (3L, "BOILER\nBOILER"), // boilerplate only
+      (null, "SHARED\nnull-id prose"), // its SHARED pushes the line to 3
+      (null, "BOILER\nanother null-id doc"),
+      (4L, null),
+      (5L, ""),
+      (6L, "\n\n"),
+      (7L, "only\nits own\nlines")
+    ).toDF("doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-dup-lines").toString
+    df.write.mode("overwrite").parquet(path)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (Option(r.get(0)), r.getString(1))).sortBy(_.toString).toSeq
+    for (input <- Seq(df, spark.read.parquet(path)); minCount <- Seq(2, 3, 4)) {
+      val got = Dedup.dropDuplicateLines(input, "text", "doc_id", minCount)
+      val want = reference(input, minCount)
+      assert(got.schema == want.schema, s"minCount=$minCount")
+      assert(rows(got) == rows(want), s"minCount=$minCount")
+    }
+    // the NULL-id doc's SHARED line is the third copy: it must count
+    val at3 = Dedup.dropDuplicateLines(df, "text", "doc_id", 3)
+      .collect().filter(!_.isNullAt(0)).map(r => r.getLong(0) -> r.getString(1))
+    assert(at3.toMap.apply(1L) == "keep one", at3.mkString("\n"))
+    assert(at3.count(_._1 == 2L) == 2)
+  }
+
   test("contamination: planted eval quote is contained; decontaminate drops it") {
     import spark.implicits._
     val evalQ = "what is the capital of france paris is the capital"

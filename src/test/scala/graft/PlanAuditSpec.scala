@@ -170,8 +170,10 @@ class PlanAuditSpec extends SparkSpec {
     val plan = graft.operators.Dedup
       .dropDuplicateLines(docs.select("doc_id", "text"), "text", "doc_id")
       .queryExecution.executedPlan.toString
-    // duplicate lines are THE common case — they must collapse map-side,
-    // so a partial count aggregate has to appear below the exchange
+    // the name predates the shared line exchange: the count is still a
+    // codegen'd count aggregate (partial + final), never a collect, but it
+    // now reads the one line exchange it shares with the drop, so both
+    // halves run after it (see the shared-exchange audit below)
     assert(plan.contains("partial_count"), plan)
     // the shuffle/join key is the BINARY 16-byte digest, not the 32-char
     // hex string (half the key bytes in the one corpus-wide shuffle)
@@ -443,6 +445,97 @@ class PlanAuditSpec extends SparkSpec {
     assert(gramExplodes == 1, s"corpus grams exploded $gramExplodes times:\n${plan.take(4000)}")
     assert("ReusedExchange.*hashpartitioning\\(g#".r.findAllIn(plan).nonEmpty,
       s"gram exchange not reused:\n${plan.take(4000)}")
+  }
+
+  test("dropDuplicateLines: the count and the drop read one shared line exchange") {
+    // a footer line every document shares, so the duplicate set is
+    // non-empty and the drop branch survives to the final plan
+    val q = Dedup.dropDuplicateLines(
+      docs.select(col("doc_id"), concat(col("text"), lit("\nshared footer")).as("text")),
+      "text", "doc_id")
+    // collect(), not a noop write: only this dataset's own QueryExecution
+    // finalizes (the dropDuplicateSpans audit's convention)
+    q.collect()
+    val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    // one corpus line explode: the input is evaluated once, and the
+    // second consumer of its line rows is a ReusedExchange (a second
+    // explode means pruning or an inferred filter specialized a branch)
+    val explodes = "Generate posexplode".r.findAllIn(plan).size
+    assert(explodes == 1, s"corpus lines exploded $explodes times:\n${plan.take(4000)}")
+    assert("ReusedExchange.*hashpartitioning\\(lh#".r.findAllIn(plan).nonEmpty,
+      s"line exchange not reused:\n${plan.take(4000)}")
+  }
+
+  test("curation run(): one exact-dedup and one LSH band exchange across the " +
+    "action's plan and every pinned plan") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+    // planted exact and near twins, so neither dedup stage is empty
+    val base = docs.select("doc_id", "text")
+    val corpus = base
+      .unionByName(base.filter(col("doc_id") % 10 === 1)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+      .unionByName(base.filter(col("doc_id") % 10 === 2)
+        .select((col("doc_id") + 2000000L).as("doc_id"),
+          concat(col("text"), lit(" appended")).as("text")))
+    val ev = base.filter(col("doc_id") % 50 === 7)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    assert(org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark, 10000))
+    spark.listenerManager.register(listener)
+    try {
+      graft.plans.CurationPipeline.run(corpus, "text", "doc_id",
+        graft.plans.CurationPipeline.Config(evalSet = Some(ev), contaminationK = 5))(
+        _.write.format("noop").mode("overwrite").save())
+      assert(org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark, 10000))
+    } finally spark.listenerManager.unregister(listener)
+    // every EXECUTED shuffle: the final AQE plans, their query stages and
+    // each persisted frame's cached plan (walked once, however many scans
+    // reference it); a ReusedExchange executes nothing new
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => strip(w.child)
+      case i: InputAdapter => strip(i.child)
+      case o => o
+    }
+    val cachedSeen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    val exchanges = scala.collection.mutable.Buffer[ShuffleExchangeExec]()
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case _: ReusedExchangeExec => ()
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec =>
+        if (cachedSeen.add(m.relation.cachedPlan)) walk(m.relation.cachedPlan)
+      case e: ShuffleExchangeExec => exchanges += e; walk(e.child)
+      case o => o.children.foreach(walk); o.subqueries.foreach(walk)
+    }
+    assert(!plans.isEmpty, "no plan captured for the action")
+    plans.forEach(walk(_))
+    val exactWindow = exchanges.count(e => strip(e.child) match {
+      case w: WindowGroupLimitExec => w.mode == org.apache.spark.sql.execution.window.Partial
+      case _ => false
+    })
+    val lshBand = exchanges.count(_.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name } == Seq("band", "band_key")
+      case _ => false
+    })
+    val shown = exchanges.map(e => s"${e.outputPartitioning} <- ${strip(e.child).nodeName}")
+      .mkString("\n")
+    // unpinned, each of exact's consumers (signature, verify, anti-join —
+    // twice over through decontamination's two reads of near) re-ran the
+    // window shuffle above the pinned scrub, and the LSH chain ran twice
+    assert(exactWindow == 1, s"exact-dedup window exchange ran $exactWindow times:\n$shown")
+    assert(lshBand == 1, s"LSH band exchange ran $lshBand times:\n$shown")
   }
 
   test("curation: the near-dup chain is evaluated once (quality inline, no self-join)") {
