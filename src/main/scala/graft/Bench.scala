@@ -189,7 +189,7 @@ object Bench {
     "q_bm25_sidecar_merge",  // smallest-first generation merge: 3 live gens -> 2, biggest gen byte-untouched, df untouched (r18)
     "q_rrf_fusion",          // reciprocal-rank fusion of bm25TopK + dense cosine top-k — query-bounded union + agg + WindowGroupLimit (r18)
     "q_soft_dedup",          // soft dedup: near-dup chain + CC + 1/cluster-size weights joined back, corpus never shuffled (r18)
-    "q_line_dedup_group",    // per-group (domain) duplicate-line removal: one (group, line-hash) shuffle + anti join + regroup (r18)
+    "q_line_dedup_group",    // per-group (domain) duplicate-line removal: one shared (group, line-hash) exchange + left join + regroup (r18)
     "q_cluster_update",      // incremental cluster maintenance: prior star edges + drop pairs -> CC, == full re-pair rebuild (r18)
     "q_series_vectors",      // fixed-grid behavior profiles: ONE hash agg with nBuckets conditional sums, no collect/pivot (r18)
     "q_series_zscore",       // z-score normalized profiles: same one-shuffle plan + row-local stats projections (r19)
@@ -216,7 +216,10 @@ object Bench {
     "q_curation_image_stream" // curation sink media arm: full pipeline x2 batches + artifact grow (r17)
   )
 
-  private def jsonStr(s: String): String =
+  /** JSON string escape: backslash, quote and ALL control chars (<0x20)
+    * — a tab or CR in a query name or oracle SQL would otherwise make a
+    * reader's json.load fail. Shared with [[Verify]]'s oracle_sql.json. */
+  private[graft] def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

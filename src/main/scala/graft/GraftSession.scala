@@ -208,7 +208,7 @@ object GraftSession {
   }
 
   /** Drop counts one capped bucket stage reported after an action (see
-    * Dedup.capBuckets): `metric` is the plan-unique observed-metric name
+    * Dedup.cappedBuckets): `metric` is the plan-unique observed-metric name
     * (`graft.<family>.bucket_cap#<n>`). */
   final case class BucketCapDrop(
     metric: String,
@@ -229,7 +229,7 @@ object GraftSession {
     new java.util.WeakHashMap[
       SparkSession, scala.collection.mutable.LinkedHashMap[String, (Long, Long)]]()
 
-  /** Bound on per-session cap-drop records: every capBuckets call mints a
+  /** Bound on per-session cap-drop records: every cappedBuckets call mints a
     * unique metric name, so a long-lived session looping over LSH stages
     * would otherwise grow the record map one entry per executed query.
     * Past the bound the OLDEST entries are evicted (LinkedHashMap keeps
@@ -242,16 +242,6 @@ object GraftSession {
         spark, _ => scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)])
     }
 
-  /**
-   * WARN-log AND record any `graft.*.bucket_cap#*` observed metric with a
-   * nonzero drop count (see Dedup.capBuckets): capping a degenerate LSH
-   * bucket is a deliberate recall-for-boundedness trade, and this listener
-   * keeps it from being a SILENT one — the log line for humans, the
-   * [[bucketCapDrops]] accessor for pipelines that must react (rerun
-   * exact dedup first, raise the cap, fail the run). Plan-side metrics +
-   * a driver-side listener cost nothing per row — no second pass over the
-   * data.
-   */
   /** AQE's runtime empty-relation propagation replaces already-executed
     * subtrees whose output turned out empty with an empty LocalRelation.
     * When a bucket cap drops EVERY bucket, the CollectMetrics node sits
@@ -283,6 +273,16 @@ object GraftSession {
     missing
   }
 
+  /**
+   * WARN-log AND record any `graft.*.bucket_cap#*` observed metric with a
+   * nonzero drop count (see Dedup.cappedBuckets): capping a degenerate LSH
+   * bucket is a deliberate recall-for-boundedness trade, and this listener
+   * keeps it from being a SILENT one — the log line for humans, the
+   * [[bucketCapDrops]] accessor for pipelines that must react (rerun
+   * exact dedup first, raise the cap, fail the run). Plan-side metrics +
+   * a driver-side listener cost nothing per row — no second pass over the
+   * data.
+   */
   def registerBucketCapListener(spark: SparkSession): Unit =
     if (capListenerSessions.add(spark)) {
       ensureAqeExclusion(spark)

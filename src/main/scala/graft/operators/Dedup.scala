@@ -30,7 +30,7 @@ object Dedup {
    * real near-dup clusters stay far smaller once exact dedup has run
    * first (the intended pipeline order). Pass `None` to disable, or a
    * larger cap for corpora with legitimately huge duplicate clusters;
-   * dropped buckets are never silent — see [[capBuckets]].
+   * dropped buckets are never silent — see [[cappedBuckets]].
    */
   val DefaultMaxBucket: Option[Int] = Some(1024)
 
@@ -1368,76 +1368,16 @@ object Dedup {
    * (corpus row count is preserved). Blank lines are exempt — they are
    * paragraph separators, not boilerplate, and deleting them corpus-wide
    * would mangle every document's structure (same stance as
-   * [[dropRepeatedLinesWithinDoc]]). Returns (doc_id, textCol).
-   *
-   * Scale shape: ONE shared line exchange. The input is evaluated and
-   * its line rows (keyed by their 16-byte MD5, not the line text —
-   * boilerplate lines are long, hashes are not) are hash-partitioned on
-   * that digest exactly once; the global line count reads that exchange,
-   * and the duplicate-line drop re-reads the SAME exchange
-   * (ReuseExchange — see the pruning guards in the code) joined against
-   * the co-partitioned duplicate set, so the input's upstream chain (a
-   * scan plus every scrub projection in front of this rule) runs once
-   * rather than once per branch. The rebuild is ONE regroup by doc_id
-   * with order restored from the captured line positions, and a left
-   * join of the input's ids restores every input row.
+   * [[dropRepeatedLinesWithinDoc]]). Returns (doc_id, textCol). Runs on
+   * [[dropRepeatedUnits]] (its scale shape).
    */
   def dropDuplicateLines(
     df: DataFrame,
     textCol: String,
     idCol: String,
     minCount: Int = 3
-  ): DataFrame = {
-    require(minCount >= 2, s"minCount must be at least 2: $minCount")
-    // the explicit isNotNull is load-bearing for exchange reuse (the
-    // dropDuplicateSpans guard): the drop join below infers it on the
-    // count branch's copy of this subtree, and if it were only inferred,
-    // predicate pushdown would specialize that copy and break the
-    // ReuseExchange into a second evaluation of the input. It holds for
-    // every row (the digest of a non-NULL line), so it drops nothing
-    val lines = df
-      .select(col(idCol).as("doc_id"), posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
-      // unhex → BINARY: a TRUE 16-byte key (hex md5 is 32 bytes + string
-      // overhead) — halves key bytes in the corpus-wide shuffle
-      .withColumn("lh", unhex(md5(col("line"))))
-      .filter(col("lh").isNotNull)
-      .repartition(col("lh"))
-    // the global line count, read off the shared exchange. Blank
-    // separators are exempt inside the count (a filter here would be
-    // pushed below the repartition and specialize this branch), and
-    // `pos >= 0 OR doc_id IS NOT NULL` ≡ true — posexplode positions are
-    // non-negative — but it references every payload column, so column
-    // pruning cannot narrow this branch's exchange copy either. NULL-id
-    // lines count like any other
-    val dup = lines
-      .groupBy("lh")
-      .agg(count(when(col("line") =!= "" &&
-        (col("pos") >= 0 || col("doc_id").isNotNull), lit(1))).as("c"))
-      .filter(col("c") >= minCount)
-      .select(col("lh"), lit(true).as("__dup"))
-    // LEFT join + isNull, not left_anti: PushDownLeftSemiAntiJoin would
-    // push an anti join below the repartition, splitting the shared
-    // exchange back into two evaluations of the input
-    val rebuilt = lines
-      .join(dup, Seq("lh"), "left")
-      .filter(col("__dup").isNull)
-      .groupBy(col("doc_id").as("__rid"))
-      .agg(concat_ws("\n",
-        transform(
-          array_sort(collect_list(struct(col("pos"), col("line")))),
-          s => s("line"))).as(textCol))
-    // the restore join is NULL-SAFE: a plain `=` would infer
-    // isnotnull(doc_id) on the rebuilt side, which pushdown lands on the
-    // drop branch's copy of the line subtree only (breaking the reuse),
-    // and an explicit filter there would stop NULL-id lines from
-    // counting. A NULL id then matches the NULL regroup, so it reads ""
-    // explicitly — what an `=` join's no-match gave it
-    df.select(col(idCol).as("doc_id"))
-      .join(rebuilt, col("doc_id") <=> col("__rid"), "left")
-      .select(col("doc_id"),
-        when(col("doc_id").isNull, lit(""))
-          .otherwise(coalesce(col(textCol), lit(""))).as(textCol))
-  }
+  ): DataFrame =
+    dropRepeatedUnits(df, textCol, idCol, None, "\n", "\n", keepEmptyUnits = true, minCount)
 
   /**
    * PER-GROUP duplicate-line removal — the domain-keyed refinement of
@@ -1450,15 +1390,9 @@ object Dedup {
    * legitimate content inside one small group. Key on
    * [[graft.operators.Web.withUrlParts]]' registrable domain for web
    * corpora. Documents with a NULL group keep every line (there is no
-   * population to count boilerplate over — an equi-join never matches
-   * NULL keys, documented rather than accidental).
-   *
-   * Scale shape: a map-side partial count shuffled on (group, 16-byte
-   * line hash), a tiny ≥minCount dup set, one anti join, one per-doc
-   * regroup — the count and the anti join each evaluate the input
-   * (unlike [[dropDuplicateLines]]' one shared line exchange). Blank
-   * separator lines are exempt; NULL text rebuilds as empty; output
-   * carries (doc_id, group, text).
+   * population to count boilerplate over). Blank separator lines are
+   * exempt; NULL text rebuilds as empty; output carries (doc_id, group,
+   * text). Runs on [[dropRepeatedUnits]] (its scale shape).
    */
   def dropDuplicateLinesByGroup(
     df: DataFrame,
@@ -1466,29 +1400,9 @@ object Dedup {
     idCol: String,
     groupCol: String,
     minCount: Int = 3
-  ): DataFrame = {
-    require(minCount >= 2, s"minCount must be at least 2: $minCount")
-    val lines = df
-      .select(col(idCol).as("doc_id"), col(groupCol),
-        posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
-      .withColumn("lh", unhex(md5(col("line"))))
-    val dup = lines.filter(col("line") =!= "") // blank separators exempt
-      .groupBy(groupCol, "lh")
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= minCount)
-      .select(groupCol, "lh")
-    val rebuilt = lines
-      .join(dup, Seq(groupCol, "lh"), "left_anti")
-      .groupBy("doc_id")
-      .agg(concat_ws("\n",
-        transform(
-          array_sort(collect_list(struct(col("pos"), col("line")))),
-          s => s("line"))).as(textCol))
-    df.select(col(idCol).as("doc_id"), col(groupCol))
-      .join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"), col(groupCol),
-        coalesce(col(textCol), lit("")).as(textCol))
-  }
+  ): DataFrame =
+    dropRepeatedUnits(df, textCol, idCol, Some(groupCol), "\n", "\n",
+      keepEmptyUnits = true, minCount)
 
   /**
    * Corpus-wide duplicate-PARAGRAPH removal (the RefinedWeb granularity
@@ -1508,40 +1422,111 @@ object Dedup {
    * normalization, the [[dropDuplicateSpans]] whitespace convention at
    * paragraph granularity. Single-newline structure INSIDE a surviving
    * paragraph is untouched. NULL text rebuilds as empty (the
-   * [[dropDuplicateLines]] convention).
-   *
-   * Scale shape: a map-side partial count shuffled on a 16-byte binary
-   * paragraph hash, a tiny ≥minCount dup set, one anti join, one
-   * per-doc regroup — the count and the anti join each evaluate the
-   * input (unlike [[dropDuplicateLines]]' one shared line exchange).
+   * [[dropDuplicateLines]] convention). Runs on [[dropRepeatedUnits]]
+   * (its scale shape).
    */
   def dropDuplicateParagraphs(
     df: DataFrame,
     textCol: String,
     idCol: String,
     minCount: Int = 2
+  ): DataFrame =
+    dropRepeatedUnits(df, textCol, idCol, None, "\\n{2,}", "\n\n",
+      keepEmptyUnits = false, minCount)
+
+  /**
+   * The repeated-unit removal kernel of [[dropDuplicateLines]],
+   * [[dropDuplicateLinesByGroup]] and [[dropDuplicateParagraphs]]:
+   * split `textCol` on the regex `splitOn`, digest each unit, count the
+   * units per (`groupCol`, digest), delete every unit counted at least
+   * `minCount` times, and rejoin the survivors in their order with
+   * `joinWith`. Empty units never count; they survive the rebuild only
+   * under `keepEmptyUnits`. A row with a NULL group never counts, so it
+   * keeps every unit. Every input row survives as (doc_id, groupCol,
+   * textCol); NULL text and a NULL id read "", and rows sharing an id
+   * rebuild as one document.
+   *
+   * Scale shape: ONE shared unit exchange. The input is evaluated and
+   * its unit rows (keyed by their 16-byte MD5, not the unit text —
+   * boilerplate is long, hashes are not) are hash-partitioned on
+   * (group, digest) exactly once; the count reads that exchange, and
+   * the duplicate-unit drop re-reads the SAME exchange (ReuseExchange —
+   * see the pruning guards in the code) joined against the
+   * co-partitioned duplicate set, so the input's upstream chain (a scan
+   * plus every scrub projection in front of the rule) runs once rather
+   * than once per branch. The rebuild is ONE regroup by doc_id with
+   * order restored from the captured unit positions, and a left join of
+   * the input's ids restores every input row.
+   */
+  private def dropRepeatedUnits(
+    df: DataFrame,
+    textCol: String,
+    idCol: String,
+    groupCol: Option[String],
+    splitOn: String,
+    joinWith: String,
+    keepEmptyUnits: Boolean,
+    minCount: Int
   ): DataFrame = {
     require(minCount >= 2, s"minCount must be at least 2: $minCount")
-    val paras = df
-      .select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), "\\n{2,}")).as(Seq("pos", "para")))
-      .withColumn("ph", unhex(md5(col("para"))))
-    val dup = paras.filter(col("para") =!= "") // split artifacts exempt
-      .groupBy("ph")
-      .agg(count(lit(1)).as("c"))
+    // the group rides as a one-field STRUCT key: never NULL itself, and
+    // two NULL groups compare equal inside it, so the drop's `=` join is
+    // null-safe yet infers no isnotnull(group) for pushdown to land on
+    // the count's copy of the unit subtree only — and the exchange, the
+    // count and the join all share one key (a `<=>` join on the bare
+    // column keys on coalesce/isnull instead, and re-shuffles the units)
+    val group = groupCol.map(g => struct(col(g)).as("__g")).toSeq
+    val keys = group.map(_ => "__g") :+ "lh"
+    // the explicit isNotNull is load-bearing for exchange reuse (the
+    // dropDuplicateSpans guard): the drop join below infers it on the
+    // count branch's copy of this subtree, and if it were only inferred,
+    // predicate pushdown would specialize that copy and break the
+    // ReuseExchange into a second evaluation of the input. It holds for
+    // every row (the digest of a non-NULL unit), so it drops nothing
+    val lines = df
+      .select(col(idCol).as("doc_id") +: group :+
+        posexplode(split(col(textCol), splitOn)).as(Seq("pos", "line")): _*)
+      // unhex → BINARY: a TRUE 16-byte key (hex md5 is 32 bytes + string
+      // overhead) — halves key bytes in the corpus-wide shuffle
+      .withColumn("lh", unhex(md5(col("line"))))
+      .filter(col("lh").isNotNull)
+      .repartition(keys.map(col): _*)
+    // the count, read off the shared exchange. Empty units and NULL
+    // groups are exempt inside the count (a filter here would be pushed
+    // below the repartition and specialize this branch), and
+    // `pos >= 0 OR doc_id IS NOT NULL` ≡ true — posexplode positions are
+    // non-negative — but it references every payload column, so column
+    // pruning cannot narrow this branch's exchange copy either. NULL-id
+    // units count like any other
+    val counted = groupCol.foldLeft(col("line") =!= "" &&
+      (col("pos") >= 0 || col("doc_id").isNotNull))((c, g) => c && col("__g")(g).isNotNull)
+    val dup = lines
+      .groupBy(keys.map(col): _*)
+      .agg(count(when(counted, lit(1))).as("c"))
       .filter(col("c") >= minCount)
-      .select("ph")
-    val rebuilt = paras
-      .filter(col("para") =!= "") // leading/trailing blank runs drop
-      .join(dup, Seq("ph"), "left_anti")
-      .groupBy("doc_id")
-      .agg(concat_ws("\n\n",
-        transform(
-          array_sort(collect_list(struct(col("pos"), col("para")))),
-          s => s("para"))).as(textCol))
-    df.select(col(idCol).as("doc_id"))
-      .join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col(textCol), lit("")).as(textCol))
+      .select(keys.map(col) :+ lit(true).as("__dup"): _*)
+    // LEFT join + isNull, not left_anti: PushDownLeftSemiAntiJoin would
+    // push an anti join below the repartition, splitting the shared
+    // exchange back into two evaluations of the input
+    val units = transform(
+      array_sort(collect_list(struct(col("pos"), col("line")))), s => s("line"))
+    val rebuilt = lines
+      .join(dup, keys, "left")
+      .filter(col("__dup").isNull)
+      .groupBy(col("doc_id").as("__rid"))
+      .agg(concat_ws(joinWith,
+        if (keepEmptyUnits) units else filter(units, _ =!= "")).as(textCol))
+    // the restore join is NULL-SAFE: a plain `=` would infer
+    // isnotnull(doc_id) on the rebuilt side, which pushdown lands on the
+    // drop branch's copy of the unit subtree only (breaking the reuse),
+    // and an explicit filter there would stop NULL-id units from
+    // counting. A NULL id then matches the NULL regroup, so it reads ""
+    // explicitly — what an `=` join's no-match gave it
+    val carried = groupCol.map(col).toSeq
+    df.select(col(idCol).as("doc_id") +: carried: _*)
+      .join(rebuilt, col("doc_id") <=> col("__rid"), "left")
+      .select(col("doc_id") +: carried :+ when(col("doc_id").isNull, lit(""))
+        .otherwise(coalesce(col(textCol), lit(""))).as(textCol): _*)
   }
 
   /**
@@ -1819,24 +1804,11 @@ object Dedup {
     bands: Int = 4,
     maxBucket: Option[Int] = DefaultMaxBucket
   ): DataFrame = {
-    require(bands >= 1 && bits % bands == 0,
-      s"bits must divide into bands: bits=$bits bands=$bands")
-    require(bits >= 1 && bits <= 64,
-      s"bits must be in [1, 64] (hashes are one long): $bits" +
-        " - a wider shift would wrap mod 64 and silently collapse band keys")
+    requireHammingBandParams(bits, bands)
     require(maxHamming >= 0, s"maxHamming must be >= 0: $maxHamming")
-    val chunkBits = bits / bands
-    val mask = if (chunkBits == 64) -1L else (1L << chunkBits) - 1
-    val banded = hashes.select(
-      struct(col(idCol).as("doc_id"), col(hashCol).as("simhash")).as("item"),
-      explode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(
-            b.as("band"),
-            call_function("shiftright", col(hashCol), b * chunkBits)
-              .bitwiseAND(lit(mask)).as("band_key"))))
-        .as("bk")
-    ).select(col("item"), col("bk.band"), col("bk.band_key"))
+    val banded = hammingBandRows(hashes, idCol, hashCol, "doc_id", "__h", bits, bands)
+      .select(struct(col("doc_id"), col("__h").as("simhash")).as("item"),
+        col("band"), col("band_key"))
     cappedCollect(banded, Seq("band", "band_key"),
         col("item"), "items", useSet = false, maxBucket, "simhash")
       .filter(size(col("items")) >= 2)
@@ -1919,8 +1891,8 @@ object Dedup {
 
   /** Masked band rows of a `bits`-wide hash column — one row per
     * (band, band_key) with the hash riding: the shared projection of
-    * [[hammingNearDupsAgainstIndex]] (both sides, per call),
-    * [[hammingBandedIndex]] (build side, once) and
+    * [[hammingNearDups]], [[hammingNearDupsAgainstIndex]] (both sides,
+    * per call), [[hammingBandedIndex]] (build side, once) and
     * [[hammingMatchesAgainstBanded]] (probe side). MASKED, not mod'd,
     * so sign-bit 64-bit hashes bucket correctly. */
   private def hammingBandRows(

@@ -14,4 +14,12 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.sfJson("/data/sf01") == "\"/data/sf01\"")
     assert(Bench.sfJson("/data/tpch") == "\"/data/tpch\"")
   }
+
+  test("jsonStr: quote, backslash, LF, CR, tab and other control chars are escaped") {
+    assert(Bench.jsonStr("plain") == "\"plain\"")
+    assert(Bench.jsonStr("say \"hi\"") == "\"say \\\"hi\\\"\"")
+    assert(Bench.jsonStr("a\\b") == "\"a\\\\b\"")
+    assert(Bench.jsonStr("l1\nl2\rl3\tl4") == "\"l1\\nl2\\rl3\\tl4\"")
+    assert(Bench.jsonStr("x\u0001y") == "\"x\\u0001y\"")
+  }
 }

@@ -479,6 +479,116 @@ class DedupSpec extends SparkSpec {
     assert(at3.count(_._1 == 2L) == 2)
   }
 
+  test("dropDuplicateLinesByGroup: the shared-exchange form is value-identical to " +
+    "the count-then-anti-join form, NULL groups, ids and text included") {
+    // the two-branch formulation the shared-exchange kernel replaced, kept
+    // here as the reference: a map-side count over one evaluation of the
+    // input, a left_anti drop over a second, and an `=` restore
+    def reference(df: org.apache.spark.sql.DataFrame, minCount: Int) = {
+      val lines = df
+        .select(col("doc_id"), col("src"),
+          posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
+        .withColumn("lh", unhex(md5(col("line"))))
+      val dup = lines.filter(col("line") =!= "")
+        .groupBy("src", "lh").agg(count(lit(1)).as("c"))
+        .filter(col("c") >= minCount).select("src", "lh")
+      val rebuilt = lines.join(dup, Seq("src", "lh"), "left_anti")
+        .groupBy("doc_id")
+        .agg(concat_ws("\n", transform(
+          array_sort(collect_list(struct(col("pos"), col("line")))),
+          s => s("line"))).as("text"))
+      df.select(col("doc_id"), col("src")).join(rebuilt, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("src"), coalesce(col("text"), lit("")).as("text"))
+    }
+    val df = Seq[(java.lang.Long, String, String)](
+      (1L, "keep one\nFOOTER\nNAV", "a"),
+      (2L, "FOOTER\ntail\n\n\nmore", "a"), // blank lines are exempt
+      (2L, "second copy of id 2\nNAV", "a"), // duplicate id: rebuilds as one doc
+      (3L, "NAV\nNAV", "a"),
+      (4L, "FOOTER\nNAV\nFOOTER", "b"), // the same lines in another group
+      (5L, "FOOTER\nb prose", "b"),
+      (null, "FOOTER\nnull-id prose", "a"), // a NULL id counts toward its group
+      (null, "NAV\nanother null-id doc", "b"),
+      (6L, "FOOTER\nNAV\nno group", null), // NULL group: never counts, keeps all
+      (7L, "FOOTER\nFOOTER\nFOOTER", null),
+      (8L, null, "a"),
+      (9L, "", "b"),
+      (10L, "\n\n", "a"),
+      (11L, "\nFOOTER\n", "a") // leading and trailing blank lines
+    ).toDF("doc_id", "text", "src")
+    val path = java.nio.file.Files.createTempDirectory("graft-dup-lines-group").toString
+    df.write.mode("overwrite").parquet(path)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (Option(r.get(0)), Option(r.get(1)), r.getString(2)))
+        .sortBy(_.toString).toSeq
+    for (input <- Seq(df, spark.read.parquet(path)); minCount <- Seq(2, 3, 4)) {
+      val got = Dedup.dropDuplicateLinesByGroup(input, "text", "doc_id", "src", minCount)
+      val want = reference(input, minCount)
+      assert(got.schema == want.schema, s"minCount=$minCount")
+      assert(rows(got) == rows(want), s"minCount=$minCount")
+    }
+    // the NULL group keeps its thrice-repeated line; group a loses FOOTER
+    val at3 = Dedup.dropDuplicateLinesByGroup(df, "text", "doc_id", "src", 3)
+      .collect().filter(!_.isNullAt(0)).map(r => r.getLong(0) -> r.getString(2))
+    assert(at3.toMap.apply(7L) == "FOOTER\nFOOTER\nFOOTER", at3.mkString("\n"))
+    assert(at3.toMap.apply(11L) == "\n", at3.mkString("\n"))
+  }
+
+  test("dropDuplicateParagraphs: the shared-exchange form is value-identical to the " +
+    "count-then-anti-join form, NULL and duplicate ids and blank runs included") {
+    // the two-branch formulation the shared-exchange kernel replaced, kept
+    // here as the reference: empty split artifacts filtered from both the
+    // count and the rebuild, a left_anti drop and an `=` restore
+    def reference(df: org.apache.spark.sql.DataFrame, minCount: Int) = {
+      val paras = df
+        .select(col("doc_id"),
+          posexplode(split(col("text"), "\\n{2,}")).as(Seq("pos", "para")))
+        .withColumn("ph", unhex(md5(col("para"))))
+      val dup = paras.filter(col("para") =!= "")
+        .groupBy("ph").agg(count(lit(1)).as("c"))
+        .filter(col("c") >= minCount).select("ph")
+      val rebuilt = paras.filter(col("para") =!= "")
+        .join(dup, Seq("ph"), "left_anti")
+        .groupBy("doc_id")
+        .agg(concat_ws("\n\n", transform(
+          array_sort(collect_list(struct(col("pos"), col("para")))),
+          s => s("para"))).as("text"))
+      df.select(col("doc_id")).join(rebuilt, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
+    }
+    val banner = "BANNER ONE\nBANNER TWO"
+    val df = Seq[(java.lang.Long, String)](
+      (1L, s"intro\n\n$banner\n\ntail one"),
+      (2L, s"$banner\n\n\n\ntail two"),
+      (2L, s"second copy of id 2\n\n$banner"), // duplicate id: rebuilds as one doc
+      (3L, banner),
+      (null, s"$banner\n\nnull-id prose"), // a NULL id counts like any other
+      (null, "LICENSE\n\nanother null-id doc"),
+      (4L, "LICENSE\n\nLICENSE"),
+      (5L, null),
+      (6L, ""),
+      (7L, "\n\n\n"),
+      (8L, "\n\n\nleading\n\n\n\ntrailing\n\n"), // blank runs normalize
+      (9L, "single\nnewlines stay\n")
+    ).toDF("doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-dup-paras").toString
+    df.write.mode("overwrite").parquet(path)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (Option(r.get(0)), r.getString(1))).sortBy(_.toString).toSeq
+    for (input <- Seq(df, spark.read.parquet(path)); minCount <- Seq(2, 3, 4)) {
+      val got = Dedup.dropDuplicateParagraphs(input, "text", "doc_id", minCount)
+      val want = reference(input, minCount)
+      assert(got.schema == want.schema, s"minCount=$minCount")
+      assert(rows(got) == rows(want), s"minCount=$minCount")
+    }
+    // at minCount=3 the NULL-id doc's banner is the fifth copy and LICENSE's
+    // three copies (two in doc 4) reach the threshold
+    val at3 = Dedup.dropDuplicateParagraphs(df, "text", "doc_id", 3)
+      .collect().filter(!_.isNullAt(0)).map(r => r.getLong(0) -> r.getString(1))
+    assert(at3.toMap.apply(4L) == "", at3.mkString("\n"))
+    assert(at3.toMap.apply(8L) == "leading\n\ntrailing", at3.mkString("\n"))
+  }
+
   test("contamination: planted eval quote is contained; decontaminate drops it") {
     import spark.implicits._
     val evalQ = "what is the capital of france paris is the capital"

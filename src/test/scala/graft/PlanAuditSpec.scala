@@ -466,6 +466,34 @@ class PlanAuditSpec extends SparkSpec {
       s"line exchange not reused:\n${plan.take(4000)}")
   }
 
+  test("dropDuplicateLinesByGroup: the count and the drop read one shared line exchange") {
+    // a footer line every document of a group shares, so the duplicate set
+    // is non-empty and the drop branch survives to the final plan
+    val q = Dedup.dropDuplicateLinesByGroup(
+      docs.select(col("doc_id"), concat(col("text"), lit("\nshared footer")).as("text"),
+        (col("doc_id") % 3).as("src")),
+      "text", "doc_id", "src")
+    q.collect()
+    val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val explodes = "Generate posexplode".r.findAllIn(plan).size
+    assert(explodes == 1, s"corpus lines exploded $explodes times:\n${plan.take(4000)}")
+    assert("ReusedExchange.*hashpartitioning\\(__g#\\d+, lh#".r.findAllIn(plan).nonEmpty,
+      s"line exchange not reused:\n${plan.take(4000)}")
+  }
+
+  test("dropDuplicateParagraphs: the count and the drop read one shared paragraph exchange") {
+    // a closing paragraph every document shares
+    val q = Dedup.dropDuplicateParagraphs(
+      docs.select(col("doc_id"), concat(col("text"), lit("\n\nshared closing")).as("text")),
+      "text", "doc_id")
+    q.collect()
+    val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val explodes = "Generate posexplode".r.findAllIn(plan).size
+    assert(explodes == 1, s"corpus paragraphs exploded $explodes times:\n${plan.take(4000)}")
+    assert("ReusedExchange.*hashpartitioning\\(lh#".r.findAllIn(plan).nonEmpty,
+      s"paragraph exchange not reused:\n${plan.take(4000)}")
+  }
+
   test("curation run(): one exact-dedup and one LSH band exchange across the " +
     "action's plan and every pinned plan") {
     import org.apache.spark.sql.catalyst.expressions.Attribute
