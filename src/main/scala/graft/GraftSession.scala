@@ -20,6 +20,20 @@ import org.apache.spark.sql.SparkSession
  *
  * The master is only defaulted (to local[cores]) when none was provided by
  * the launcher — a spark-submit-provided cluster master always wins.
+ *
+ * Corpus-sized escape. Index probes, forget and append rewrites and the
+ * decontamination rebuild always `broadcast()`-hint their small side
+ * (the batch, drop, removal set or match table) so the persisted index
+ * or corpus streams unshuffled. When that side is itself corpus-sized,
+ * set `spark.sql.optimizer.disableHints=true` before calling the
+ * operator (hints drop at analysis, so a frame built earlier keeps
+ * them): every hint is dropped and AQE sizes each join from its actual
+ * inputs (still a broadcast when a side turns out small, a shuffle join
+ * otherwise), with the same values. It drops every other hint too,
+ * e.g. the `rebalance` in [[graft.operators.Retrieval]]'s sidecar
+ * append, which changes the output file count but not the values. Each
+ * dropped hint logs a `HintErrorLogger` `Unrecognized hint: broadcast()`
+ * WARN.
  */
 object GraftSession {
 

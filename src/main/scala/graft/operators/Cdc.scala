@@ -155,13 +155,17 @@ object Cdc {
     * ([[IndexStore.publish]]: readers see the old or the new pointer,
     * never a half-written version or no pointer) and retire versions
     * beyond the grace window. Shared by [[materializedSink]] and
-    * [[Forget.initVersioned]]/[[Forget.rewriteVersioned]]. */
+    * [[Forget.initVersioned]]/[[Forget.rewriteVersioned]]; validates
+    * `keepVersions` before writing, since retiring from
+    * `next - keepVersions` with `keepVersions <= 0` would delete the
+    * version just published. */
   private[operators] def publishVersion(
     df: DataFrame,
     tableDir: String,
     next: Long,
     keepVersions: Int
   ): Unit = {
+    require(keepVersions >= 1, s"keepVersions must be >= 1: $keepVersions")
     val spark = df.sparkSession
     df.write.mode("overwrite").parquet(s"$tableDir/v$next")
     IndexStore.publish(spark, tableDir, CurrentFile, next.toString)

@@ -229,26 +229,22 @@ object Contamination {
    * — reach the per-doc regroup; the rebuild is a left join of the
    * corpus against that matched-docs table (broadcast-sized in
    * practice) and a per-row indexed filter. The corpus is never
-   * shuffled while `broadcastMatches` holds.
+   * shuffled.
    *
-   * `broadcastMatches` (default true) pins the rebuild join to a
-   * broadcast of the matched-docs table — correct while contamination
-   * is sparse, which is every realistic corpus. For a pathologically
-   * SATURATED corpus (eval-set boilerplate in most documents) the
-   * matched table approaches corpus size and an unconditional
-   * broadcast would OOM the driver: pass false to drop the hint and
-   * let AQE pick the join at runtime from the matched table's ACTUAL
-   * size — still a broadcast when it turns out small (corpus unshuffled),
-   * a shuffle join when it genuinely is not (the fallback's price;
-   * DedupSpec drives a 100%-contaminated fixture through it).
+   * The rebuild join broadcasts the matched-docs table — correct while
+   * contamination is sparse, which is every realistic corpus. For a
+   * pathologically SATURATED corpus (eval-set boilerplate in most
+   * documents) the matched table approaches corpus size; run the action
+   * under [[graft.GraftSession]]'s corpus-sized escape so AQE picks the
+   * join from the table's ACTUAL size (DedupSpec drives a
+   * 100%-contaminated fixture through it).
    */
   def decontaminateSpans(
     corpus: DataFrame,
     evalSet: DataFrame,
     textCol: String,
     idCol: String,
-    k: Int = 13,
-    broadcastMatches: Boolean = true
+    k: Int = 13
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     Cols.requireAbsent(corpus,
@@ -269,11 +265,8 @@ object Contamination {
       .join(broadcast(evalGrams), Seq("g"), "left_semi")
       .groupBy("__did").agg(collect_list(col("pos")).as("__starts"))
     // matched-docs table is contamination-sparse — broadcast it so the
-    // corpus is never shuffled for the rebuild (the documented shape);
-    // without the hint AQE sizes the join at runtime (saturated-corpus
-    // fallback, see the Scaladoc)
-    val matched = if (broadcastMatches) broadcast(starts) else starts
-    docs.join(matched, col(idCol) === col("__did"), "left").drop("__did")
+    // corpus is never shuffled for the rebuild (the documented shape)
+    docs.join(broadcast(starts), col(idCol) === col("__did"), "left").drop("__did")
       // UNMATCHED documents (the overwhelming majority, plus every NULL
       // and sub-k doc) pass through BYTE-VERBATIM — only docs that
       // actually need surgery are rebuilt from their token stream

@@ -1055,7 +1055,6 @@ object Dedup {
     maxIters: Int = 20,
     localizeEdgeLimit: Long = 2000000L,
     tokenizer: String = TextAnalysis.WhitespaceTokenizer,
-    broadcastBatch: Boolean = true,
     priorLabels: Option[DataFrame] = None
   ): (DataFrame, DataFrame) = {
     Cols.requireAbsent(df, "soft_weight", "__csz")
@@ -1063,7 +1062,7 @@ object Dedup {
         threshold, maxBucket, tokenizer)
       .select(col("id_a"), col("id_b"))
     val cross = nearDuplicatesAgainstIndex(df, indexSignatures, textCol, idCol,
-        k, numHashes, bands, threshold, maxBucket, broadcastBatch, tokenizer)
+        k, numHashes, bands, threshold, maxBucket, tokenizer)
       .select(col("batch_id").as("id_a"), col("index_id").as("id_b"))
     val priorStars = priorLabels.map(_
         .filter(col("doc_id") =!= col("cluster_id"))
@@ -1180,8 +1179,7 @@ object Dedup {
     textCol: String,
     idCol: String,
     k: Int = 8,
-    w: Int = 4,
-    broadcastDrop: Boolean = true
+    w: Int = 4
   ): DataFrame = {
     val guarded = index.filter(
       when(col("k") === lit(k) && col("w") === lit(w), lit(true))
@@ -1192,7 +1190,7 @@ object Dedup {
             "per artifact; rebuild to change it")))))
     SetSim.appendPerDocIndex(guarded,
       winnowIndex(drop, textCol, idCol, k, w),
-      "doc_id", "winnowIndexAppend", tGuard = None, broadcastDrop)
+      "doc_id", "winnowIndexAppend", tGuard = None)
   }
 
   /**
@@ -1219,11 +1217,9 @@ object Dedup {
     k: Int = 8,
     w: Int = 4,
     minShared: Int = 2,
-    maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = DefaultMaxBucket
   ): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1: $minShared")
-    def hinted(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     // loud parameter guard at plan-execution time
     val guardedIndex = index.filter(
       when(col("k") === lit(k) && col("w") === lit(w), lit(true))
@@ -1243,10 +1239,10 @@ object Dedup {
     val probe = batchBuckets.select("hash")
     val matchedIdx = guardedIndex
       .select(col("doc_id").as("index_id"), col("hash")).distinct()
-      .join(hinted(probe), Seq("hash"), "left_semi")
+      .join(broadcast(probe), Seq("hash"), "left_semi")
     val idxBuckets = cappedCollect(matchedIdx, Seq("hash"),
       col("index_id"), "idx_items", useSet = true, maxBucket, "winnow_incr_idx")
-    idxBuckets.join(hinted(batchBuckets), Seq("hash"))
+    idxBuckets.join(broadcast(batchBuckets), Seq("hash"))
       .select(explode(col("idx_items")).as("index_id"), col("batch_items"))
       .select(col("index_id"), explode(col("batch_items")).as("batch_id"))
       .groupBy("batch_id", "index_id")
@@ -1571,9 +1567,8 @@ object Dedup {
    * LOUDLY (observed metric — a megadup gram is boilerplate for
    * [[dropDuplicateLines]], and its cut list would be a skewed task),
    * cut positions regroup per doc (cut-sized), and the dup-gram semi
-   * join and rebuild join broadcast under `broadcastCuts` (pass false
-   * for a boilerplate-saturated corpus and AQE sizes them — the
-   * decontaminateSpans fallback convention).
+   * join and rebuild join broadcast (a boilerplate-saturated corpus
+   * runs under [[graft.GraftSession]]'s corpus-sized escape).
    *
    * Gram identity is the 60-bit [[SpanGrams]] hash, so two UNRELATED
    * k-windows can collide and cut an innocent span: expect ~n²/2⁶¹
@@ -1588,8 +1583,7 @@ object Dedup {
     idCol: String,
     k: Int = 25,
     minCount: Int = 2,
-    maxOccurrences: Option[Int] = DefaultMaxBucket,
-    broadcastCuts: Boolean = true
+    maxOccurrences: Option[Int] = DefaultMaxBucket
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(minCount >= 2, s"minCount must be at least 2: $minCount")
@@ -1607,7 +1601,6 @@ object Dedup {
       .select(col(idCol).as("__did"), posexplode(col("__g")).as(Seq("pos", "g")))
       .filter(col("g").isNotNull)
       .repartition(col("g"))
-    def hinted(d: DataFrame) = if (broadcastCuts) broadcast(d) else d
     // phase 1: global gram counts, read off the SAME gram exchange that
     // phase 2 consumes (ReuseExchange — the corpus gram stream is
     // computed and shuffled ONCE). count(when(pos >= 0 OR did NOT NULL))
@@ -1642,7 +1635,7 @@ object Dedup {
     // push a semi join below the repartition, splitting the shared
     // exchange back into two corpus scans
     val occ = gramRows
-      .join(hinted(dupGrams), Seq("g"))
+      .join(broadcast(dupGrams), Seq("g"))
       .groupBy("g")
       .agg(collect_list(struct(col("__did"), col("pos"))).as("occs"))
     // every occurrence except the lexicographic first gets cut;
@@ -1652,8 +1645,7 @@ object Dedup {
         slice(array_sort(col("occs")), lit(2), size(col("occs")) - 1)).as("o"))
       .groupBy(col("o.__did").as("__did"))
       .agg(collect_list(col("o.pos")).as("__starts"))
-    val matched = if (broadcastCuts) broadcast(cuts) else cuts
-    docs.join(matched, col(idCol) === col("__did"), "left").drop("__did")
+    docs.join(broadcast(cuts), col(idCol) === col("__did"), "left").drop("__did")
       .withColumn("__kept",
         when(col("__starts").isNotNull,
           filter(col("__w"),
@@ -1839,7 +1831,7 @@ object Dedup {
    * Scale shape: the [[nearDuplicatesAgainstIndex]] doctrine — the
    * index is banded in one generate and semi-joined against the
    * BROADCAST batch band keys (never shuffled beyond matched rows;
-   * `broadcastBatch = false` for corpus-sized batches), each side
+   * corpus-sized batches: [[graft.GraftSession]]'s corpus-sized escape), each side
    * grouped and capped independently BEFORE the cross-side join
    * (O(I + B) rows per bucket, never I×B). Hashes ride the band rows,
    * so the exact bit_count verify needs no join back to either corpus.
@@ -1853,16 +1845,14 @@ object Dedup {
     maxHamming: Int = 3,
     bands: Int = 4,
     maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true,
     metricPrefix: String = "incr_hamming"
   ): DataFrame = {
     requireHammingBandParams(bits, bands)
     require(maxHamming >= 0, s"maxHamming must be >= 0: $maxHamming")
     val idxB = hammingBandRows(indexHashes, idCol, hashCol, "index_id", "__h_i", bits, bands)
     val batchB = hammingBandRows(batchHashes, idCol, hashCol, "batch_id", "__h_b", bits, bands)
-    def hinted(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     val matchedIdx = idxB.join(
-      hinted(batchB.select("band", "band_key").distinct()),
+      broadcast(batchB.select("band", "band_key").distinct()),
       Seq("band", "band_key"), "left_semi")
     val idxBuckets = cappedCollect(matchedIdx, Seq("band", "band_key"),
       struct(col("index_id"), col("__h_i")), "idx_items",
@@ -1870,7 +1860,7 @@ object Dedup {
     val batchBuckets = cappedCollect(batchB, Seq("band", "band_key"),
       struct(col("batch_id"), col("__h_b")), "batch_items",
       useSet = true, maxBucket, s"${metricPrefix}_batch")
-    idxBuckets.join(hinted(batchBuckets), Seq("band", "band_key"))
+    idxBuckets.join(broadcast(batchBuckets), Seq("band", "band_key"))
       .select(explode(col("idx_items")).as("i"), col("batch_items"))
       .select(col("i"), explode(col("batch_items")).as("b"))
       .select(
@@ -2112,13 +2102,11 @@ object Dedup {
     hashCol: String,
     maxHamming: Int = 3,
     maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true,
     metricPrefix: String = "banded_hamming"
   ): DataFrame = {
     val (bits, bands) = readHammingBandMeta(spark, path)
     hammingMatchesAgainstBanded(batchHashes, spark.read.parquet(path),
-      idCol, hashCol, bits, maxHamming, bands, maxBucket, broadcastBatch,
-      metricPrefix)
+      idCol, hashCol, bits, maxHamming, bands, maxBucket, metricPrefix)
   }
 
   /**
@@ -2127,8 +2115,8 @@ object Dedup {
    * bucket-capped per call (batch-sized work), the index side is a
    * bare scan joined on `(band, band_key)` — NO aggregation, NO
    * re-banding, never shuffled when the batch buckets broadcast
-   * (`broadcastBatch = false` for corpus-sized batches → shuffle join,
-   * AQE-splittable). Returns (batch_id, index_id, hamming ≤
+   * (corpus-sized batches: [[graft.GraftSession]]'s corpus-sized escape →
+   * shuffle join, AQE-splittable). Returns (batch_id, index_id, hamming ≤
    * maxHamming), exact via the riding hashes.
    *
    * `bits`/`bands` MUST match the artifact's build values — mismatched
@@ -2146,19 +2134,17 @@ object Dedup {
     maxHamming: Int = 3,
     bands: Int = 4,
     maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true,
     metricPrefix: String = "banded_hamming"
   ): DataFrame = {
     requireHammingBandParams(bits, bands)
     require(maxHamming >= 0, s"maxHamming must be >= 0: $maxHamming")
-    def hinted(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     val batchB = hammingBandRows(
       batchHashes.filter(col(hashCol).isNotNull),
       idCol, hashCol, "batch_id", "__h_b", bits, bands)
     val batchBuckets = cappedCollect(batchB, Seq("band", "band_key"),
       struct(col("batch_id"), col("__h_b")), "batch_items",
       useSet = true, maxBucket, s"${metricPrefix}_batch")
-    bandedIndex.join(hinted(batchBuckets), Seq("band", "band_key"))
+    bandedIndex.join(broadcast(batchBuckets), Seq("band", "band_key"))
       .select(col("index_id"), col("index_hash"),
         explode(col("batch_items")).as("b"))
       .select(
@@ -2428,14 +2414,13 @@ object Dedup {
    * hand — meets the threshold. With numHashes=16 the estimate moves in
    * exact 1/16 steps, so thresholds are float-drift-free.
    *
-   * Scale shape: the index is banded with ONE generate and — when
-   * `broadcastBatch` holds (default; a drop is much smaller than the
-   * corpus it joins) — filtered by a broadcast SEMI join against the
-   * batch's distinct band keys, so the INDEX IS NEVER SHUFFLED beyond
-   * the matched (candidate-sized) rows. Pass broadcastBatch=false for a
-   * corpus-sized batch: the hints are dropped and AQE sizes the joins
-   * at runtime (the [[Contamination.decontaminateSpans]] fallback
-   * convention). Each side is then grouped and capped INDEPENDENTLY
+   * Scale shape: the index is banded with ONE generate and filtered by
+   * a broadcast SEMI join against the batch's distinct band keys (a
+   * drop is much smaller than the corpus it joins), so the INDEX IS
+   * NEVER SHUFFLED beyond the matched (candidate-sized) rows. A
+   * corpus-sized batch runs under [[graft.GraftSession]]'s corpus-sized
+   * escape: the hints are dropped and AQE sizes the joins at runtime.
+   * Each side is then grouped and capped INDEPENDENTLY
    * BEFORE the cross-side bucket join — the semi join emits each
    * matched index row once, so a boilerplate band key shared by I index
    * docs and B batch docs costs O(I + B) rows into aggregation, never
@@ -2467,7 +2452,6 @@ object Dedup {
     bands: Int = 4,
     threshold: Double = 0.8,
     maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true,
     tokenizer: String = TextAnalysis.WhitespaceTokenizer
   ): DataFrame = {
     require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
@@ -2489,7 +2473,6 @@ object Dedup {
           .as("bk"))
         .select(col(idAs), col(sigAs),
           col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-    def hinted(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     // the batch side caps BEFORE its buckets materialize or broadcast
     // (two-pass capRows discipline): an over-cap batch bucket would have
     // produced zero surviving output either way, so dropping it here is
@@ -2509,13 +2492,13 @@ object Dedup {
     // each index row emitted AT MOST ONCE (candidate-sized, no
     // cross-side row explosion), then grouped and capped on its own
     val matchedIdx = sigBands(indexSignatures, "index_id", "__sig_i")
-      .join(hinted(probe), Seq("band", "band_key"), "left_semi")
+      .join(broadcast(probe), Seq("band", "band_key"), "left_semi")
     val idxBuckets = cappedCollect(matchedIdx, Seq("band", "band_key"),
       struct(col("index_id"), col("__sig_i")), "idx_items",
       useSet = true, maxBucket, "incr_lsh_idx")
     // capped-array-to-array join is 1:1 per (band, key) — both sides
     // already capped at their own group stage
-    val capped = idxBuckets.join(hinted(batchBuckets), Seq("band", "band_key"))
+    val capped = idxBuckets.join(broadcast(batchBuckets), Seq("band", "band_key"))
     val agree = zip_with(col("i.__sig_i"), col("b.__sig_b"),
       (x, y) => when(x === y, 1).otherwise(0))
     capped
@@ -2542,8 +2525,8 @@ object Dedup {
    *
    * Scale shape: the [[nearDuplicatesAgainstIndex]] pattern — index
    * banded in one generate and semi-joined against the BROADCAST batch
-   * band keys (never shuffled beyond matched rows; `broadcastBatch =
-   * false` for corpus-sized batches), each side grouped and capped
+   * band keys (never shuffled beyond matched rows; corpus-sized
+   * batches: [[graft.GraftSession]]'s corpus-sized escape), each side grouped and capped
    * independently BEFORE the cross-side join (O(I + B) rows per bucket,
    * never I×B), with two-sided observed caps. The hashes ride the band
    * rows, so the verify needs no join back to either corpus.
@@ -2553,14 +2536,13 @@ object Dedup {
     indexSimhashes: DataFrame,
     maxHamming: Int = 3,
     bands: Int = 4,
-    maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = DefaultMaxBucket
   ): DataFrame =
     // 60-bit simhashes are non-negative, so the generic arm's masked
     // band keys coincide with the historical mod spelling
     hammingNearDupsAgainstIndex(batchSimhashes, indexSimhashes,
       "doc_id", "simhash", 60, maxHamming, bands, maxBucket,
-      broadcastBatch, metricPrefix = "incr_simhash")
+      metricPrefix = "incr_simhash")
 
   /**
    * Batch rows whose SimHash lands within `maxHamming` of the indexed
@@ -2578,13 +2560,12 @@ object Dedup {
     maxHamming: Int = 3,
     bands: Int = 4,
     maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true,
     tokenizer: String = TextAnalysis.WhitespaceTokenizer
   ): DataFrame = {
     val matched = simHashNearDupsAgainstIndex(
       simHashes(batch.select(col(idCol).as("doc_id"), col(textCol)), textCol, "doc_id",
         tokenizer),
-      indexSimhashes, maxHamming, bands, maxBucket, broadcastBatch)
+      indexSimhashes, maxHamming, bands, maxBucket)
       .select(col("batch_id").as(idCol)).distinct()
     batch.join(matched, Seq(idCol), "left_anti")
   }
@@ -2600,8 +2581,7 @@ object Dedup {
    * join against either corpus).
    *
    * Scale shape: identical to the MinHash incremental — the index is
-   * bucketed in one projection and (under `broadcastBatch`, the default)
-   * semi-joined against the BROADCAST batch bucket keys, so the index
+   * bucketed in one projection and semi-joined against the BROADCAST batch bucket keys, so the index
    * is never shuffled beyond the matched rows; each side groups and
    * caps independently BEFORE the cross-side bucket join (O(I + B)
    * rows per bucket, never I×B), then pair explosion + cosine verify.
@@ -2613,19 +2593,17 @@ object Dedup {
     idCol: String,
     planes: Int = 16,
     threshold: Double = 0.9,
-    maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = DefaultMaxBucket
   ): DataFrame = {
     def bucketed(df: DataFrame, as: String, vAs: String) = df.select(
       col(idCol).as(as), col(vecCol).as(vAs),
       graft.functions.HyperplaneBucketExpr(col(vecCol), planes).as("bucket"))
     val idxB = bucketed(index, "index_id", "__vi")
     val batchB = bucketed(batch, "batch_id", "__vb")
-    def hinted(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     // per-side group + cap BEFORE the cross-side join (see
     // nearDuplicatesAgainstIndex — O(I + B) rows per bucket, not I×B)
     val matchedIdx = idxB.join(
-      hinted(batchB.select("bucket").distinct()), Seq("bucket"), "left_semi")
+      broadcast(batchB.select("bucket").distinct()), Seq("bucket"), "left_semi")
     val idxBuckets = cappedCollect(matchedIdx, Seq("bucket"),
       struct(col("index_id"), col("__vi")), "idx_items",
       useSet = true, maxBucket, "incr_hyperplane_idx")
@@ -2635,7 +2613,7 @@ object Dedup {
     val batchBuckets = cappedCollect(batchB, Seq("bucket"),
       struct(col("batch_id"), col("__vb")), "batch_items",
       useSet = true, maxBucket, "incr_hyperplane_batch")
-    idxBuckets.join(hinted(batchBuckets), Seq("bucket"))
+    idxBuckets.join(broadcast(batchBuckets), Seq("bucket"))
       .select(explode(col("idx_items")).as("i"), col("batch_items"))
       .select(col("i"), explode(col("batch_items")).as("b"))
       .select(
@@ -2658,11 +2636,10 @@ object Dedup {
     idCol: String,
     planes: Int = 16,
     threshold: Double = 0.9,
-    maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = DefaultMaxBucket
   ): DataFrame = {
     val matched = embeddingNearDupAgainstIndex(
-      batch, index, vecCol, idCol, planes, threshold, maxBucket, broadcastBatch)
+      batch, index, vecCol, idCol, planes, threshold, maxBucket)
       .select(col("batch_id").as(idCol)).distinct()
     batch.join(matched, Seq(idCol), "left_anti")
   }
@@ -2684,12 +2661,11 @@ object Dedup {
     bands: Int = 4,
     threshold: Double = 0.8,
     maxBucket: Option[Int] = DefaultMaxBucket,
-    broadcastBatch: Boolean = true,
     tokenizer: String = TextAnalysis.WhitespaceTokenizer
   ): DataFrame = {
     val matched = nearDuplicatesAgainstIndex(
       batch, indexSignatures, textCol, idCol,
-      k, numHashes, bands, threshold, maxBucket, broadcastBatch, tokenizer)
+      k, numHashes, bands, threshold, maxBucket, tokenizer)
       .select(col("batch_id").as(idCol)).distinct()
     batch.join(matched, Seq(idCol), "left_anti")
   }

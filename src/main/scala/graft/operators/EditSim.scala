@@ -170,8 +170,7 @@ object EditSim {
     drop: DataFrame,
     strCol: String,
     idCol: String,
-    maxDist: Int = 1,
-    broadcastDrop: Boolean = true
+    maxDist: Int = 1
   ): DataFrame = {
     val guarded = index.filter(
       when(col("d") === lit(maxDist), lit(true))
@@ -181,7 +180,7 @@ object EditSim {
             "rebuild to change it")))))
     SetSim.appendPerDocIndex(guarded,
       editVariantIndex(drop, strCol, idCol, maxDist),
-      "id", "editVariantIndexAppend", tGuard = None, broadcastDrop)
+      "id", "editVariantIndexAppend", tGuard = None)
   }
 
   /**
@@ -202,8 +201,8 @@ object EditSim {
    * side groups and caps INDEPENDENTLY before the 1:1-per-variant
    * bucket join (O(I + B) rows per bucket, never I×B). Both strings
    * ride their variant rows, so verification needs no join back to
-   * either corpus. `broadcastBatch = false` drops the hints for a
-   * corpus-sized batch.
+   * either corpus. A corpus-sized batch runs under
+   * [[graft.GraftSession]]'s corpus-sized escape.
    */
   def editDistancePairsAgainst(
     batch: DataFrame,
@@ -211,8 +210,7 @@ object EditSim {
     strCol: String,
     idCol: String,
     maxDist: Int = 1,
-    maxVariantBucket: Option[Int] = DefaultMaxVariantBucket,
-    broadcastBatch: Boolean = true
+    maxVariantBucket: Option[Int] = DefaultMaxVariantBucket
   ): DataFrame = {
     require(maxDist == 1 || maxDist == 2, s"maxDist must be 1 or 2, got $maxDist")
     val guardedIndex = index.filter(
@@ -220,7 +218,6 @@ object EditSim {
         .otherwise(raise_error(concat(
           lit("editDistancePairsAgainst: index built at d="), col("d").cast("string"),
           lit(s" cannot serve maxDist=$maxDist > build depth")))))
-    def hinted(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     // batch side capped BEFORE anything materializes or broadcasts —
     // and it stays FLAT: the bucket join only needs 1:1-per-key
     // economics on ONE side, so collecting the batch into arrays (only
@@ -236,16 +233,13 @@ object EditSim {
     val bvar = variantTable(batch, strCol, idCol, maxDist)
     val bFlat = Dedup.capRows(bvar, Seq("v"),
       maxVariantBucket, "editsim_incr_batch", "maxVariantBucket")
-    // broadcast arm: no `.distinct()` on the probe — the broadcast
-    // hashed relation dedups keys at build time anyway, so the distinct
-    // only bought a smaller driver collect at the price of a whole
-    // extra shuffle stage of the (small) batch variants (one of the
-    // r17 regression's named contributors). The shuffled arm keeps it:
-    // there a corpus-sized probe with duplicate keys would inflate the
-    // semi join's shuffle by the duplication factor.
-    val probe =
-      if (broadcastBatch) bvar.select("v") else bvar.select("v").distinct()
-    val matchedIdx = guardedIndex.join(hinted(probe), Seq("v"), "left_semi")
+    // no `.distinct()` on the probe — the broadcast hashed relation
+    // dedups keys at build time anyway, so the distinct only bought a
+    // smaller driver collect at the price of a whole extra shuffle
+    // stage of the (small) batch variants (one of the r17 regression's
+    // named contributors)
+    val matchedIdx = guardedIndex
+      .join(broadcast(bvar.select("v")), Seq("v"), "left_semi")
     // list parity, not set: index rows are unique per (v, id) by
     // construction (variantTable dedups per id; appendPerDocIndex fails
     // loud on a re-added id), so the set arm's per-item dedup hashing
@@ -256,7 +250,7 @@ object EditSim {
       struct(col("id"), col("len"), col("s")), "idx_items",
       useSet = false, maxVariantBucket, "editsim_incr_idx", "maxVariantBucket")
     idxBuckets
-      .join(hinted(bFlat.select(col("v"), col("id").as("__b_id"),
+      .join(broadcast(bFlat.select(col("v"), col("id").as("__b_id"),
         col("len").as("__b_len"), col("s").as("__b_s"))), Seq("v"))
       .select(explode(col("idx_items")).as("i"),
         col("__b_id"), col("__b_len"), col("__b_s"))

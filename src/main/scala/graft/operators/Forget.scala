@@ -63,20 +63,18 @@ object Forget {
    * anti-join — the index streams, is never shuffled, and the rewrite
    * cost is O(index scan + removal set); rows with a NULL id are KEPT
    * (anti-join semantics — a NULL id matches nothing, same as the
-   * NOT EXISTS oracle spelling). Set `broadcastRemoved = false` for a
-   * removal set too large to broadcast (AQE then sizes the join).
+   * NOT EXISTS oracle spelling). For a removal set too large to
+   * broadcast see [[graft.GraftSession]]'s corpus-sized escape.
    */
   def removeIds(
     index: DataFrame,
     idCol: String,
     removed: DataFrame,
-    removedIdCol: String,
-    broadcastRemoved: Boolean = true
+    removedIdCol: String
   ): DataFrame = {
     Cols.requireAbsent(index, "__forget_id")
     val rm = removed.select(col(removedIdCol).as("__forget_id")).distinct()
-    val hinted = if (broadcastRemoved) broadcast(rm) else rm
-    index.join(hinted, col(idCol) === col("__forget_id"), "left_anti")
+    index.join(broadcast(rm), col(idCol) === col("__forget_id"), "left_anti")
   }
 
   /**
@@ -96,8 +94,7 @@ object Forget {
     countedIndex: DataFrame,
     removed: DataFrame,
     textCol: String,
-    tokenizer: String = graft.operators.TextAnalysis.WhitespaceTokenizer,
-    broadcastRemoved: Boolean = true
+    tokenizer: String = graft.operators.TextAnalysis.WhitespaceTokenizer
   ): DataFrame = {
     Cols.requireAbsent(countedIndex, "__rm_n")
     // a NULL-text removed row has no fingerprint — nothing to forget
@@ -111,7 +108,7 @@ object Forget {
         .as("fingerprint"))
       .filter(col("fingerprint").isNotNull)
       .groupBy("fingerprint").agg(count(lit(1)).as("__rm_n"))
-    val hinted = if (broadcastRemoved) broadcast(rm) else rm
+    val hinted = broadcast(rm)
     // NOT a full-outer merge: BroadcastHashJoin has no full-outer build
     // side, so the hint would be silently ignored and the WHOLE index
     // shuffled. Split instead (zero index shuffles): subtract via a
@@ -142,8 +139,7 @@ object Forget {
     // n_docs 0 (filtered away) unless some removed fingerprint never
     // existed in the index
     val missing = rm
-      .join(if (broadcastRemoved) broadcast(matched) else matched,
-        Seq("fingerprint"), "left_anti")
+      .join(broadcast(matched), Seq("fingerprint"), "left_anti")
       .agg(count(lit(1)).as("__miss"), min(col("fingerprint")).as("__ex"))
       .select(
         lit(null).cast("string").as("fingerprint"),
@@ -184,8 +180,7 @@ object Forget {
     countedIndex: DataFrame,
     added: DataFrame,
     textCol: String,
-    tokenizer: String = graft.operators.TextAnalysis.WhitespaceTokenizer,
-    broadcastAdded: Boolean = true
+    tokenizer: String = graft.operators.TextAnalysis.WhitespaceTokenizer
   ): DataFrame = {
     Cols.requireAbsent(countedIndex, "__add_n")
     val add = added
@@ -193,7 +188,7 @@ object Forget {
         .as("fingerprint"))
       .filter(col("fingerprint").isNotNull)
       .groupBy("fingerprint").agg(count(lit(1)).as("__add_n"))
-    val hinted = if (broadcastAdded) broadcast(add) else add
+    val hinted = broadcast(add)
     // see forgetFingerprints: full-outer cannot broadcast, so the merge
     // splits into a broadcast LEFT join for indexed fingerprints plus a
     // match-bounded anti leg for fingerprints new to the index
@@ -204,8 +199,7 @@ object Forget {
     val matched = countedIndex.select("fingerprint")
       .join(hinted.select("fingerprint"), Seq("fingerprint"), "left_semi")
     val newOnly = add
-      .join(if (broadcastAdded) broadcast(matched) else matched,
-        Seq("fingerprint"), "left_anti")
+      .join(broadcast(matched), Seq("fingerprint"), "left_anti")
       .select(col("fingerprint"), col("__add_n").as("n_docs"))
     merged.unionByName(newOnly)
   }

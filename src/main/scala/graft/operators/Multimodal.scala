@@ -375,14 +375,13 @@ object Multimodal {
     index: DataFrame,
     maxHamming: Int = 3,
     bands: Int = 4,
-    maxBucket: Option[Int] = Dedup.DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = Dedup.DefaultMaxBucket
   ): DataFrame =
     Dedup.hammingNearDupsAgainstIndex(
       imageDHash(batch).filter(col("dhash").isNotNull),
       index.filter(col("dhash").isNotNull),
       "doc_id", "dhash", 64, maxHamming, bands, maxBucket,
-      broadcastBatch, metricPrefix = "incr_dhash")
+      metricPrefix = "incr_dhash")
 
   /**
    * PRE-BANDED persisted media-hash index over an existing
@@ -437,13 +436,11 @@ object Multimodal {
     batch: Dataset[MediaRecord],
     path: String,
     maxHamming: Int = 3,
-    maxBucket: Option[Int] = Dedup.DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = Dedup.DefaultMaxBucket
   ): DataFrame =
     Dedup.hammingMatchesAgainstBandedDir(batch.sparkSession, path,
       imageDHash(batch).filter(col("dhash").isNotNull),
-      "doc_id", "dhash", maxHamming, maxBucket, broadcastBatch,
-      metricPrefix = "banded_dhash")
+      "doc_id", "dhash", maxHamming, maxBucket, metricPrefix = "banded_dhash")
 
   /** [[imageNearDupsAgainst]] over a PRE-BANDED [[bandedMediaIndex]]
     * artifact: per-probe work is batch-sized only — the index is
@@ -454,13 +451,12 @@ object Multimodal {
     bandedIndex: DataFrame,
     maxHamming: Int = 3,
     bands: Int = 4,
-    maxBucket: Option[Int] = Dedup.DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = Dedup.DefaultMaxBucket
   ): DataFrame =
     Dedup.hammingMatchesAgainstBanded(
       imageDHash(batch).filter(col("dhash").isNotNull),
       bandedIndex, "doc_id", "dhash", 64, maxHamming, bands, maxBucket,
-      broadcastBatch, metricPrefix = "banded_dhash")
+      metricPrefix = "banded_dhash")
 
   /**
    * STREAMING image dedup as a `foreachBatch` sink — row 154's
@@ -703,14 +699,13 @@ object Multimodal {
     decoder: () => FrameDecoder = SniffFrames,
     maxHamming: Int = 3,
     bands: Int = 4,
-    maxBucket: Option[Int] = Dedup.DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = Dedup.DefaultMaxBucket
   ): DataFrame =
     Dedup.hammingNearDupsAgainstIndex(
       videoDHash(batch, n, decoder).filter(col("vhash").isNotNull),
       index.filter(col("vhash").isNotNull),
       "doc_id", "vhash", 64, maxHamming, bands, maxBucket,
-      broadcastBatch, metricPrefix = "incr_vhash")
+      metricPrefix = "incr_vhash")
 
   /** [[videoNearDupsAgainst]] over a PRE-BANDED [[bandedMediaIndex]]
     * artifact built from the [[videoDHash]] table (same `n` AND same
@@ -722,13 +717,12 @@ object Multimodal {
     decoder: () => FrameDecoder = SniffFrames,
     maxHamming: Int = 3,
     bands: Int = 4,
-    maxBucket: Option[Int] = Dedup.DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = Dedup.DefaultMaxBucket
   ): DataFrame =
     Dedup.hammingMatchesAgainstBanded(
       videoDHash(batch, n, decoder).filter(col("vhash").isNotNull),
       bandedIndex, "doc_id", "vhash", 64, maxHamming, bands, maxBucket,
-      broadcastBatch, metricPrefix = "banded_vhash")
+      metricPrefix = "banded_vhash")
 
   /**
    * 64-bit perceptual AUDIO fingerprint — the energy-contour dHash:
@@ -785,14 +779,13 @@ object Multimodal {
     index: DataFrame,
     maxHamming: Int = 3,
     bands: Int = 4,
-    maxBucket: Option[Int] = Dedup.DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = Dedup.DefaultMaxBucket
   ): DataFrame =
     Dedup.hammingNearDupsAgainstIndex(
       audioFingerprint(batch).filter(col("afp").isNotNull),
       index.filter(col("afp").isNotNull),
       "doc_id", "afp", 64, maxHamming, bands, maxBucket,
-      broadcastBatch, metricPrefix = "incr_afp")
+      metricPrefix = "incr_afp")
 
   /** [[audioNearDupsAgainst]] over a PRE-BANDED [[bandedMediaIndex]]
     * artifact built from the [[audioFingerprint]] table (`bands` must
@@ -802,13 +795,12 @@ object Multimodal {
     bandedIndex: DataFrame,
     maxHamming: Int = 3,
     bands: Int = 4,
-    maxBucket: Option[Int] = Dedup.DefaultMaxBucket,
-    broadcastBatch: Boolean = true
+    maxBucket: Option[Int] = Dedup.DefaultMaxBucket
   ): DataFrame =
     Dedup.hammingMatchesAgainstBanded(
       audioFingerprint(batch).filter(col("afp").isNotNull),
       bandedIndex, "doc_id", "afp", 64, maxHamming, bands, maxBucket,
-      broadcastBatch, metricPrefix = "banded_afp")
+      metricPrefix = "banded_afp")
 
   // ----------------------------------------------------- real audio work
 

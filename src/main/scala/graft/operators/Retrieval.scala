@@ -507,12 +507,10 @@ object Retrieval {
   /** `rows` (keyed by `doc_id`) minus the tombstoned ids — a
     * removal-set-sized anti join, the identity before any forget. */
   private def minusTombstones(
-    spark: SparkSession, path: String, m: SidecarMeta, rows: DataFrame,
-    broadcastRemoved: Boolean = true): DataFrame =
+    spark: SparkSession, path: String, m: SidecarMeta, rows: DataFrame): DataFrame =
     sidecarRemoved(spark, path, m).fold(rows) { rm =>
       val r = rm.select(col("doc_id").as("__rm_id"))
-      rows.join(if (broadcastRemoved) broadcast(r) else r,
-        col("doc_id") === col("__rm_id"), "left_anti")
+      rows.join(broadcast(r), col("doc_id") === col("__rm_id"), "left_anti")
     }
 
   /** Every live posting row (sentinels included) across generations —
@@ -544,7 +542,6 @@ object Retrieval {
     queryTextCol: String,
     k1: Double = 1.2,
     b: Double = 0.75,
-    broadcastRemoved: Boolean = true,
     maxQueryTerms: Int = 100000
   ): DataFrame = {
     require(k1 >= 0.0, s"k1 must be non-negative: $k1")
@@ -560,8 +557,7 @@ object Retrieval {
     val terms = qterms.select("word").distinct()
     val posts = minusTombstones(spark, path, m,
       prunedSidecarPostings(spark, path, m, wanted)
-        .join(broadcast(terms), Seq("word"), "left_semi"),
-      broadcastRemoved)
+        .join(broadcast(terms), Seq("word"), "left_semi"))
     val dfT = spark.read.schema(SidecarDfSchema)
       .parquet(s"$path/df-v${m.dfV}")
       .filter(inBuckets(wanted))
@@ -654,13 +650,12 @@ object Retrieval {
     k: Int = 10,
     k1: Double = 1.2,
     b: Double = 0.75,
-    broadcastRemoved: Boolean = true,
     maxQueryTerms: Int = 100000
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     rankTopK(
       bm25ScoresFromSidecar(spark, path, queries, queryIdCol, queryTextCol,
-        k1, b, broadcastRemoved, maxQueryTerms), k)
+        k1, b, maxQueryTerms), k)
   }
 
   /** The grow's guarded posting frame: the drop's posting rows plus a
@@ -673,10 +668,8 @@ object Retrieval {
     path: String,
     drop: DataFrame,
     textCol: String,
-    idCol: String,
-    broadcastDrop: Boolean = true
+    idCol: String
   ): DataFrame = {
-    def hinted(df: DataFrame) = if (broadcastDrop) broadcast(df) else df
     val m = readSidecarMeta(spark, path)
     val docs = sidecarDocs(drop, textCol, idCol)
     val newPost = sidecarPostingsOf(docs)
@@ -692,7 +685,7 @@ object Retrieval {
     // that never reads it (a bare count()).
     val dropIds = docs.select(col("doc_id").as("__aid")).distinct()
     readSidecarRegistry(spark, path, m).select("doc_id")
-      .join(hinted(dropIds), col("doc_id") === col("__aid"), "left_semi")
+      .join(broadcast(dropIds), col("doc_id") === col("__aid"), "left_semi")
       .limit(1)
       .filter(raise_error(concat(
           lit("bm25SidecarAppend: drop id already registered: "),
@@ -727,13 +720,11 @@ object Retrieval {
     path: String,
     drop: DataFrame,
     textCol: String,
-    idCol: String,
-    broadcastDrop: Boolean = true
+    idCol: String
   ): Unit = {
-    def hinted(df: DataFrame) = if (broadcastDrop) broadcast(df) else df
     val m = readSidecarMeta(spark, path)
     bucketClustered(
-      sidecarAppendPostings(spark, path, drop, textCol, idCol, broadcastDrop)
+      sidecarAppendPostings(spark, path, drop, textCol, idCol)
         .withColumn("bucket", sidecarBucket(m.buckets)))
       .write.partitionBy("bucket").mode("overwrite")
       .parquet(s"$path/postings-g${m.nextGen}")
@@ -773,14 +764,13 @@ object Retrieval {
                 .parquet(s"$path/df-v${m.dfV}")
                 .filter(inBuckets(touched))
                 .drop("bucket")
-              val merged = oldDf.join(hinted(aDf), Seq("word"), "left")
+              val merged = oldDf.join(broadcast(aDf), Seq("word"), "left")
                 .select(col("word"),
                   (col("df") + coalesce(col("__a_df"), lit(0L))).as("df"))
               val matched = oldDf.select("word")
-                .join(hinted(aDf.select("word")), Seq("word"), "left_semi")
+                .join(broadcast(aDf.select("word")), Seq("word"), "left_semi")
               val newOnly = aDf
-                .join(if (broadcastDrop) broadcast(matched) else matched,
-                  Seq("word"), "left_anti")
+                .join(broadcast(matched), Seq("word"), "left_anti")
                 .select(col("word"), col("__a_df").as("df"))
               writeDfVersion(spark, path, m, touched, merged.unionByName(newOnly))
             } finally aDf.unpersist()
@@ -818,17 +808,15 @@ object Retrieval {
     spark: SparkSession,
     path: String,
     removed: DataFrame,
-    removedIdCol: String,
-    broadcastRemoved: Boolean = true
+    removedIdCol: String
   ): Unit = {
-    def hinted(df: DataFrame) = if (broadcastRemoved) broadcast(df) else df
     val m = readSidecarMeta(spark, path)
     val rem = removed.select(col(removedIdCol).as("__rid")).distinct()
     val oldRm = sidecarRemoved(spark, path, m)
     // double-forget guard (lazy, rides the tombstone write below)
     val guarded = oldRm.fold(rem) { prior =>
       val dup = prior.select(col("doc_id").as("__rid"))
-        .join(hinted(rem), Seq("__rid"), "left_semi").limit(1)
+        .join(broadcast(rem), Seq("__rid"), "left_semi").limit(1)
       rem.unionByName(dup.select(
         when(col("__rid").isNotNull,
           raise_error(concat(
@@ -844,7 +832,7 @@ object Retrieval {
     // persisted because the tombstone write and the stats fold both
     // consume it.
     val removedReg = readSidecarRegistry(spark, path, m)
-      .join(hinted(guarded), col("doc_id") === col("__rid"), "left_semi")
+      .join(broadcast(guarded), col("doc_id") === col("__rid"), "left_semi")
       .persist()
     try {
       // new tombstone version: prior tombstones ∪ the newly forgotten
@@ -860,7 +848,7 @@ object Retrieval {
       // words' buckets are recomputed; untouched bucket files are
       // byte-copied forward.
       val rDf = readSidecarPostings(spark, path, m)
-        .join(hinted(guarded), col("doc_id") === col("__rid"), "left_semi")
+        .join(broadcast(guarded), col("doc_id") === col("__rid"), "left_semi")
         .filter(col("word").isNotNull)
         .groupBy("word").agg(count(lit(1)).as("__r_df"))
         .persist()
@@ -870,7 +858,7 @@ object Retrieval {
           .parquet(s"$path/df-v${m.dfV}")
           .filter(inBuckets(touched))
           .drop("bucket")
-          .join(hinted(rDf), Seq("word"), "left")
+          .join(broadcast(rDf), Seq("word"), "left")
           .select(col("word"),
             (col("df") - coalesce(col("__r_df"), lit(0L))).as("df"))
           .filter(col("df") > 0)

@@ -312,8 +312,8 @@ object SetSim {
    * matched (candidate-sized) rows only, the index is never shuffled
    * beyond them — then each side is grouped and capped INDEPENDENTLY
    * before the 1:1-per-token bucket join (O(I + B) rows into
-   * aggregation, never I×B). `broadcastBatch = false` drops the hints
-   * for a corpus-sized batch and lets AQE size the joins. Verification
+   * aggregation, never I×B); a corpus-sized batch runs under
+   * [[graft.GraftSession]]'s corpus-sized escape. Verification
    * intersects the batch set (one broadcast join back to the small
    * batch) with the set RIDING the matched index rows — the corpus
    * text/sets are never touched.
@@ -324,8 +324,7 @@ object SetSim {
     setCol: String,
     idCol: String,
     threshold: Double,
-    maxTokenBucket: Option[Int] = DefaultMaxTokenBucket,
-    broadcastBatch: Boolean = true
+    maxTokenBucket: Option[Int] = DefaultMaxTokenBucket
   ): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
@@ -334,7 +333,6 @@ object SetSim {
         col(idCol).as("batch_id"),
         sort_array(array_distinct(col(setCol))).as("__bset"))
       .filter(col("__bset").isNotNull && size(col("__bset")) > 0)
-    def hinted(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     // loud build-threshold guard: probing below the build threshold
     // would silently lose pairs (shorter persisted prefixes than the
     // probe needs) — fail the query instead, at plan-execution time
@@ -357,12 +355,12 @@ object SetSim {
     // re-sort defensively at MATCHED-row size (an index persisted by a
     // pre-merge-verify build may carry unsorted sets; sorting sorted
     // input is cheap and this is candidate-bounded, not corpus work)
-    val matchedIdx = guardedIndex.join(hinted(probe), Seq("tok"), "left_semi")
+    val matchedIdx = guardedIndex.join(broadcast(probe), Seq("tok"), "left_semi")
       .withColumn("set", sort_array(col("set")))
     val idxBuckets = Dedup.cappedCollect(matchedIdx, Seq("tok"),
       struct(col("id"), col("n"), col("pos"), col("set")), "idx_items",
       useSet = false, maxTokenBucket, "setsim_incr_idx", "maxTokenBucket")
-    val capped = idxBuckets.join(hinted(batchBuckets), Seq("tok"))
+    val capped = idxBuckets.join(broadcast(batchBuckets), Seq("tok"))
     val alpha = (col("i.n") + col("b.__bn")).cast("double") *
       (threshold / (1.0 + threshold)) - lit(1e-9)
     val pairs = capped
@@ -377,7 +375,7 @@ object SetSim {
       // per-pair rows carry identical (n, bn, set) — any survivor works
       .dropDuplicates("batch_id", "index_id")
     pairs
-      .join(hinted(bsets), Seq("batch_id"))
+      .join(broadcast(bsets), Seq("batch_id"))
       .withColumn("__ov", intersectCount(batch, setCol, col("__iset"), col("__bset")))
       .withColumn("jaccard", col("__ov").cast("double") /
         (col("__in") + col("__bn") - col("__ov")).cast("double"))
@@ -436,12 +434,11 @@ object SetSim {
     drop: DataFrame,
     setCol: String,
     idCol: String,
-    threshold: Double,
-    broadcastDrop: Boolean = true
+    threshold: Double
   ): DataFrame = {
     val newRows = setSimPrefixIndex(drop, setCol, idCol, threshold)
     appendPerDocIndex(index, newRows, "id", "setSimIndexAppend",
-      tGuard = Some(threshold), broadcastDrop)
+      tGuard = Some(threshold))
   }
 
   /** Text arm of [[setSimIndexAppend]] (hashed k-word shingles). */
@@ -451,12 +448,11 @@ object SetSim {
     textCol: String,
     idCol: String,
     threshold: Double,
-    k: Int = 3,
-    broadcastDrop: Boolean = true
+    k: Int = 3
   ): DataFrame =
     appendPerDocIndex(index,
       setSimShingleIndex(drop, textCol, idCol, threshold, k),
-      "id", "setSimShingleIndexAppend", tGuard = Some(threshold), broadcastDrop)
+      "id", "setSimShingleIndexAppend", tGuard = Some(threshold))
 
   /**
    * GROW a persisted [[setContainmentIndex]] — the trivial case of the
@@ -468,11 +464,10 @@ object SetSim {
     index: DataFrame,
     drop: DataFrame,
     setCol: String,
-    idCol: String,
-    broadcastDrop: Boolean = true
+    idCol: String
   ): DataFrame =
     appendPerDocIndex(index, setContainmentIndex(drop, setCol, idCol),
-      "id", "setContainmentIndexAppend", tGuard = Some(0.0), broadcastDrop)
+      "id", "setContainmentIndexAppend", tGuard = Some(0.0))
 
   /** Text arm of [[setContainmentIndexAppend]]. */
   def setContainmentShingleIndexAppend(
@@ -480,12 +475,11 @@ object SetSim {
     drop: DataFrame,
     textCol: String,
     idCol: String,
-    k: Int = 3,
-    broadcastDrop: Boolean = true
+    k: Int = 3
   ): DataFrame =
     appendPerDocIndex(index,
       setContainmentShingleIndex(drop, textCol, idCol, k),
-      "id", "setContainmentShingleIndexAppend", tGuard = Some(0.0), broadcastDrop)
+      "id", "setContainmentShingleIndexAppend", tGuard = Some(0.0))
 
   /** Shared grow plumbing of the per-doc-row index family: verify the
     * build parameter riding the index rows (when `tGuard` is set),
@@ -497,8 +491,7 @@ object SetSim {
     newRows: DataFrame,
     idName: String,
     what: String,
-    tGuard: Option[Double],
-    broadcastDrop: Boolean
+    tGuard: Option[Double]
   ): DataFrame = {
     val guarded = tGuard.fold(index) { t =>
       index.filter(
@@ -509,12 +502,11 @@ object SetSim {
               "rebuild to change it")))))
     }
     val dropIds = newRows.select(col(idName).as("__aid")).distinct()
-    val hinted = if (broadcastDrop) broadcast(dropIds) else dropIds
     // collision fails loud through a FILTER predicate (cardinality-
     // deciding, so no consumer's column pruning can elide it); it
     // references both join sides, so it cannot be pushed below the join
     guarded
-      .join(hinted, col(idName) === col("__aid"), "left")
+      .join(broadcast(dropIds), col(idName) === col("__aid"), "left")
       .filter(
         when(col("__aid").isNotNull,
           raise_error(concat(
@@ -563,8 +555,7 @@ object SetSim {
     setCol: String,
     idCol: String,
     threshold: Double,
-    maxTokenBucket: Option[Int] = DefaultMaxTokenBucket,
-    broadcastBatch: Boolean = true
+    maxTokenBucket: Option[Int] = DefaultMaxTokenBucket
   ): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
@@ -572,7 +563,6 @@ object SetSim {
         col(idCol).as("batch_id"),
         sort_array(array_distinct(col(setCol))).as("__bset"))
       .filter(col("__bset").isNotNull && size(col("__bset")) > 0)
-    def hinted(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
     // loud guard: a Jaccard prefix index (t > 0) lacks the suffix
     // postings containment completeness needs
     val guardedIndex = index.filter(
@@ -596,12 +586,12 @@ object SetSim {
       struct(col("batch_id"), col("__bn"), col("__pos")), "batch_items",
       useSet = true, maxTokenBucket, "setsim_cont_batch", "maxTokenBucket")
     val probe = batchBuckets.select("tok")
-    val matchedIdx = guardedIndex.join(hinted(probe), Seq("tok"), "left_semi")
+    val matchedIdx = guardedIndex.join(broadcast(probe), Seq("tok"), "left_semi")
       .withColumn("set", sort_array(col("set")))
     val idxBuckets = Dedup.cappedCollect(matchedIdx, Seq("tok"),
       struct(col("id"), col("set")), "idx_items",
       useSet = false, maxTokenBucket, "setsim_cont_idx", "maxTokenBucket")
-    val capped = idxBuckets.join(hinted(batchBuckets), Seq("tok"))
+    val capped = idxBuckets.join(broadcast(batchBuckets), Seq("tok"))
     val pairs = capped
       .select(explode(col("idx_items")).as("i"), col("batch_items"))
       .select(col("i"), explode(col("batch_items")).as("b"))
@@ -612,7 +602,7 @@ object SetSim {
         col("b.__bn").as("__bn"), col("i.set").as("__iset"))
       .dropDuplicates("batch_id", "index_id")
     pairs
-      .join(hinted(bsets), Seq("batch_id"))
+      .join(broadcast(bsets), Seq("batch_id"))
       .withColumn("__ov", intersectCount(batch, setCol, col("__iset"), col("__bset")))
       .withColumn("containment", col("__ov").cast("double") / col("__bn").cast("double"))
       .filter(col("containment") >= threshold)
@@ -660,14 +650,13 @@ object SetSim {
     idCol: String,
     threshold: Double,
     k: Int = 3,
-    maxTokenBucket: Option[Int] = DefaultMaxTokenBucket,
-    broadcastBatch: Boolean = true
+    maxTokenBucket: Option[Int] = DefaultMaxTokenBucket
   ): DataFrame =
     setContainmentJoinAgainst(
       Dedup.hashedShingleTable(batch, textCol, idCol, k)
         .withColumnRenamed("doc_id", idCol)
         .withColumnRenamed("hs", "__shingles"),
-      index, "__shingles", idCol, threshold, maxTokenBucket, broadcastBatch)
+      index, "__shingles", idCol, threshold, maxTokenBucket)
 
   /** Text arm of [[setSimilarityJoinAgainst]]: a document batch vs a
     * persisted [[setSimShingleIndex]]. */
@@ -678,12 +667,11 @@ object SetSim {
     idCol: String,
     threshold: Double,
     k: Int = 3,
-    maxTokenBucket: Option[Int] = DefaultMaxTokenBucket,
-    broadcastBatch: Boolean = true
+    maxTokenBucket: Option[Int] = DefaultMaxTokenBucket
   ): DataFrame =
     setSimilarityJoinAgainst(
       Dedup.hashedShingleTable(batch, textCol, idCol, k)
         .withColumnRenamed("doc_id", idCol)
         .withColumnRenamed("hs", "__shingles"),
-      index, "__shingles", idCol, threshold, maxTokenBucket, broadcastBatch)
+      index, "__shingles", idCol, threshold, maxTokenBucket)
 }

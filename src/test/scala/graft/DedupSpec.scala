@@ -682,14 +682,12 @@ class DedupSpec extends SparkSpec {
     val corpus = (1L to 50L)
       .map(i => (i, s"doc $i says $evalQ end")).toDF("doc_id", "text")
     val evalSet = Seq((100L, evalQ)).toDF("doc_id", "text")
-    // disable auto-broadcast so the unhinted rebuild join genuinely takes
-    // the shuffle path (the explicit broadcast() on the eval gram set
-    // still forces that one — hints outrank the threshold)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // drop the hints (the corpus-sized escape) and disable auto-broadcast
+    // so the rebuild join genuinely takes the shuffle path
+    withConf("spark.sql.optimizer.disableHints" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val q = graft.operators.Contamination.decontaminateSpans(
-        corpus, evalSet, "text", "doc_id", k = 3, broadcastMatches = false)
+        corpus, evalSet, "text", "doc_id", k = 3)
       val rows = q.collect()
         .map(r => r.getLong(0) -> (r.getString(1), r.getAs[Int]("n_tokens_removed")))
         .toMap
@@ -698,7 +696,7 @@ class DedupSpec extends SparkSpec {
       val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
         s"expected the rebuild join to fall back to a shuffle join:\n${plan.take(3000)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("dropRepeatedLinesWithinDoc: first occurrence kept, blanks exempt, order preserved") {
@@ -1121,10 +1119,16 @@ class DedupSpec extends SparkSpec {
     // the index-side band table is never shuffled before the join
     assert("BroadcastHashJoin \\[band#\\d+, band_key#".r.findAllIn(plan).nonEmpty,
       plan.take(4000))
-    // and with the hint dropped the query still computes the same pairs
-    val viaAqe = Dedup.nearDuplicatesAgainstIndex(batch, idx, "text", "doc_id",
-        broadcastBatch = false)
-      .select("batch_id", "index_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // and with the hint dropped (the corpus-sized escape, auto-broadcast
+    // off) the bucket join shuffles and still computes the same pairs
+    val (viaAqe, aqePlan) = withConf("spark.sql.optimizer.disableHints" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val u = Dedup.nearDuplicatesAgainstIndex(batch, idx, "text", "doc_id")
+        .select("batch_id", "index_id")
+      (u.collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        u.queryExecution.toString)
+    }
+    assert(!aqePlan.contains("BroadcastHashJoin"), aqePlan.take(4000))
     val viaHint = q.select("batch_id", "index_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaAqe == viaHint)
@@ -1255,11 +1259,12 @@ class DedupSpec extends SparkSpec {
     } yield (ib, ii, d)).toSet
     assert(banded === want)
     assert(flat === want)
-    // the shuffle-join arm for corpus-sized batches is value-identical
-    val wide = pairs(Dedup.hammingMatchesAgainstBanded(
-      batch.toDF("id", "h"), spark.read.parquet(out), "id", "h",
-      bits = 64, maxHamming = 3, bands = 4, maxBucket = None,
-      broadcastBatch = false))
+    // the unhinted arm for corpus-sized batches is value-identical
+    val wide = withConf("spark.sql.optimizer.disableHints" -> "true") {
+      pairs(Dedup.hammingMatchesAgainstBanded(
+        batch.toDF("id", "h"), spark.read.parquet(out), "id", "h",
+        bits = 64, maxHamming = 3, bands = 4, maxBucket = None))
+    }
     assert(wide === want)
     // NULL hashes on either side never band, never match
     val nulls = Seq((9000L, Option.empty[Long]), (9001L, Some(batch.head._2)))

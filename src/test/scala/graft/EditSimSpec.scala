@@ -75,18 +75,18 @@ class EditSimSpec extends SparkSpec {
       prior.take(10).map { case (i, s) => (2000L + i, s) }
     val priorDf = prior.toDF("id", "s")
     val batchDf = batch.toDF("id", "s")
-    for (d <- Seq(1, 2); bcast <- Seq(true, false)) {
+    for (d <- Seq(1, 2); disableHints <- Seq(false, true)) {
       val idx = EditSim.editVariantIndex(priorDf, "s", "id", maxDist = d)
-      val got = EditSim.editDistancePairsAgainst(batchDf, idx, "s", "id",
-          maxDist = d, broadcastBatch = bcast)
-        .as[(Long, Long, Int)].collect()
-        .map { case (b, i, e) => (b, i) -> e }.toMap
+      val got = withConf("spark.sql.optimizer.disableHints" -> disableHints.toString) {
+        EditSim.editDistancePairsAgainst(batchDf, idx, "s", "id", maxDist = d)
+          .as[(Long, Long, Int)].collect()
+      }.map { case (b, i, e) => (b, i) -> e }.toMap
       val want = (for {
         (ib, sb) <- batch; (ip, sp) <- prior
         e = lev(sb, sp)
         if e <= d
       } yield (ib, ip) -> e).toMap
-      assert(got === want, s"maxDist $d bcast $bcast")
+      assert(got === want, s"maxDist $d disableHints $disableHints")
     }
   }
 

@@ -10,10 +10,12 @@ class ForgetSpec extends SparkSpec {
     val idx = Seq((Some(1L), "a"), (Some(2L), "b"), (None, "c"), (Some(3L), "d"))
       .toDF("doc_id", "payload")
     val rm = Seq(2L, 99L).toDF("id")
-    for (bcast <- Seq(true, false)) {
-      val out = Forget.removeIds(idx, "doc_id", rm, "id", broadcastRemoved = bcast)
-        .select("payload").as[String].collect().toSet
-      assert(out === Set("a", "c", "d"), s"bcast $bcast")
+    for (disableHints <- Seq(false, true)) {
+      val out = withConf("spark.sql.optimizer.disableHints" -> disableHints.toString) {
+        Forget.removeIds(idx, "doc_id", rm, "id")
+          .select("payload").as[String].collect().toSet
+      }
+      assert(out === Set("a", "c", "d"), s"disableHints $disableHints")
     }
   }
 
@@ -53,9 +55,11 @@ class ForgetSpec extends SparkSpec {
     val roundtrip = Forget.forgetFingerprints(grown,
       drop.filter(col("text").isNotNull), "text")
     assert(roundtrip.collect().toSet === counted.collect().toSet)
-    // the shuffle arm is value-identical
-    assert(Forget.appendFingerprints(counted, drop, "text",
-        broadcastAdded = false).collect().toSet === rebuilt.collect().toSet)
+    // the unhinted (corpus-sized escape) arm is value-identical
+    val unhinted = withConf("spark.sql.optimizer.disableHints" -> "true") {
+      Forget.appendFingerprints(counted, drop, "text").collect().toSet
+    }
+    assert(unhinted === rebuilt.collect().toSet)
     // tokenizer threads through BOTH arms: a uax29-built index grows
     // and forgets under uax29 keys (CJK docs don't collapse to one
     // fingerprint on either path)
@@ -105,6 +109,23 @@ class ForgetSpec extends SparkSpec {
     val root = new java.io.File(dir)
     val versions = root.listFiles().map(_.getName).filter(_.startsWith("v")).sorted
     assert(versions === Array("v3"))
+  }
+
+  test("keepVersions <= 0 fails before writing; the live version survives") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-forget-keep0").toString
+    val idx = Seq((1L, "x"), (2L, "y")).toDF("doc_id", "v")
+    intercept[IllegalArgumentException] { Forget.initVersioned(idx, dir, keepVersions = 0) }
+    intercept[IllegalStateException] { Forget.readCurrent(spark, dir) } // nothing published
+    assert(Forget.initVersioned(idx, dir) === 1L)
+    for (keep <- Seq(0, -1)) {
+      intercept[IllegalArgumentException] {
+        Forget.rewriteVersioned(spark, dir, keepVersions = keep)(cur =>
+          Forget.removeIds(cur, "doc_id", Seq(2L).toDF("id"), "id"))
+      }
+    }
+    assert(Forget.readCurrent(spark, dir).select("doc_id")
+      .as[Long].collect().toSet === Set(1L, 2L))
+    assert(!new java.io.File(dir, "v2").exists())
   }
 
   test("rewriteVersioned without a _CURRENT pointer fails loudly") {

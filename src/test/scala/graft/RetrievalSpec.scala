@@ -276,10 +276,10 @@ class RetrievalSpec extends SparkSpec {
   // ------------------------------------------------------ append (row 160)
 
   /** The even-id half grown by the odd-id half. */
-  private def grownLayout(broadcastDrop: Boolean = true): String = {
+  private def grownLayout(): String = {
     val dir = sidecarOf(corpus.filter($"doc_id" % 2 === 0))
     Retrieval.bm25SidecarAppend(spark, dir, corpus.filter($"doc_id" % 2 === 1),
-      "text", "doc_id", broadcastDrop)
+      "text", "doc_id")
     dir
   }
 
@@ -290,8 +290,12 @@ class RetrievalSpec extends SparkSpec {
     // probe equality rides row equality, but pin it end to end anyway:
     // scoring the grown layout == scoring the full corpus inline
     assert(probeSidecar(grown) == inlineScores(corpus))
-    // the shuffle-join arm for giant drops is value-identical
-    assert(rowsOf(grownLayout(broadcastDrop = false)) == rowsOf(grown))
+    // the unhinted arm for giant drops (the corpus-sized escape) is
+    // value-identical
+    val unhinted = withConf("spark.sql.optimizer.disableHints" -> "true") {
+      grownLayout()
+    }
+    assert(rowsOf(unhinted) == rowsOf(grown))
   }
 
   test("bm25Append: empty index = fresh build; empty drop = no-op; sentinels ride") {

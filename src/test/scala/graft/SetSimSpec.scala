@@ -100,18 +100,18 @@ class SetSimSpec extends SparkSpec {
       prior.take(12).map { case (i, s) => (2000L + i, s) } // planted members
     val priorDf = prior.toDF("id", "toks")
     val batchDf = batch.toDF("id", "toks")
-    for (t <- Seq(0.4, 0.6, 0.9); bcast <- Seq(true, false)) {
+    for (t <- Seq(0.4, 0.6, 0.9); disableHints <- Seq(false, true)) {
       val idx = SetSim.setSimPrefixIndex(priorDf, "toks", "id", t)
-      val got = SetSim.setSimilarityJoinAgainst(batchDf, idx, "toks", "id", t,
-          broadcastBatch = bcast)
-        .as[(Long, Long, Double)].collect()
-        .map { case (b, i, j) => (b, i) -> j }.toMap
+      val got = withConf("spark.sql.optimizer.disableHints" -> disableHints.toString) {
+        SetSim.setSimilarityJoinAgainst(batchDf, idx, "toks", "id", t)
+          .as[(Long, Long, Double)].collect()
+      }.map { case (b, i, j) => (b, i) -> j }.toMap
       val want = (for {
         (ib, sb) <- batch; (ip, sp) <- prior
         j = jaccard(sb.toSet, sp.toSet)
         if j >= t
       } yield (ib, ip) -> j).toMap
-      assert(got.keySet === want.keySet, s"threshold $t bcast $bcast")
+      assert(got.keySet === want.keySet, s"threshold $t disableHints $disableHints")
       got.foreach { case (k, j) =>
         assert(math.abs(j - want(k)) < 1e-12, s"pair $k at $t") }
     }
@@ -161,17 +161,17 @@ class SetSimSpec extends SparkSpec {
     }
     val batch = (1000L until 1040L).map(i => (i, randSet(5 + rnd.nextInt(8)))) ++ excerpts
     val idx = SetSim.setContainmentIndex(prior.toDF("id", "toks"), "toks", "id")
-    for (t <- Seq(0.5, 0.8); bcast <- Seq(true, false)) {
-      val got = SetSim.setContainmentJoinAgainst(
-          batch.toDF("id", "toks"), idx, "toks", "id", t, broadcastBatch = bcast)
-        .as[(Long, Long, Double)].collect()
-        .map { case (b, i, c) => (b, i) -> c }.toMap
+    for (t <- Seq(0.5, 0.8); disableHints <- Seq(false, true)) {
+      val got = withConf("spark.sql.optimizer.disableHints" -> disableHints.toString) {
+        SetSim.setContainmentJoinAgainst(batch.toDF("id", "toks"), idx, "toks", "id", t)
+          .as[(Long, Long, Double)].collect()
+      }.map { case (b, i, c) => (b, i) -> c }.toMap
       val want = (for {
         (ib, sb) <- batch; (ip, sp) <- prior
         c = sb.toSet.intersect(sp.toSet).size.toDouble / sb.toSet.size
         if c >= t
       } yield (ib, ip) -> c).toMap
-      assert(got.keySet === want.keySet, s"t=$t bcast=$bcast")
+      assert(got.keySet === want.keySet, s"t=$t disableHints=$disableHints")
       got.foreach { case (k, c) =>
         assert(math.abs(c - want(k)) < 1e-12, s"pair $k at $t") }
     }

@@ -23,6 +23,18 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Run `body` with the session confs `kv` set, then restore each
+    * prior value (or unset the key when it was not set before). */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Run `body` and return its result with the local properties of every
     * Spark job it submitted (listener bus flushed before reading). */
   def jobsDuring[T](body: => T): (T, Seq[Properties]) = {
