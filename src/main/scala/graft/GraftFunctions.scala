@@ -197,9 +197,11 @@ object GraftFunctions {
     ("kll_union", oneArg("kll_union")(KllUnionAgg(_: Expression)),
       classOf[KllUnionAgg]),
     // theta set-algebra sketches (build + union) — set operations
-    // across sketched drops, which HLL cannot answer
+    // across sketched drops, which HLL cannot answer. Not `theta_union`:
+    // Spark 4.1 ships a scalar built-in of that name (and
+    // `theta_union_agg`, over its own sketch format)
     ("theta_sketch", thetaSketchBuilder, classOf[ThetaBuildAgg]),
-    ("theta_union", oneArg("theta_union")(ThetaUnionAgg(_: Expression)),
+    ("theta_sketch_union", oneArg("theta_sketch_union")(ThetaUnionAgg(_: Expression)),
       classOf[ThetaUnionAgg])
   )
 

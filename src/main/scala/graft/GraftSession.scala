@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -14,12 +15,15 @@ import org.apache.spark.sql.SparkSession
  *  - Shuffle partitions sized to the local core count for local runs
  *    (Spark's 200 default is wrong in both directions: too many locally,
  *    far too few on a 1000-executor cluster — cluster deployments override
- *    via spark-submit conf, which takes precedence).
+ *    via spark-submit conf).
  *  - UTC session timezone, so timestamp windows are reproducible across
  *    driver environments.
+ *  - Generated-code reuse: a repeated action compiles nothing after its
+ *    first run ([[CodegenCacheEntries]], [[codegenReuse]]).
  *
- * The master is only defaulted (to local[cores]) when none was provided by
- * the launcher — a spark-submit-provided cluster master always wins.
+ * Every default, the master (local[cores]) included, applies only when the
+ * launcher has not set its key: a spark-submit `--conf` or cluster master
+ * always wins ([[defaultsUnset]]).
  *
  * Corpus-sized escape. Index probes, forget and append rewrites and the
  * decontamination rebuild always `broadcast()`-hint their small side
@@ -42,41 +46,91 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  def builder(appName: String): SparkSession.Builder = {
-    val b = SparkSession.builder()
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", localCores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // parallelismFirst stays at its default (true): an r21 experiment
-      // with false + the 64m advisory showed no win beyond machine noise
-      // at sf0.1, and byte-sized coalescing would serialize CPU-dense
-      // post-shuffle stages (LSH in-bucket verify: kilobytes of hashes,
-      // seconds of compute) onto one task at any scale where their
-      // byte size undershoots the advisory — partition count must track
-      // work, not bytes, for those stages.
-      // Let AQE keep optimizing UNDER persist(): with the default
-      // (false) a cached subtree's shuffles run at the raw
-      // spark.sql.shuffle.partitions — no coalescing, no skew split —
-      // so every operator-internal persist of a shuffled frame pays
-      // full-width stages at any scale where AQE would have resized
-      // them. The conf exists because re-optimization may change the
-      // cached frame's OUTPUT partitioning, which no graft caller
-      // depends on (cached frames here are operator intermediates and
-      // index artifacts consumed by value).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // TIMESTAMP(NANOS) parquet columns surface as raw longs instead of
-      // being refused outright (streaming.Events.readEventsParquet
-      // truncates them to microseconds). Session-level because the scan
-      // captures conf at planning time; the flag has no effect on any
-      // column Spark could otherwise read, and setting it HERE keeps
-      // operators from mutating shared session conf mid-flight.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (sys.props.contains("spark.master")) b
-    else b.master(s"local[$localCores]")
-  }
+  /**
+   * Entries of Spark's generated-code cache
+   * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100).
+   *
+   * One `CurationPipeline.runObserved` action with decontamination
+   * compiles 102 distinct classes (104 with stage ids in class names) and
+   * the V2F extraction pass 50 (56); census in `plans/codegen_census.json`.
+   * At 100 entries the cache cannot hold one curation action, so every
+   * repeat of it recompiled about half its classes with Janino and ran
+   * them cold until the JIT caught up again.
+   * The cache is a Guava cache split into 4 segments that each evict at a
+   * quarter of the bound, so the bound needs headroom over one action,
+   * not just "above 104": 1000 holds about ten curation-sized actions.
+   * Classes average 2–3 KB of bytecode (max 52 KB), so the retained set
+   * stays small.
+   *
+   * It is a static conf: the cache is built once per JVM, on the first
+   * code generation, from the session that runs it. The JVM's first
+   * session therefore fixes its size (a session created before any
+   * [[GraftSession]] session, or a `-Dspark.sql.codegen.cache.maxEntries`
+   * from the launcher, wins over this constant).
+   */
+  val CodegenCacheEntries: Int = 1000
+
+  /**
+   * The session confs that let a repeated action reuse its generated
+   * classes: the cache size above, and whole-stage classes named without
+   * their codegen stage id (`spark.sql.codegen.useIdInClassName=false`).
+   * AQE numbers whole-stage codegen stages in the order it creates query
+   * stages, which follows which running stage finishes first, so the same
+   * stage code can carry another id on the next run. With the id in the
+   * class name that was a new cache key: in 2 of 4 census runs, one
+   * steady curation pass compiled 6 and 10 classes again. Without it,
+   * equal code is one class. The id stays in the generated code's
+   * `codegenStageId` comment (`EXPLAIN CODEGEN`); stack traces show
+   * `GeneratedIterator`.
+   */
+  private[graft] val codegenReuse: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** graft's session defaults, key to value, master included. */
+  private def defaults: Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$localCores]",
+    "spark.sql.shuffle.partitions" -> localCores.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    // parallelismFirst stays at its default (true): an r21 experiment
+    // with false + the 64m advisory showed no win beyond machine noise
+    // at sf0.1, and byte-sized coalescing would serialize CPU-dense
+    // post-shuffle stages (LSH in-bucket verify: kilobytes of hashes,
+    // seconds of compute) onto one task at any scale where their
+    // byte size undershoots the advisory — partition count must track
+    // work, not bytes, for those stages.
+    // Let AQE keep optimizing UNDER persist(): with the default
+    // (false) a cached subtree's shuffles run at the raw
+    // spark.sql.shuffle.partitions — no coalescing, no skew split —
+    // so every operator-internal persist of a shuffled frame pays
+    // full-width stages at any scale where AQE would have resized
+    // them. The conf exists because re-optimization may change the
+    // cached frame's OUTPUT partitioning, which no graft caller
+    // depends on (cached frames here are operator intermediates and
+    // index artifacts consumed by value).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    // TIMESTAMP(NANOS) parquet columns surface as raw longs instead of
+    // being refused outright (streaming.Events.readEventsParquet
+    // truncates them to microseconds). Session-level because the scan
+    // captures conf at planning time; the flag has no effect on any
+    // column Spark could otherwise read, and setting it HERE keeps
+    // operators from mutating shared session conf mid-flight.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++ codegenReuse
+
+  /** The defaults `launcher` has not set. A launcher's conf reaches this
+    * JVM as `spark.*` system properties (what `spark-submit --conf` does
+    * in client mode), which `new SparkConf()` loads; a key set there is
+    * left to the launcher. */
+  private[graft] def defaultsUnset(launcher: SparkConf): Seq[(String, String)] =
+    defaults.filterNot { case (k, _) => launcher.contains(k) }
+
+  def builder(appName: String): SparkSession.Builder =
+    defaultsUnset(new SparkConf()).foldLeft(SparkSession.builder().appName(appName)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 
   def create(appName: String): SparkSession = {
     val spark = builder(appName).getOrCreate()

@@ -135,7 +135,7 @@ case class ThetaUnionAgg(
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def prettyName: String = "theta_union"
+  override def prettyName: String = "theta_sketch_union"
 
   override def createAggregationBuffer(): Array[Union] = new Array[Union](1)
 

@@ -224,9 +224,21 @@ object TsvSource {
     sep: String = "\t",
     recursive: Boolean = false,
     globFilter: Option[String] = None
+  ): DataFrame =
+    readResolved(spark, pattern, resolveFiles(spark, pattern, recursive, globFilter),
+      withPath, sep, recursive, globFilter)
+
+  /** [[read]] over the data files `resolveFiles` returned for `pattern`. */
+  private def readResolved(
+    spark: SparkSession,
+    pattern: String,
+    resolved: Seq[FileStatus],
+    withPath: Boolean,
+    sep: String,
+    recursive: Boolean,
+    globFilter: Option[String]
   ): DataFrame = {
-    val files = resolveFiles(spark, pattern, recursive, globFilter)
-      .map(_.getPath.toString)
+    val files = resolved.map(_.getPath.toString)
     val groups =
       if (files.isEmpty) Seq.empty
       else probeHeaders(spark, files)
@@ -262,6 +274,13 @@ object TsvSource {
    * behavior (V2FUtils.scala:42): a glob pattern matching nothing yields an
    * empty (zero-column) DataFrame instead of erroring; a non-glob path that
    * does not exist still errors.
+   *
+   * A glob (or `globFilter`) under which no non-empty file exists at any
+   * depth returns the empty frame without calling `spark.read.csv`: that
+   * call could only fail (`PATH_NOT_FOUND`, or `UNABLE_TO_INFER_SCHEMA`
+   * when only hidden files match) or read zero rows of zero columns, and a
+   * failed read logs a listener `ERROR` with the full trace even when it
+   * is caught here.
    */
   def readGlob(
     spark: SparkSession,
@@ -270,13 +289,20 @@ object TsvSource {
     sep: String = "\t",
     recursive: Boolean = false,
     globFilter: Option[String] = None
-  ): DataFrame =
-    try read(spark, pattern, withPath, sep, recursive, globFilter)
-    catch {
-      case e: AnalysisException
-          if (hasGlob(pattern) || globFilter.nonEmpty) &&
-            (e.getErrorClass == "PATH_NOT_FOUND" ||
-              e.getErrorClass == "UNABLE_TO_INFER_SCHEMA") =>
-        spark.emptyDataFrame
-    }
+  ): DataFrame = {
+    val wildcard = hasGlob(pattern) || globFilter.nonEmpty
+    val files = resolveFiles(spark, pattern, recursive, globFilter)
+    if (wildcard && files.isEmpty &&
+        (recursive || resolveFiles(spark, pattern, recursive = true, globFilter).isEmpty))
+      spark.emptyDataFrame
+    else
+      try readResolved(spark, pattern, files, withPath, sep, recursive, globFilter)
+      catch {
+        case e: AnalysisException
+            if wildcard &&
+              (e.getErrorClass == "PATH_NOT_FOUND" ||
+                e.getErrorClass == "UNABLE_TO_INFER_SCHEMA") =>
+          spark.emptyDataFrame
+      }
+  }
 }

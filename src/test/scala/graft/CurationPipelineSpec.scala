@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 import graft.plans.CurationPipeline
+import graft.sources.JsonLines
 
 class CurationPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -1199,5 +1202,42 @@ class CurationPipelineSpec extends SparkSpec {
         cfgBase.copy(priorEmbeddings = Some(ep), softDedup = true))
     }
     assert(e2.getMessage.contains("priorEmbeddings"), e2.getMessage)
+  }
+
+  test("runObserved: a repeated curation action compiles no class after its first run") {
+    // the benchmark's curate pass in miniature: JSON-lines corpus and eval
+    // set, every default stage plus decontamination, one parquet write.
+    // One such action generates ~100 classes; the class count follows the
+    // plan's shape, not the data size. At Spark's default cache size (100)
+    // each repeat recompiled about half of them. A second cause, seen in
+    // 2 of 4 benchmark-corpus runs once the cache was large: AQE numbered
+    // a whole-stage codegen stage differently on the repeat (ids follow
+    // the order concurrent stages finish), and the id was part of the
+    // class name, so equal code compiled again (6 and 10 classes).
+    // GraftSession.codegenReuse covers both.
+    val dir = Files.createTempDirectory("codegen-reuse")
+    val prose = (i: Int) => s"entry $i tells of river $i and the town of ${i * 7} by the hill"
+    val corpus = (0 until 60).map(i => (i.toLong, prose(i))) ++
+      (0 until 5).map(i => (100L + i, prose(i))) ++ // exact twins
+      (0 until 5).map(i => (200L + i, prose(i) + " too")) ++ // near twins
+      (0 until 4).map(i => (300L + i, s"SHARE THIS PAGE\n${prose(50 + i)} again")) :+
+      (400L, "what is the capital of assyria is the question we ask of every model today")
+    corpus.toDF("id", "text").write.json(s"$dir/corpus")
+    Seq((1L, "what is the capital of assyria is the question we ask of every model today"))
+      .toDF("doc_id", "text").write.json(s"$dir/eval")
+    def pass(): Map[String, Long] = {
+      val cfg = CurationPipeline.Config(evalSet = Some(JsonLines.read(spark, s"$dir/eval")))
+      CurationPipeline.runObserved(JsonLines.read(spark, s"$dir/corpus"), "text", "id", cfg) {
+        _.write.mode("overwrite").parquet(s"$dir/out")
+      }._2
+    }
+    val (first, firstCompiled) = classesCompiledDuring(pass())
+    val (second, secondCompiled) = classesCompiledDuring(pass())
+    assert(second == first)
+    assert(first("after_exact_dedup") < first("scrubbed"), first.toString)
+    assert(first("after_decontamination") < first("after_near_dedup"), first.toString)
+    info(s"classes compiled: $firstCompiled, then $secondCompiled")
+    assert(secondCompiled == 0,
+      s"the second run compiled $secondCompiled classes (the first $firstCompiled)")
   }
 }

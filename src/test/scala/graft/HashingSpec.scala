@@ -195,6 +195,13 @@ class HashingSpec extends SparkSpec {
     assert(math.abs(r.getDouble(3) - 1.0) < 1e-12)
   }
 
+  test("SQL surface: no graft function name shadows a Spark built-in") {
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+    val shadowing = GraftFunctions.all.map(_._1).filter(n =>
+      builtin.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(shadowing.isEmpty, shadowing)
+  }
+
   test("SQL surface: vector_mean aggregate resolves and averages element-wise") {
     GraftFunctions.register(spark)
     Seq((1L, Seq(1.0, 4.0)), (1L, Seq(3.0, 0.0)), (2L, Seq(5.0, 5.0)))

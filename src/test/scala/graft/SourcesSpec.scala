@@ -109,6 +109,34 @@ class SourcesSpec extends SparkSpec {
     assert(df.count() == 0)
   }
 
+  test("readGlob: globs with no readable file run no failing query") {
+    val failures = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = ()
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        failures.incrementAndGet()
+    }
+    val d = tmpDir("tsv-unreadable")
+    writeFile(d, "zero/a.tsv", "")
+    writeFile(d, "hidden/_a.tsv", "k\nv\n")
+    Files.createDirectories(d.resolve("nothing"))
+    assert(org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark, 10000))
+    spark.listenerManager.register(listener)
+    try {
+      val globs = Seq(
+        TsvSource.readGlob(spark, s"$d/nope-*.tsv"), // matches nothing
+        TsvSource.readGlob(spark, s"$d/zero/*.tsv"), // only zero-byte files
+        TsvSource.readGlob(spark, s"$d/hidden/*.tsv"), // only hidden files
+        TsvSource.readGlob(spark, s"$d/noth*", recursive = true), // an empty dir
+        TsvSource.readGlob(spark, s"$d/zero", globFilter = Some("*.tsv")))
+      globs.foreach(df => assert(df.columns.isEmpty && df.count() == 0))
+      assert(org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark, 10000))
+      assert(failures.get == 0, "a readGlob of an unreadable glob ran a failing query")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("non-glob missing path still errors") {
     assertThrows[Exception] {
       TsvSource.readGlob(spark, "/definitely/not/here.tsv").collect()

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for suites (one per suite, lazily created). */
 trait SparkSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
+  lazy val spark: SparkSession = GraftSession.codegenReuse
+    // the shipped generated-code reuse confs (the cache size is static:
+    // the test JVM's first session fixes it for every suite)
+    .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
     .master("local[4]")
     .appName(getClass.getSimpleName)
     .config("spark.sql.shuffle.partitions", "4")
@@ -50,5 +53,14 @@ trait SparkSpec extends AnyFunSuite {
       assert(GraftSqlBridge.flushListenerBus(spark, 10000))
       (out, jobs.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Run `body` and return its result with the number of classes Janino
+    * compiled meanwhile (Spark's JVM-wide counter: a generated-code cache
+    * hit compiles nothing). Suites run one at a time in the test JVM. */
+  def classesCompiledDuring[T](body: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
   }
 }

@@ -125,6 +125,18 @@ class V2FSpec extends SparkSpec {
       jobs.map(_.getProperty("spark.jobGroup.id")))
   }
 
+  test("ExtractionPipeline: a repeated run compiles no class after the first") {
+    val in = Files.createTempDirectory("v2f-reuse-in")
+    writeTables(in)
+    val out = Files.createTempDirectory("v2f-reuse-out").toString
+    val (_, first) = classesCompiledDuring(ExtractionPipeline.run(spark, in.toString, out))
+    val (_, second) = classesCompiledDuring(ExtractionPipeline.run(spark, in.toString, out))
+    // the first run may compile nothing either: the tests before it ran
+    // the same plans in this JVM
+    info(s"classes compiled: $first, then $second")
+    assert(second == 0, s"the second run compiled $second classes (the first $first)")
+  }
+
   test("DatasetSpecificPipeline: JSON -> snake/rename/remove -> JSON") {
     val in = Files.createTempDirectory("dsa-in")
     val out = Files.createTempDirectory("dsa-out")
