@@ -54,6 +54,80 @@ object CorpusGates {
       col("dl").cast("long").as("dl"), col("df"), col("n_docs"),
       round(col("avgdl"), 6).as("avgdl"), col("sum_dl"))
 
+  /** The layout generations (`postings-g<id>`, `registry-g<id>`) that
+    * the file scans of `plan`, subqueries included, read: for each scan
+    * root path, the nearest `<name>-g<id>` directory at or above it.
+    * Read off the scan nodes, not the plan string: Spark prints a file
+    * location cut at `spark.sql.maxMetadataStringLength` characters, so
+    * a long temp dir hides the generation's name. */
+  private[graft] def generationsScanned(
+    plan: org.apache.spark.sql.execution.SparkPlan
+  ): Seq[String] = {
+    val roots = plan.collectWithSubqueries {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location.rootPaths
+    }.flatten
+    roots.flatMap(p => Iterator.iterate(p)(_.getParent).takeWhile(_ != null)
+      .map(_.getName).find(_.matches("[a-z]+-g[0-9]+")))
+  }
+
+  /** q_bm25_sidecar_append with its layout under `out`. */
+  private[graft] def sidecarAppend(s: SparkSession, dir: String, out: String): DataFrame = {
+    val d = docs(s, dir).select("doc_id", "text")
+    val drop = d.filter(col("doc_id") % 2 === 1)
+    Retrieval.bm25SidecarWrite(
+      d.filter(col("doc_id") % 2 === 0), "text", "doc_id", out)
+    // r18 — the collision guard reads the doc-registry sidecar, never
+    // a posting generation: pinned on the guarded posting frame's
+    // physical plan (every layout file scan in it is a registry path)
+    val guard = Retrieval
+      .sidecarAppendPostings(s, out, drop, "text", "doc_id")
+      .queryExecution.sparkPlan
+    val scanned = generationsScanned(guard)
+    require(scanned.exists(_.startsWith("registry-g")),
+      s"q_bm25_sidecar_append: guard does not read the registry:\n$guard")
+    require(!scanned.exists(_.startsWith("postings-g")),
+      s"q_bm25_sidecar_append: guard scans posting rows:\n$guard")
+    val before = parquetFiles(s"$out/postings-g1")
+    val regBefore = parquetFiles(s"$out/registry-g1")
+    val dfBefore = parquetFiles(s"$out/df-v1")
+    Retrieval.bm25SidecarAppend(s, out, drop, "text", "doc_id")
+    val after = parquetFiles(s"$out/postings-g1")
+    require(before == after && before.nonEmpty,
+      s"q_bm25_sidecar_append: prior posting generation was rewritten " +
+        s"by the grow (before=$before after=$after)")
+    require(parquetFiles(s"$out/registry-g1") == regBefore && regBefore.nonEmpty,
+      "q_bm25_sidecar_append: prior registry generation was rewritten")
+    require(parquetFiles(s"$out/postings-g2").nonEmpty,
+      "q_bm25_sidecar_append: grow produced no new posting generation")
+    require(parquetFiles(s"$out/registry-g2").nonEmpty,
+      "q_bm25_sidecar_append: grow produced no new registry generation")
+    // r18 — touched-bucket df rewrite: every df-v2 bucket NOT holding
+    // drop vocabulary carries df-v1's files byte-for-byte (name +
+    // length). At gate scale the drop usually touches every bucket
+    // (drop vocab >> 32 buckets — the complement can be empty);
+    // RetrievalSpec pins the same accounting on a controlled
+    // one-bucket drop where the complement is 7/8 of the layout.
+    val touched = drop
+      .select(explode(graft.functions.Hashing.normalizedWords(col("text")))
+        .as("word"))
+      .select(pmod(graft.functions.Hashing.md5Long60(col("word")), lit(32L))
+        .cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    val dfAfter = parquetFiles(s"$out/df-v2")
+    val untouched = dfBefore.keySet.filter { rel =>
+      val bucket = rel.takeWhile(_ != '/')
+      bucket.startsWith("bucket=") &&
+        !touched.contains(bucket.stripPrefix("bucket=").toInt)
+    }
+    untouched.foreach { rel =>
+      require(dfAfter.get(rel).contains(dfBefore(rel)),
+        s"q_bm25_sidecar_append: untouched df bucket file $rel not " +
+          s"carried byte-identically (v1=${dfBefore(rel)} v2=${dfAfter.get(rel)})")
+    }
+    Retrieval.bm25ScoresFromSidecar(s, out, bm25Queries(s), "query_id", "qtext")
+      .select(col("query_id"), col("doc_id"), round(col("score"), 4).as("score"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.4 row 69 — BM25 scoring (the value surface; ranking is a
     // row_number window over these scores, oracle-gated via q_topk_by's
@@ -155,61 +229,8 @@ object CorpusGates {
     // is the layout's reason to exist (an index denormalizing the
     // corpus stats onto its rows rewrites every row per grow).
     "q_bm25_sidecar_append" -> { (s, dir) =>
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-bm25scapp-gate").toString
-      val d = docs(s, dir).select("doc_id", "text")
-      val drop = d.filter(col("doc_id") % 2 === 1)
-      Retrieval.bm25SidecarWrite(
-        d.filter(col("doc_id") % 2 === 0), "text", "doc_id", out)
-      // r18 — the collision guard reads the doc-registry sidecar, never
-      // a posting generation: pinned on the guarded posting frame's
-      // physical plan (every layout file scan in it is a registry path)
-      val guardPlan = Retrieval
-        .sidecarAppendPostings(s, out, drop, "text", "doc_id")
-        .queryExecution.sparkPlan.toString
-      require(guardPlan.contains("registry-g"),
-        s"q_bm25_sidecar_append: guard does not read the registry:\n$guardPlan")
-      require(!guardPlan.contains("postings-g"),
-        s"q_bm25_sidecar_append: guard scans posting rows:\n$guardPlan")
-      val before = parquetFiles(s"$out/postings-g1")
-      val regBefore = parquetFiles(s"$out/registry-g1")
-      val dfBefore = parquetFiles(s"$out/df-v1")
-      Retrieval.bm25SidecarAppend(s, out, drop, "text", "doc_id")
-      val after = parquetFiles(s"$out/postings-g1")
-      require(before == after && before.nonEmpty,
-        s"q_bm25_sidecar_append: prior posting generation was rewritten " +
-          s"by the grow (before=$before after=$after)")
-      require(parquetFiles(s"$out/registry-g1") == regBefore && regBefore.nonEmpty,
-        "q_bm25_sidecar_append: prior registry generation was rewritten")
-      require(parquetFiles(s"$out/postings-g2").nonEmpty,
-        "q_bm25_sidecar_append: grow produced no new posting generation")
-      require(parquetFiles(s"$out/registry-g2").nonEmpty,
-        "q_bm25_sidecar_append: grow produced no new registry generation")
-      // r18 — touched-bucket df rewrite: every df-v2 bucket NOT holding
-      // drop vocabulary carries df-v1's files byte-for-byte (name +
-      // length). At gate scale the drop usually touches every bucket
-      // (drop vocab >> 32 buckets — the complement can be empty);
-      // RetrievalSpec pins the same accounting on a controlled
-      // one-bucket drop where the complement is 7/8 of the layout.
-      val touched = drop
-        .select(explode(graft.functions.Hashing.normalizedWords(col("text")))
-          .as("word"))
-        .select(pmod(graft.functions.Hashing.md5Long60(col("word")), lit(32L))
-          .cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      val dfAfter = parquetFiles(s"$out/df-v2")
-      val untouched = dfBefore.keySet.filter { rel =>
-        val bucket = rel.takeWhile(_ != '/')
-        bucket.startsWith("bucket=") &&
-          !touched.contains(bucket.stripPrefix("bucket=").toInt)
-      }
-      untouched.foreach { rel =>
-        require(dfAfter.get(rel).contains(dfBefore(rel)),
-          s"q_bm25_sidecar_append: untouched df bucket file $rel not " +
-            s"carried byte-identically (v1=${dfBefore(rel)} v2=${dfAfter.get(rel)})")
-      }
-      Retrieval.bm25ScoresFromSidecar(s, out, bm25Queries(s), "query_id", "qtext")
-        .select(col("query_id"), col("doc_id"), round(col("score"), 4).as("score"))
+      sidecarAppend(s, dir, java.nio.file.Files
+        .createTempDirectory("graft-bm25scapp-gate").toString)
     },
     // §2 row 164 (r18) — sidecar top-k: the WindowGroupLimit ranking
     // over sidecar scores, layout parity with the inline bm25TopK —

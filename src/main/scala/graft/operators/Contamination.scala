@@ -137,7 +137,11 @@ object Contamination {
    * text — is shuffled on the id; AQE turns the join into a broadcast
    * once the scores report their real size, but the corpus shuffle has
    * been written by then. The corpus is read twice (gram scores and the
-   * anti join): pin it when its upstream is expensive.
+   * anti join): pin it when its upstream is expensive. A score depends
+   * only on its document's text, so the ids may also come from a frame
+   * the corpus is a subset of: [[graft.plans.CurationPipeline]] scores
+   * its pinned exact-dedup survivors and anti-joins the near-dup
+   * survivors, instead of pinning its own input.
    */
   def decontaminate(
     corpus: DataFrame,
@@ -147,13 +151,27 @@ object Contamination {
     k: Int = 13,
     maxContamination: Double = 0.5,
     bloomPrefilter: Boolean = false
-  ): DataFrame = {
-    val dirty = contaminationScores(corpus, evalSet, textCol, idCol, k,
+  ): DataFrame =
+    corpus.join(
+      contaminatedIds(corpus, evalSet, textCol, idCol, k, maxContamination,
+        bloomPrefilter),
+      Seq(idCol), "left_anti")
+
+  /** The ids (as `idCol`) of the documents [[decontaminate]] drops: a
+    * [[contaminationScores]] at or above `maxContamination`. */
+  private[graft] def contaminatedIds(
+    corpus: DataFrame,
+    evalSet: DataFrame,
+    textCol: String,
+    idCol: String,
+    k: Int,
+    maxContamination: Double,
+    bloomPrefilter: Boolean
+  ): DataFrame =
+    contaminationScores(corpus, evalSet, textCol, idCol, k,
         bloomPrefilter = bloomPrefilter)
       .filter(col("contamination") >= maxContamination)
       .select(col("doc_id").as(idCol))
-    corpus.join(dirty, Seq(idCol), "left_anti")
-  }
 
   /**
    * The eval-side view of contamination: per EVAL ITEM, how much of it

@@ -52,16 +52,18 @@ import graft.operators.{Contamination, Dedup, Sampling, TextAnalysis}
  * the within-doc rule precedes the corpus-wide one so a doc-internal
  * loop can't inflate a line past minLineCount by itself; line removal
  * BEFORE document dedup lets near-identical pages become exact
- * duplicates; decontamination runs on the deduplicated survivors (fewer
- * docs to score); the quality gates see final text; splits are assigned
- * last so every surviving row gets one.
+ * duplicates; decontamination scores the exact-dedup survivors (fewer
+ * docs than the input, and beside the near-dup chain rather than after
+ * it) and drops the dirty ones from the near-dup survivors; the quality
+ * gates see final text; splits are assigned last so every surviving row
+ * gets one.
  *
  * Scale shape is inherited stage by stage — every stage is one of this
  * engine's audited operators; nothing here adds a shuffle of its own.
  * [[curate]] returns the lazy plan; [[run]] executes an action with every
- * frame the action consumes more than once (the scrubbed corpus, the
- * exact-dedup survivors, and the others [[stages]] lists) persisted for
- * exactly the action's lifetime.
+ * frame the action consumes more than once (the exact-dedup survivors,
+ * and the others [[stages]] lists) persisted for exactly the action's
+ * lifetime, and no frame it consumes once.
  */
 object CurationPipeline {
 
@@ -403,8 +405,8 @@ object CurationPipeline {
 
   /**
    * The curated-corpus PLAN as (doc_id, textCol, quality, split) —
-   * lazy, no persistence. Several intermediates (the scrubbed corpus,
-   * the exact-dedup survivors, …) feed more than one downstream leg, so
+   * lazy, no persistence. Several intermediates (the exact-dedup
+   * survivors, …) feed more than one downstream leg, so
    * evaluating this plan more than once (or once, through its internal
    * self-joins) recomputes the text-rewriting and dedup stages; use
    * [[run]] to execute with those intermediates persisted for exactly
@@ -506,11 +508,11 @@ object CurationPipeline {
   /**
    * Runs the flow and your `action` (write, collect, count …) under one
    * rule: a frame the action consumes more than once is pinned
-   * (persisted) — the scrubbed corpus, the exact-dedup survivors, the
-   * near-dup survivors when decontamination reads them, and the
-   * per-configuration frames [[stages]] lists — so each stage is
-   * evaluated once per action. Every pin is released when the action
-   * returns OR throws, so nothing stays pinned after run.
+   * (persisted), and a frame it consumes once is not — the exact-dedup
+   * survivors always, and the per-configuration frames [[stages]] lists
+   * — so each stage is evaluated once per action. Every pin is released
+   * when the action returns OR throws, so nothing stays pinned after
+   * run.
    */
   def run[T](
     corpus: DataFrame,
@@ -538,9 +540,9 @@ object CurationPipeline {
    * optional model gate), and `final` (post cap/mix/split).
    *
    * Counter placement is persist-aware: observations sit UNDER the
-   * pinned intermediates, so a multiply-consumed stage (scrub, exact
-   * dedup, the model-gate base, the mix input) counts once, at
-   * materialization — not once per consumer.
+   * pinned intermediates, so a multiply-consumed stage (exact dedup, the
+   * scrub under a twice-reading prior, the model-gate base, the mix
+   * input) counts once, at materialization — not once per consumer.
    *
    * The counters see exactly what the action CONSUMES: a full action
    * (write, count, collect) yields full stage counts, while a
@@ -1279,11 +1281,10 @@ object CurationPipeline {
     // pass on it (one extra aggregation scan — only when configured)
     if (cfg.inputExpectations.nonEmpty)
       graft.operators.Checks.enforce(corpus, cfg.inputExpectations)
-    val scrubbed = observe("scrubbed", scrub(corpus, textCol, idCol, cfg)).persist()
-    val pinned = scala.collection.mutable.Buffer[DataFrame](scrubbed)
+    val pinned = scala.collection.mutable.Buffer[DataFrame]()
     val pin: DataFrame => DataFrame = df => { pinned += df.persist(); df }
-    try action(stages(scrubbed, textCol, cfg, corpus, idCol, pin, observe,
-      onSoftClusters))
+    try action(stages(observe("scrubbed", scrub(corpus, textCol, idCol, cfg)),
+      textCol, cfg, corpus, idCol, pin, observe, onSoftClusters))
     finally pinned.foreach(_.unpersist())
   }
 
@@ -1291,14 +1292,19 @@ object CurationPipeline {
     * `corpus`/`idCol` are the ORIGINAL input, used only to look group
     * columns back up for the cap/mix stages. `pin` is [[run]]'s
     * persistence hook, and the rule is: a frame consumed more than once
-    * in the action is pinned. That covers `exact` (always: the near-dup
-    * arms read it several times), `near` when decontamination reads it,
-    * the soft cluster table, each media stage's input, the model-gate
-    * base, the mix input and the leak-safe split input. Under AQE a
-    * second reference to an unpinned frame recomputes it, and an
-    * exchange above a pinned one is not reused across references, so
-    * pinning is the only way such a frame runs once. [[curate]] passes
-    * identity and accepts the recompute, as its laziness note says. */
+    * in the action is pinned, and a frame consumed once is not. That
+    * covers `exact` (always: the near-dup arms read it several times,
+    * and decontamination scores it), the scrubbed corpus under a
+    * signature, SimHash or media prior (each reads its input twice), the
+    * soft cluster table, each media stage's input, the model-gate base,
+    * the mix input and the leak-safe split input. Under AQE a second
+    * reference to an unpinned frame recomputes it, and an exchange above
+    * a pinned one is not reused across references, so pinning is the
+    * only way such a frame runs once. A pin is not free either: its
+    * cache is built synchronously on the driver thread by its first
+    * `TableCacheQueryStage`, so pins nested in one another serialize.
+    * [[curate]] passes identity and accepts the recompute, as its
+    * laziness note says. */
   private def stages(
     scrubbed: DataFrame, textCol: String, cfg: Config,
     corpus: DataFrame, idCol: String,
@@ -1308,11 +1314,18 @@ object CurationPipeline {
   ): DataFrame = {
     def groupLookup(gcols: Seq[String]): DataFrame =
       corpus.select((col(idCol).as("doc_id") +: gcols.map(col)).toIndexedSeq: _*)
+    // the signature (when it prunes), SimHash and media priors each read
+    // their input twice (the match and the anti-join), so the scrub under
+    // them is pinned; otherwise only the exact-dedup window reads it
+    val priorReadsTwice = (!cfg.softDedup && cfg.priorSignatures.nonEmpty) ||
+      cfg.priorSimhashes.nonEmpty || cfg.priorBandedImages.nonEmpty ||
+      cfg.priorBandedVideos.nonEmpty || cfg.priorBandedAudio.nonEmpty
+    val input = if (priorReadsTwice) pin(scrubbed) else scrubbed
     // 2b: incremental prune against a prior corpus's persisted indexes
     // (optional) — runs BEFORE within-batch dedup so the already-seen
     // majority of a re-crawl never reaches the shingle/signature stages
-    val fresh0 = cfg.priorFingerprints.fold(scrubbed)(idx =>
-      Dedup.dropExactDuplicatesAgainst(scrubbed, idx, textCol, cfg.tokenizer))
+    val fresh0 = cfg.priorFingerprints.fold(input)(idx =>
+      Dedup.dropExactDuplicatesAgainst(input, idx, textCol, cfg.tokenizer))
     // softDedup pairs near-twins instead of pruning them, and that
     // promise extends across corpora: the signature prior becomes a
     // PAIRING surface (folded into the soft cluster table at the near
@@ -1521,14 +1534,22 @@ object CurationPipeline {
     val near = cfg.audioDedup.fold(nearV)(a =>
       mediaStage(nearV, "audio", a.payloads, a.payloadCol, a.idCol,
         m => graft.operators.Multimodal.audioNearDups(m, a.maxHamming, a.bands)))
-    // 5: decontamination (optional) — it consumes `near` twice (gram
-    // scores and the dirty-id anti-join), so `near` is pinned and the
-    // near-dup chain (LSH band, pair and verify shuffles) runs once
+    // 5: decontamination (optional) — the gram scores read the pinned
+    // exact survivors, not `near`, so they run beside the near-dup chain
+    // (LSH band, pair and verify shuffles) instead of after it, and
+    // `near` is read once, unpinned. This equals
+    // decontaminate(near): near ⊆ exact by doc_id, a doc's text is the
+    // same in both, ids are unique after the line rule's regroup, and a
+    // doc's score depends only on its own text. The cost is scoring the
+    // near-dup losers too: more gram work, off the critical path, in
+    // place of a second pinned frame
     val clean = cfg.evalSet.fold(near)(ev =>
       observe("after_decontamination",
-        Contamination.decontaminate(pin(near), ev, textCol, "doc_id",
-          k = cfg.contaminationK, maxContamination = cfg.maxContamination,
-          bloomPrefilter = cfg.bloomPrefilter)))
+        near.join(
+          Contamination.contaminatedIds(exact, ev, textCol, "doc_id",
+            k = cfg.contaminationK, maxContamination = cfg.maxContamination,
+            bloomPrefilter = cfg.bloomPrefilter),
+          Seq("doc_id"), "left_anti")))
     // 6: quality gates — composite floor, plus the Gopher rule verdict
     // as a hard gate when requested (paper-default thresholds)
     val ruled =

@@ -222,13 +222,21 @@ class CurationPipelineSpec extends SparkSpec {
   }
 
   test("run and runObserved release every pin when the action throws") {
-    val prose = "the cat is in the hat and it is flat for all of us to see " * 2
-    val corpus = (0 until 12).map(i => (i.toLong, s"$prose item ${i % 8}"))
-      .toDF("doc_id", "text")
-    val evalSet = Seq((900L, s"$prose item 3")).toDF("doc_id", "text")
-    // the eval set makes decontamination consume `near`, so all three
-    // pins (scrub, exact, near) are live while the action runs
-    val cfg = CurationPipeline.Config(evalSet = Some(evalSet), contaminationK = 5)
+    // distinct documents, so both mix strata survive the dedup stages
+    val corpus = (0 until 12).map(i => (i.toLong,
+        s"document number $i with reasonably long unique content body", s"l${i % 2}"))
+      .toDF("doc_id", "text", "lang")
+    val train = corpus.select(col("doc_id"), col("text"),
+      (col("doc_id") % 2).cast("int").as("label"))
+    val m = graft.operators.QualityClassifier.fit(
+      train, "text", "label", "doc_id", nBuckets = 64, iters = 2)
+    // the model-gate base, the mix input and the leak-safe split input
+    // are each read twice, so with the exact survivors four pins are
+    // live while the action runs
+    val cfg = CurationPipeline.Config(
+      qualityModel = Some(CurationPipeline.ModelGate(m.weights, m.bias, minScore = 0.0)),
+      targetMix = Some(("lang", Seq(("l0", 1L), ("l1", 1L)))),
+      splitLeakThreshold = Some(0.5))
     val before = spark.sparkContext.getPersistentRDDs.keySet
     var pinnedDuring = 0
     def failing(df: org.apache.spark.sql.DataFrame): Unit = {
@@ -248,6 +256,83 @@ class CurationPipelineSpec extends SparkSpec {
       assert(spark.sparkContext.getPersistentRDDs.keySet == before,
         s"$name left persisted RDDs behind")
       assert(spark.sharedState.cacheManager.isEmpty, s"$name left cache entries behind")
+    }
+  }
+
+  test("run pins only what the action reads twice: the exact survivors " +
+    "under the default config with an eval set, and the scrub under a prior") {
+    val prose = "the cat is in the hat and it is flat for all of us to see " * 2
+    val corpus = (0 until 12).map(i => (i.toLong, s"$prose item ${i % 8}"))
+      .toDF("doc_id", "text")
+    val evalSet = Seq((900L, s"$prose item 3")).toDF("doc_id", "text")
+    val cfg = CurationPipeline.Config(evalSet = Some(evalSet), contaminationK = 5)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // a cached frame's RDD is named after its plan, whose root is the
+    // stage counter the pin sits above; returns each pin's stage name
+    def pinned(cfg: CurationPipeline.Config) =
+      withConf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true") {
+        CurationPipeline.runObserved(corpus, "text", "doc_id", cfg) { df =>
+          df.write.format("noop").mode("overwrite").save()
+          spark.sparkContext.getPersistentRDDs
+            .filter { case (id, _) => !before.contains(id) }.values
+            .map(r => "graft_curation_[a-z_]+".r.findFirstIn(r.name).getOrElse(r.name))
+            .toSeq.sorted
+        }
+      }
+    val (names, counts) = pinned(cfg)
+    assert(names == Seq("graft_curation_after_exact_dedup"), names.mkString("\n---\n"))
+    assert(counts("after_decontamination") < counts("after_near_dedup"), counts.toString)
+    // a signature prior reads the scrubbed corpus twice (its match and
+    // its anti-join), so the scrub is pinned under it
+    val prior = Seq((500L, "a prior corpus document that matches none of these"))
+      .toDF("doc_id", "text")
+    val (priorNames, _) = pinned(cfg.copy(
+      priorSignatures = Some(CurationPipeline.signatureIndex(prior, "text", "doc_id", cfg))))
+    assert(priorNames == Seq("graft_curation_after_exact_dedup", "graft_curation_scrubbed"),
+      priorNames.mkString("\n---\n"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("decontamination over the exact survivors equals decontaminate of the " +
+    "near-dup survivors, also when near dedup drops a contaminated doc") {
+    val words = (0 until 40).map(i => s"w$i")
+    val quoted = words.mkString(" ")
+    val corpus = Seq(
+      // 1 quotes the eval item; its near-twin 2 (one word changed) loses
+      // near dedup to it, and is contaminated too
+      (1L, quoted),
+      (2L, (words.init :+ "yy").mkString(" ")),
+      // 3 quotes the eval item inside a longer body: contaminated, no twin
+      (3L, s"$quoted ${(0 until 20).map(i => s"v$i").mkString(" ")}"),
+      // 4 and its near-twin 5: clean
+      (4L, (0 until 40).map(i => s"u$i").mkString(" ")),
+      (5L, ((0 until 39).map(i => s"u$i") :+ "zz").mkString(" ")),
+      (6L, "an unrelated clean document with its own distinct words"))
+      .toDF("doc_id", "text")
+    val evalSet = Seq((900L, quoted)).toDF("doc_id", "text")
+    val cfg = CurationPipeline.Config(minLineCount = 99, contaminationK = 5)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"),
+        r.getAs[Double]("quality"), r.getAs[String]("split"))).toSet
+    withConf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true") {
+      val near = CurationPipeline.run(corpus, "text", "doc_id", cfg)(rows)
+      // the fixture exercises the case: near dedup dropped doc 2, which
+      // the contamination scores over the exact survivors flag
+      assert(near.map(_._1) == Set(1L, 3L, 4L, 6L), near.map(_._1).toString)
+      val dirty = graft.operators.Contamination.contaminationScores(
+          corpus.filter(col("doc_id") === 2L), evalSet, "text", "doc_id", k = 5)
+        .filter(col("contamination") >= cfg.maxContamination).count()
+      assert(dirty == 1L)
+      val nearFrame = near.toSeq.map { case (id, t, _, _) => (id, t) }.toDF("doc_id", "text")
+      val expected = graft.operators.Contamination.decontaminate(
+          nearFrame, evalSet, "text", "doc_id", k = 5,
+          maxContamination = cfg.maxContamination)
+        .select("doc_id").as[Long].collect().toSet
+      val cleaned = CurationPipeline.run(corpus, "text", "doc_id",
+        cfg.copy(evalSet = Some(evalSet)))(rows)
+      assert(expected == Set(4L, 6L), expected.toString)
+      assert(cleaned == near.filter(r => expected.contains(r._1)),
+        s"$cleaned != decontaminate(near) = $expected")
     }
   }
 

@@ -33,4 +33,21 @@ class GateGuardSpec extends SparkSpec {
     assert(counted.head().getLong(0) == frame.collect().length.toLong)
     assert(frame.filter(col("batch_id").isNull).count() == 0L)
   }
+
+  test("q_bm25_sidecar_append: the registry guard check holds under a long layout path") {
+    val base = java.nio.file.Files.createTempDirectory("gate-guard-long").toString
+    val out = s"$base/${"n" * math.max(1, 80 - base.length)}/layout"
+    graft.operators.Retrieval.bm25SidecarWrite(
+      spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id", out)
+    val guard = graft.operators.Retrieval.sidecarAppendPostings(
+        spark, out, Seq((1000L, "river stone")).toDF("doc_id", "text"), "text", "doc_id")
+      .queryExecution.sparkPlan
+    // the fixture exercises the case: the plan string cuts each file
+    // location at 100 characters, before the generation's name
+    assert(!guard.toString.contains("registry-g"), guard.toString)
+    assert(graft.gates.CorpusGates.generationsScanned(guard) == Seq("registry-g1"),
+      guard.toString)
+    // the whole gate, under a layout path as long
+    graft.gates.CorpusGates.sidecarAppend(spark, sfDir, s"$out-gate").collect()
+  }
 }

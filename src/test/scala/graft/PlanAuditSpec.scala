@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity, TextAnalysis, Transformations}
 
@@ -494,25 +496,25 @@ class PlanAuditSpec extends SparkSpec {
       s"paragraph exchange not reused:\n${plan.take(4000)}")
   }
 
-  test("curation run(): one exact-dedup and one LSH band exchange across the " +
-    "action's plan and every pinned plan") {
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan,
-      WholeStageCodegenExec}
+  private def stripCodegen(p: SparkPlan): SparkPlan = p match {
+    case w: org.apache.spark.sql.execution.WholeStageCodegenExec => stripCodegen(w.child)
+    case i: org.apache.spark.sql.execution.InputAdapter => stripCodegen(i.child)
+    case o => o
+  }
+
+  /** Every shuffle one curation `run()` action EXECUTES, under the
+    * shipped `canChangeCachedPlanOutputPartitioning`: the final AQE
+    * plans, their query stages and each persisted frame's cached plan
+    * (walked once, however many scans reference it); a ReusedExchange
+    * executes nothing new. */
+  private def curationExchanges(
+    corpus: org.apache.spark.sql.DataFrame,
+    cfg: graft.plans.CurationPipeline.Config
+  ): Seq[ShuffleExchangeExec] = {
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
-    // planted exact and near twins, so neither dedup stage is empty
-    val base = docs.select("doc_id", "text")
-    val corpus = base
-      .unionByName(base.filter(col("doc_id") % 10 === 1)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      .unionByName(base.filter(col("doc_id") % 10 === 2)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          concat(col("text"), lit(" appended")).as("text")))
-    val ev = base.filter(col("doc_id") % 50 === 7)
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
@@ -520,20 +522,11 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark, 10000))
     spark.listenerManager.register(listener)
-    try {
-      graft.plans.CurationPipeline.run(corpus, "text", "doc_id",
-        graft.plans.CurationPipeline.Config(evalSet = Some(ev), contaminationK = 5))(
+    try withConf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true") {
+      graft.plans.CurationPipeline.run(corpus, "text", "doc_id", cfg)(
         _.write.format("noop").mode("overwrite").save())
       assert(org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark, 10000))
     } finally spark.listenerManager.unregister(listener)
-    // every EXECUTED shuffle: the final AQE plans, their query stages and
-    // each persisted frame's cached plan (walked once, however many scans
-    // reference it); a ReusedExchange executes nothing new
-    def strip(p: SparkPlan): SparkPlan = p match {
-      case w: WholeStageCodegenExec => strip(w.child)
-      case i: InputAdapter => strip(i.child)
-      case o => o
-    }
     val cachedSeen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     val exchanges = scala.collection.mutable.Buffer[ShuffleExchangeExec]()
@@ -548,7 +541,33 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(!plans.isEmpty, "no plan captured for the action")
     plans.forEach(walk(_))
-    val exactWindow = exchanges.count(e => strip(e.child) match {
+    exchanges.toSeq
+  }
+
+  private def shown(exchanges: Seq[ShuffleExchangeExec]): String =
+    exchanges.map(e => s"${e.outputPartitioning} <- ${stripCodegen(e.child).nodeName}")
+      .mkString("\n")
+
+  // planted exact and near twins, so neither dedup stage is empty
+  private def twinnedCorpus: org.apache.spark.sql.DataFrame = {
+    val base = docs.select("doc_id", "text")
+    base
+      .unionByName(base.filter(col("doc_id") % 10 === 1)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+      .unionByName(base.filter(col("doc_id") % 10 === 2)
+        .select((col("doc_id") + 2000000L).as("doc_id"),
+          concat(col("text"), lit(" appended")).as("text")))
+  }
+
+  test("curation run(): one exact-dedup and one LSH band exchange across the " +
+    "action's plan and every pinned plan") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+    val ev = docs.select("doc_id", "text").filter(col("doc_id") % 50 === 7)
+    val exchanges = curationExchanges(twinnedCorpus,
+      graft.plans.CurationPipeline.Config(evalSet = Some(ev), contaminationK = 5))
+    val exactWindow = exchanges.count(e => stripCodegen(e.child) match {
       case w: WindowGroupLimitExec => w.mode == org.apache.spark.sql.execution.window.Partial
       case _ => false
     })
@@ -557,13 +576,58 @@ class PlanAuditSpec extends SparkSpec {
         h.expressions.collect { case a: Attribute => a.name } == Seq("band", "band_key")
       case _ => false
     })
-    val shown = exchanges.map(e => s"${e.outputPartitioning} <- ${strip(e.child).nodeName}")
-      .mkString("\n")
-    // unpinned, each of exact's consumers (signature, verify, anti-join —
-    // twice over through decontamination's two reads of near) re-ran the
-    // window shuffle above the pinned scrub, and the LSH chain ran twice
-    assert(exactWindow == 1, s"exact-dedup window exchange ran $exactWindow times:\n$shown")
-    assert(lshBand == 1, s"LSH band exchange ran $lshBand times:\n$shown")
+    // unpinned, each of exact's consumers (signature, verify, the
+    // keeper's anti-join and the contamination scores) re-ran the window
+    // shuffle above the scrub, and the LSH chain ran once per read of
+    // the near-dup survivors
+    assert(exactWindow == 1,
+      s"exact-dedup window exchange ran $exactWindow times:\n${shown(exchanges)}")
+    assert(lshBand == 1, s"LSH band exchange ran $lshBand times:\n${shown(exchanges)}")
+  }
+
+  test("curation run() with a signature or image prior runs no shuffle twice") {
+    import graft.plans.CurationPipeline
+    import graft.operators.Multimodal
+    import spark.implicits._
+    val corpus = twinnedCorpus
+    val ev = docs.select("doc_id", "text").filter(col("doc_id") % 50 === 7)
+    val base = CurationPipeline.Config(evalSet = Some(ev), contaminationK = 5)
+    // the prior corpus: every 7th document, so the prune drops some
+    val prior = docs.select("doc_id", "text").filter(col("doc_id") % 7 === 0)
+    def png(shade: Int): Array[Byte] = {
+      val img = new java.awt.image.BufferedImage(
+        9, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      for (y <- 0 until 8; x <- 0 until 9)
+        img.setRGB(x, y, if ((x * shade + y) % 3 == 0) 0 else 0xffffff)
+      val baos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", baos)
+      baos.toByteArray
+    }
+    val ids = corpus.select("doc_id").as[Long].collect().toSeq
+    val payloads = ids.map(i => (i, png((i % 5).toInt + 1))).toDF("doc_id", "payload")
+    val priorHashes = Multimodal.imageDHash(
+      Seq(Multimodal.MediaRecord(-1L, png(2))).toDS())
+    val configs = Seq(
+      "signature" -> base.copy(priorSignatures = Some(
+        CurationPipeline.signatureIndex(prior, "text", "doc_id", base))),
+      "image" -> base.copy(
+        imageDedup = Some(CurationPipeline.ImageDedup(payloads)),
+        priorBandedImages = Some(
+          Multimodal.bandedMediaIndex(priorHashes, "doc_id", "dhash"))))
+    for ((name, cfg) <- configs) {
+      val exchanges = curationExchanges(corpus, cfg)
+      // two executed exchanges with one canonical plan are one stage run
+      // twice: unpinned, the prior's match and its anti-join each re-ran
+      // the scrub's line-rule shuffles. An exchange straight over a
+      // source scan recomputes nothing upstream and is not counted (the
+      // payload table is shuffled once for the prior probe and once for
+      // the media stage)
+      val twice = exchanges.filter(e => stripCodegen(e.child).children.nonEmpty)
+        .groupBy(_.canonicalized).values.filter(_.size > 1)
+      assert(twice.isEmpty,
+        s"$name prior: ${twice.map(_.head.outputPartitioning).mkString(", ")} " +
+          s"ran more than once:\n${shown(exchanges)}")
+    }
   }
 
   test("curation: the near-dup chain is evaluated once (quality inline, no self-join)") {
