@@ -55,15 +55,16 @@ object CorpusGates {
       round(col("avgdl"), 6).as("avgdl"), col("sum_dl"))
 
   /** The layout generations (`postings-g<id>`, `registry-g<id>`) that
-    * the file scans of `plan`, subqueries included, read: for each scan
-    * root path, the nearest `<name>-g<id>` directory at or above it.
+    * the file scans of `plan` read: for each scan root path, the nearest
+    * `<name>-g<id>` directory at or above it. A `sparkPlan` holds its
+    * scalar subqueries still unplanned, so their scans are not seen.
     * Read off the scan nodes, not the plan string: Spark prints a file
     * location cut at `spark.sql.maxMetadataStringLength` characters, so
     * a long temp dir hides the generation's name. */
   private[graft] def generationsScanned(
     plan: org.apache.spark.sql.execution.SparkPlan
   ): Seq[String] = {
-    val roots = plan.collectWithSubqueries {
+    val roots = plan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location.rootPaths
     }.flatten
     roots.flatMap(p => Iterator.iterate(p)(_.getParent).takeWhile(_ != null)

@@ -60,10 +60,10 @@ import graft.operators.{Contamination, Dedup, Sampling, TextAnalysis}
  *
  * Scale shape is inherited stage by stage — every stage is one of this
  * engine's audited operators; nothing here adds a shuffle of its own.
- * [[curate]] returns the lazy plan; [[run]] executes an action with every
- * frame the action consumes more than once (the exact-dedup survivors,
- * and the others [[stages]] lists) persisted for exactly the action's
- * lifetime, and no frame it consumes once.
+ * [[curate]] returns the lazy plan; [[run]] executes an action with the
+ * frames it reads more than once (the exact-dedup survivors, and the
+ * others [[stages]] lists) persisted for exactly the action's lifetime,
+ * and no frame it reads once.
  */
 object CurationPipeline {
 
@@ -510,9 +510,11 @@ object CurationPipeline {
    * rule: a frame the action consumes more than once is pinned
    * (persisted), and a frame it consumes once is not — the exact-dedup
    * survivors always, and the per-configuration frames [[stages]] lists
-   * — so each stage is evaluated once per action. Every pin is released
-   * when the action returns OR throws, so nothing stays pinned after
-   * run.
+   * — so each stage is evaluated once per action. The exception is the
+   * scrubbed corpus under a prior index, read twice but unpinned because
+   * its two reads share their exchanges ([[stages]] says why). Every pin
+   * is released when the action returns OR throws, so nothing stays
+   * pinned after run.
    */
   def run[T](
     corpus: DataFrame,
@@ -541,8 +543,8 @@ object CurationPipeline {
    *
    * Counter placement is persist-aware: observations sit UNDER the
    * pinned intermediates, so a multiply-consumed stage (exact dedup, the
-   * scrub under a twice-reading prior, the model-gate base, the mix
-   * input) counts once, at materialization — not once per consumer.
+   * model-gate base, the mix input) counts once, at materialization —
+   * not once per consumer.
    *
    * The counters see exactly what the action CONSUMES: a full action
    * (write, count, collect) yields full stage counts, while a
@@ -1294,17 +1296,20 @@ object CurationPipeline {
     * persistence hook, and the rule is: a frame consumed more than once
     * in the action is pinned, and a frame consumed once is not. That
     * covers `exact` (always: the near-dup arms read it several times,
-    * and decontamination scores it), the scrubbed corpus under a
-    * signature, SimHash or media prior (each reads its input twice), the
-    * soft cluster table, each media stage's input, the model-gate base,
-    * the mix input and the leak-safe split input. Under AQE a second
-    * reference to an unpinned frame recomputes it, and an exchange above
-    * a pinned one is not reused across references, so pinning is the
-    * only way such a frame runs once. A pin is not free either: its
-    * cache is built synchronously on the driver thread by its first
-    * `TableCacheQueryStage`, so pins nested in one another serialize.
-    * [[curate]] passes identity and accepts the recompute, as its
-    * laziness note says. */
+    * and decontamination scores it), the soft cluster table, each media
+    * stage's input, the model-gate base, the mix input and the leak-safe
+    * split input. Under AQE a second reference to an unpinned frame
+    * recomputes it, and an exchange above a pinned one is not reused
+    * across references, so pinning is the only way such a frame runs
+    * once. A pin is not free either: its cache is built synchronously on
+    * the driver thread by its first `TableCacheQueryStage`, so pins
+    * nested in one another serialize. The one frame read twice and left
+    * unpinned is the scrubbed corpus under a signature, SimHash or media
+    * prior (the match and the anti-join): both reads are the same
+    * unpinned subtree, so AQE reuses its line-rule exchanges and only the
+    * post-shuffle regroup runs twice, while a pin there would put one
+    * unreusable exchange above it per read. [[curate]] passes identity
+    * and accepts the recompute, as its laziness note says. */
   private def stages(
     scrubbed: DataFrame, textCol: String, cfg: Config,
     corpus: DataFrame, idCol: String,
@@ -1314,18 +1319,11 @@ object CurationPipeline {
   ): DataFrame = {
     def groupLookup(gcols: Seq[String]): DataFrame =
       corpus.select((col(idCol).as("doc_id") +: gcols.map(col)).toIndexedSeq: _*)
-    // the signature (when it prunes), SimHash and media priors each read
-    // their input twice (the match and the anti-join), so the scrub under
-    // them is pinned; otherwise only the exact-dedup window reads it
-    val priorReadsTwice = (!cfg.softDedup && cfg.priorSignatures.nonEmpty) ||
-      cfg.priorSimhashes.nonEmpty || cfg.priorBandedImages.nonEmpty ||
-      cfg.priorBandedVideos.nonEmpty || cfg.priorBandedAudio.nonEmpty
-    val input = if (priorReadsTwice) pin(scrubbed) else scrubbed
     // 2b: incremental prune against a prior corpus's persisted indexes
     // (optional) — runs BEFORE within-batch dedup so the already-seen
     // majority of a re-crawl never reaches the shingle/signature stages
-    val fresh0 = cfg.priorFingerprints.fold(input)(idx =>
-      Dedup.dropExactDuplicatesAgainst(input, idx, textCol, cfg.tokenizer))
+    val fresh0 = cfg.priorFingerprints.fold(scrubbed)(idx =>
+      Dedup.dropExactDuplicatesAgainst(scrubbed, idx, textCol, cfg.tokenizer))
     // softDedup pairs near-twins instead of pruning them, and that
     // promise extends across corpora: the signature prior becomes a
     // PAIRING surface (folded into the soft cluster table at the near
@@ -1541,8 +1539,12 @@ object CurationPipeline {
     // decontaminate(near): near ⊆ exact by doc_id, a doc's text is the
     // same in both, ids are unique after the line rule's regroup, and a
     // doc's score depends only on its own text. The cost is scoring the
-    // near-dup losers too: more gram work, off the critical path, in
-    // place of a second pinned frame
+    // near-dup losers too, in place of a second pinned frame: the extra
+    // gram work grows with the near-dup share, and it is hidden only
+    // while the LSH chain leaves task slots free. On 10k documents and 4
+    // cores, with 5% and with 30% of the exact survivors losing near
+    // dedup, the pass ran faster and its task time rose 7% and 10%; on a
+    // cluster whose every stage is already full, that rise is plain cost
     val clean = cfg.evalSet.fold(near)(ev =>
       observe("after_decontamination",
         near.join(

@@ -259,8 +259,8 @@ class CurationPipelineSpec extends SparkSpec {
     }
   }
 
-  test("run pins only what the action reads twice: the exact survivors " +
-    "under the default config with an eval set, and the scrub under a prior") {
+  test("run pins only the exact survivors under the default config with an " +
+    "eval set, and under a signature prior too") {
     val prose = "the cat is in the hat and it is flat for all of us to see " * 2
     val corpus = (0 until 12).map(i => (i.toLong, s"$prose item ${i % 8}"))
       .toDF("doc_id", "text")
@@ -283,12 +283,13 @@ class CurationPipelineSpec extends SparkSpec {
     assert(names == Seq("graft_curation_after_exact_dedup"), names.mkString("\n---\n"))
     assert(counts("after_decontamination") < counts("after_near_dedup"), counts.toString)
     // a signature prior reads the scrubbed corpus twice (its match and
-    // its anti-join), so the scrub is pinned under it
+    // its anti-join), but the two reads share their exchanges, so the
+    // scrub stays unpinned
     val prior = Seq((500L, "a prior corpus document that matches none of these"))
       .toDF("doc_id", "text")
     val (priorNames, _) = pinned(cfg.copy(
       priorSignatures = Some(CurationPipeline.signatureIndex(prior, "text", "doc_id", cfg))))
-    assert(priorNames == Seq("graft_curation_after_exact_dedup", "graft_curation_scrubbed"),
+    assert(priorNames == Seq("graft_curation_after_exact_dedup"),
       priorNames.mkString("\n---\n"))
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }

@@ -502,14 +502,16 @@ class PlanAuditSpec extends SparkSpec {
     case o => o
   }
 
-  /** Every shuffle one curation `run()` action EXECUTES, under the
-    * shipped `canChangeCachedPlanOutputPartitioning`: the final AQE
-    * plans, their query stages and each persisted frame's cached plan
-    * (walked once, however many scans reference it); a ReusedExchange
-    * executes nothing new. */
+  /** Every shuffle one curation `run()` action EXECUTES, under
+    * `canChangeCachedPlanOutputPartitioning` = `cachedPartitioning`
+    * (`GraftSession` ships true; Spark's default, and a launcher's
+    * override, is false): the final AQE plans, their query stages and
+    * each persisted frame's cached plan (walked once, however many scans
+    * reference it); a ReusedExchange executes nothing new. */
   private def curationExchanges(
     corpus: org.apache.spark.sql.DataFrame,
-    cfg: graft.plans.CurationPipeline.Config
+    cfg: graft.plans.CurationPipeline.Config,
+    cachedPartitioning: Boolean = true
   ): Seq[ShuffleExchangeExec] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -522,7 +524,8 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark, 10000))
     spark.listenerManager.register(listener)
-    try withConf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true") {
+    try withConf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
+        cachedPartitioning.toString) {
       graft.plans.CurationPipeline.run(corpus, "text", "doc_id", cfg)(
         _.write.format("noop").mode("overwrite").save())
       assert(org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark, 10000))
@@ -565,24 +568,29 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
     val ev = docs.select("doc_id", "text").filter(col("doc_id") % 50 === 7)
-    val exchanges = curationExchanges(twinnedCorpus,
-      graft.plans.CurationPipeline.Config(evalSet = Some(ev), contaminationK = 5))
-    val exactWindow = exchanges.count(e => stripCodegen(e.child) match {
-      case w: WindowGroupLimitExec => w.mode == org.apache.spark.sql.execution.window.Partial
-      case _ => false
-    })
-    val lshBand = exchanges.count(_.outputPartitioning match {
-      case h: HashPartitioning =>
-        h.expressions.collect { case a: Attribute => a.name } == Seq("band", "band_key")
-      case _ => false
-    })
-    // unpinned, each of exact's consumers (signature, verify, the
-    // keeper's anti-join and the contamination scores) re-ran the window
-    // shuffle above the scrub, and the LSH chain ran once per read of
-    // the near-dup survivors
-    assert(exactWindow == 1,
-      s"exact-dedup window exchange ran $exactWindow times:\n${shown(exchanges)}")
-    assert(lshBand == 1, s"LSH band exchange ran $lshBand times:\n${shown(exchanges)}")
+    for (cachedPartitioning <- Seq(false, true)) {
+      val exchanges = curationExchanges(twinnedCorpus,
+        graft.plans.CurationPipeline.Config(evalSet = Some(ev), contaminationK = 5),
+        cachedPartitioning)
+      val exactWindow = exchanges.count(e => stripCodegen(e.child) match {
+        case w: WindowGroupLimitExec => w.mode == org.apache.spark.sql.execution.window.Partial
+        case _ => false
+      })
+      val lshBand = exchanges.count(_.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.collect { case a: Attribute => a.name } == Seq("band", "band_key")
+        case _ => false
+      })
+      // unpinned, each of exact's consumers (signature, verify, the
+      // keeper's anti-join and the contamination scores) re-ran the window
+      // shuffle above the scrub, and the LSH chain ran once per read of
+      // the near-dup survivors
+      assert(exactWindow == 1, s"canChangeCachedPlanOutputPartitioning=" +
+        s"$cachedPartitioning: exact-dedup window exchange ran $exactWindow times:\n" +
+        shown(exchanges))
+      assert(lshBand == 1, s"canChangeCachedPlanOutputPartitioning=" +
+        s"$cachedPartitioning: LSH band exchange ran $lshBand times:\n${shown(exchanges)}")
+    }
   }
 
   test("curation run() with a signature or image prior runs no shuffle twice") {
@@ -617,8 +625,9 @@ class PlanAuditSpec extends SparkSpec {
     for ((name, cfg) <- configs) {
       val exchanges = curationExchanges(corpus, cfg)
       // two executed exchanges with one canonical plan are one stage run
-      // twice: unpinned, the prior's match and its anti-join each re-ran
-      // the scrub's line-rule shuffles. An exchange straight over a
+      // twice. The prior's match and its anti-join both read the unpinned
+      // scrub, so this holds only while AQE reuses the scrub's line-rule
+      // exchanges across the two reads. An exchange straight over a
       // source scan recomputes nothing upstream and is not counted (the
       // payload table is shuffled once for the prior probe and once for
       // the media stage)
